@@ -19,6 +19,12 @@ END_TO_END = {
     "peak_rss_mb": "MB",
 }
 
+#: columns of the transcript table, which both listed workloads store
+COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+#: the pushdown operators of a query round (the full decode aside)
+OPERATORS = ("sum", "filter_gt", "filter_range", "filter_eq_string", "filter_prefix_string",
+             "topk", "group_count", "lookup_eq")
+
 #: name → unit of the per-layer metrics (``--trace 1``)
 PER_LAYER = {
     "session.start_s": "s",
@@ -37,13 +43,17 @@ PER_LAYER = {
     "kernel.string.encode_s": "s",
     "kernel.numeric.encode_s": "s",
     "kernel.encode_rows_per_s_1t": "rows/s",
+    **{f"kernel.{c}.{d}_s": "s" for c in COLUMNS for d in ("encode", "decode")},
     "store.enc_bytes": "bytes",
+    **{f"store.{c}.enc_bytes": "bytes" for c in COLUMNS},
     "store.chunks": "count",
     "decode.kernel_s": "s",
     "pushdown.s": "s",
     "pushdown.chunks_total": "count",
     "pushdown.chunks_kept": "count",
     "pushdown.rows_out": "count",
+    **{f"pushdown.{op}_s": "s" for op in OPERATORS},
+    **{f"pushdown.{op}.{k}": "count" for op in OPERATORS for k in ("chunks_kept", "rows_out")},
     "compact.s": "s",
     "compact.parts": "count",
     "compact.chunks_before": "count",
@@ -78,7 +88,7 @@ def end_to_end(run, peak_rss: int) -> dict[str, float]:
 def per_layer(run, probe_s: float) -> dict[str, float]:
     t = run.tracer
     out = dict.fromkeys(PER_LAYER, 0.0)
-    out.update({k: v for k, v in run.layer.items() if k in out})
+    out.update({k: v for k, v in {**run.detail, **run.layer}.items() if k in out})
     out["session.start_s"] = t.duration("session.start")
     out["sources.gen_s"] = t.duration("sources.gen")
     out["learned.fit_s"] = t.duration("learned.fit")
@@ -109,9 +119,9 @@ def per_layer(run, probe_s: float) -> dict[str, float]:
     out["compact.s"] = statistics.median(o["s"] for o in compacts) if compacts else 0.0
     for layer, s in t.self_times().items():
         out[f"self.{layer}_s"] = s
-    prim = [o for o in run.ops if o["ok"] and o["primary"]]
-    out["trace.overhead_rows_per_s"] = _rate([o for o in prim if o["traced"]]) - _rate(
-        [o for o in prim if not o["traced"]]
+    warm = [o for o in run.ops if o["ok"] and o["primary"] and o["seq"] > 0]
+    out["trace.overhead_rows_per_s"] = _rate([o for o in warm if o["traced"]]) - _rate(
+        [o for o in warm if not o["traced"]]
     )
     out["probe.encode_1t_s"] = probe_s
     return out

@@ -26,7 +26,11 @@ ROOT = os.path.dirname(HERE)
 #: the machine shape is pinned here, not in the program: runs at different
 #: core counts are never compared (stored bytes move with the core count)
 MAX_CPUS = 4
-DRIVER_MEM = "3g"
+#: the driver JVM's heap, fixed in size and touched in full at start: a heap
+#: left to grow did so by a GC-timing-dependent 0.1-0.3 GB per run, which
+#: was most of the run-to-run spread of ``peak_rss_mb``. Inputs are a few
+#: MB, so 1g leaves the engine's own memory use to show in that metric.
+DRIVER_MEM = "1g"
 
 
 def pin_environment(work: str) -> int:
@@ -35,7 +39,7 @@ def pin_environment(work: str) -> int:
     local, tmp = os.path.join(work, "spark-local"), os.path.join(work, "tmp")
     os.makedirs(local)
     os.makedirs(tmp)
-    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM} -XX:+AlwaysPreTouch"
     submit = [
         "--conf", f"spark.driver.extraJavaOptions={java_opts}",
         "--conf", "spark.ui.showConsoleProgress=false",
@@ -147,7 +151,8 @@ def _run(args, cpus: int, work: str, t_start: float) -> int:
         peak = rss.peak
     probe_s = None
     if args.trace:
-        # engine-free drift probe: recognises a contended window; not gated
+        # engine-free drift probe: recognises a contended window; not gated.
+        # It costs ~5 s with its input, too much to pay on every timed run.
         from bench_scaling import _probe_work
 
         probe_s = _probe_work(0)

@@ -28,7 +28,7 @@ from queries import Query, attach_expected, lineitem_queries, transcript_queries
 ROWS = {
     "ingest_transcripts": 24_000,
     "ingest_lineitem": 80_000,
-    "scan_transcripts": 40_000,
+    "scan_transcripts": 24_000,
     "append_compact": 8_000,  # per append
 }
 TRANSCRIPT_KEYS = ("conv_id", "turn_idx")
@@ -73,10 +73,13 @@ class Run:
 
     def op(self, kind, span, fn, rows, expected=_UNCHECKED, primary=False, attrs=None,
            query=None):
-        """Run one checked operation. In a traced run, operations of each kind
-        alternate between traced (wrappers installed, spans recorded) and
-        untraced, which is what the tracing-overhead figure compares."""
-        traced = self.tracer.enabled and self._seen[kind] % 2 == 0
+        """Run one checked operation. In a traced run, the workload's own
+        (``primary``) operations of each kind alternate between untraced and
+        traced (wrappers installed, spans recorded), starting untraced; the
+        tracing-overhead figure compares the two, leaving out each kind's
+        first (coldest) operation. Every other operation is traced."""
+        seq = self._seen[kind]
+        traced = self.tracer.enabled and (seq % 2 == 1 or not primary)
         self._seen[kind] += 1
         self.attempted += 1
         self.tracer.op = self.attempted
@@ -96,7 +99,7 @@ class Run:
                 print(f"[perfbench] wrong answer from {kind}: {out!r:.300}", file=sys.stderr)
         self.failed += not ok
         self.ops.append(
-            {"kind": kind, "s": dt, "rows": rows, "traced": traced, "ok": ok,
+            {"kind": kind, "seq": seq, "s": dt, "rows": rows, "traced": traced, "ok": ok,
              "primary": primary, "out": out, "query": query, "span": rec}
         )
         return out if ok else None
@@ -154,7 +157,7 @@ def _fit_and_warm(run: Run, raw, key_cols, store=None) -> dict:
     """Cold fit of the race-pruning regressor, then an untimed encode and
     decode of ``raw`` (an operation's worth of rows) that start every Python
     worker and fault in its buffers. With ``store`` the warm store is kept
-    as the workload's store."""
+    as the workload's store, and the caller warms the readers."""
     from learn_to_compress_spark.jobs import decode_table, encode_table
     from learn_to_compress_spark.learned import var_regressor_params
 
@@ -165,8 +168,6 @@ def _fit_and_warm(run: Run, raw, key_cols, store=None) -> dict:
             m = run.tracer.call(encode_table, raw, store, key_cols=key_cols, resume=False)
         if rec is not None:
             rec["files_written"] = _parquet_files(store)
-        with run.tracer.span("decode.warm"):
-            decode_table(run.spark, store).count()
         return m
     warm = run.path("warm")
     with run.tracer.span("encode.warm"):
@@ -244,21 +245,25 @@ def scan(run: Run) -> None:
     rounds = [transcript_queries(pdf, rng) for _ in range(SCAN_ROUNDS)]
     with run.tracer.span("check.expected"):
         attach_expected(raw, [q for r in rounds for q in r])
-        raw_ck = checksum(raw, list(pdf.columns))
-    # every operator's first call pays its own cold start; one untimed round
-    # keeps that out of the measured rounds
+    # every operator's first call (the full decode's too) pays its own cold
+    # start; one untimed round keeps that out of the measured rounds
     with run.tracer.span("pushdown.warm"):
         for q in rounds[-1]:
             q.run(run.spark, store)
     run.mark_setup_done()
 
+    # one round at least (the warm round above took the cold calls); a
+    # traced run needs three, so that every operator has a traced and an
+    # untraced call after its first
     t0, r = time.perf_counter(), 0
-    while run.loop_open(t0, r, 2):
+    while run.loop_open(t0, r, 3 if run.tracer.enabled else 1):
         for q in rounds[r % SCAN_ROUNDS]:
             _query_op(run, q, store, n, primary=True)
         r += 1
     run.digest(store)
     if run.tracer.enabled:
+        with run.tracer.span("check.expected"):
+            raw_ck = checksum(raw, list(pdf.columns))
         layer_probe(run, store, raw_ck)
         _compact_probe(run, store, raw, keys, raw_ck)
 
@@ -471,6 +476,7 @@ def _compact_probe(run: Run, store, raw, keys, raw_ck) -> None:
     run.op("probe.decode_compacted", "decode",
            lambda: checksum(decode_table(run.spark, store), list(raw.columns)), 0,
            expected=(2 * n, 2 * h))
+    run.digest(store)
 
 
 def _rows_out(out) -> int:
