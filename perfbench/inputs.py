@@ -17,14 +17,14 @@ import pandas as pd
 HASH_SUM_TYPE = "decimal(20,0)"
 
 
-def transcript_rows(seed: int, n_rows: int, conv_lo: int | None = None) -> pd.DataFrame:
+def transcript_rows(seed: int, n_rows: int) -> pd.DataFrame:
     """Exactly ``n_rows`` turns of the synthetic transcript table, taken from
     a seeded contiguous conversation-id range (``conv_turns`` is the same
     per-conversation generator ``transcripts_df`` maps over). The last
     conversation is cut so every seed yields the same row count."""
     from learn_to_compress_spark.sources.transcripts import conv_turns
 
-    lo = conv_lo if conv_lo is not None else int(np.random.default_rng(seed).integers(0, 1 << 20))
+    lo = int(np.random.default_rng(seed).integers(0, 1 << 20))
     frames, total, i = [], 0, lo
     while total < n_rows:
         f = conv_turns(i)
@@ -32,70 +32,6 @@ def transcript_rows(seed: int, n_rows: int, conv_lo: int | None = None) -> pd.Da
         total += len(f)
         i += 1
     return pd.concat(frames, ignore_index=True).iloc[:n_rows].reset_index(drop=True)
-
-
-def lineitem_rows(seed: int, n_rows: int) -> pd.DataFrame:
-    """TPC-H-shaped lineitem rows (the columns and value domains of
-    ``lineitem.parquet``: int64 keys, int32 line numbers, four decimal-valued
-    doubles, a day-granular timestamp and two one-character flags), in
-    random row order like the dbgen output."""
-    rng = np.random.default_rng(seed)
-    lines = rng.integers(1, 8, size=n_rows)
-    n_orders = int(np.searchsorted(np.cumsum(lines), n_rows)) + 1
-    lines = lines[:n_orders]
-    okey0 = int(rng.integers(0, 1 << 24))
-    orderkey = np.repeat(okey0 + np.arange(n_orders, dtype=np.int64), lines)[:n_rows]
-    starts = np.repeat(np.cumsum(lines) - lines, lines)[:n_rows]
-    linenumber = (np.arange(n_rows) - starts + 1).astype(np.int32)
-    partkey = rng.integers(1, 20_001, size=n_rows).astype(np.int64)
-    suppkey = rng.integers(1, 1_001, size=n_rows).astype(np.int64)
-    quantity = rng.integers(1, 51, size=n_rows).astype(np.float64)
-    # dbgen's retail price formula, in cents
-    retail = 90_000 + (partkey // 10) % 20_001 + 100 * (partkey % 1_000)
-    extendedprice = (quantity.astype(np.int64) * retail) / 100.0
-    discount = rng.integers(0, 11, size=n_rows) / 100.0
-    tax = rng.integers(0, 9, size=n_rows) / 100.0
-    returnflag = np.array(["A", "N", "R"])[rng.integers(0, 3, size=n_rows)]
-    linestatus = np.array(["F", "O"])[rng.integers(0, 2, size=n_rows)]
-    shipdate = np.datetime64("1995-01-02", "us") + (
-        rng.integers(0, 2_500, size=n_rows) * 86_400_000_000
-    ).astype("timedelta64[us]")
-    pdf = pd.DataFrame(
-        {
-            "l_orderkey": orderkey,
-            "l_partkey": partkey,
-            "l_suppkey": suppkey,
-            "l_linenumber": linenumber,
-            "l_quantity": quantity,
-            "l_extendedprice": extendedprice,
-            "l_discount": discount,
-            "l_tax": tax,
-            "l_returnflag": returnflag,
-            "l_linestatus": linestatus,
-            "l_shipdate": shipdate,
-        }
-    )
-    return pdf.iloc[rng.permutation(n_rows)].reset_index(drop=True)
-
-
-def lineitem_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType(), False),
-            T.StructField("l_partkey", T.LongType(), False),
-            T.StructField("l_suppkey", T.LongType(), False),
-            T.StructField("l_linenumber", T.IntegerType(), False),
-            T.StructField("l_quantity", T.DoubleType(), False),
-            T.StructField("l_extendedprice", T.DoubleType(), False),
-            T.StructField("l_discount", T.DoubleType(), False),
-            T.StructField("l_tax", T.DoubleType(), False),
-            T.StructField("l_returnflag", T.StringType(), False),
-            T.StructField("l_linestatus", T.StringType(), False),
-            T.StructField("l_shipdate", T.TimestampType(), False),
-        ]
-    )
 
 
 def checksum(df, cols) -> tuple[int, int]:

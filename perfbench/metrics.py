@@ -49,11 +49,9 @@ PER_LAYER = {
     "store.chunks": "count",
     "decode.kernel_s": "s",
     "pushdown.s": "s",
-    "pushdown.chunks_total": "count",
     "pushdown.chunks_kept": "count",
-    "pushdown.rows_out": "count",
     **{f"pushdown.{op}_s": "s" for op in OPERATORS},
-    **{f"pushdown.{op}.{k}": "count" for op in OPERATORS for k in ("chunks_kept", "rows_out")},
+    **{f"pushdown.{op}.chunks_kept": "count" for op in OPERATORS},
     "compact.s": "s",
     "compact.parts": "count",
     "compact.chunks_before": "count",
@@ -75,7 +73,7 @@ def _ok(run, kinds) -> list[dict]:
     return [o for o in run.ops if o["ok"] and o["kind"] in kinds]
 
 
-def end_to_end(run, peak_rss: int) -> dict[str, float]:
+def end_to_end(run, peak_rss: float) -> dict[str, float]:
     prim = [o for o in run.ops if o["ok"] and o["primary"]]
     return {
         "setup_s": run.setup_s,
@@ -127,29 +125,31 @@ def per_layer(run, probe_s: float) -> dict[str, float]:
     return out
 
 
-def workload_figures(run, peak_rss: int) -> dict[str, tuple[float, str, int]]:
+def workload_figures(run, peak_rss: float) -> dict[str, tuple[float, str, int]]:
     """The workload-specific end-to-end figures, ``name → (value, unit,
     samples)``, for those that apply to this run's operations."""
+    from workloads import query_calls
+
     figs: dict[str, tuple[float, str, int]] = {}
     e2e = end_to_end(run, peak_rss)
     figs["setup_s"] = (e2e["setup_s"], "s", 1)
-    for kind, name in (("encode", "encode_rows_per_s"), ("append", "append_rows_per_s"),
-                       ("decode", "decode_rows_per_s")):
-        ops = _ok(run, (kind,))
+    calls = query_calls(run)
+    decodes = _ok(run, ("decode",)) + [
+        {"rows": run.rows_per_call, **c} for c in calls if c["kind"] == "decode"
+    ]
+    for name, ops in (("encode_rows_per_s", _ok(run, ("encode",))),
+                      ("append_rows_per_s", _ok(run, ("append",))),
+                      ("decode_rows_per_s", decodes)):
         if ops:
             figs[name] = (_rate(ops), "rows/s", len(ops))
     if run.ratios:
         figs["compression_ratio"] = (e2e["compression_ratio"], "ratio", len(run.ratios))
-    queries = [o for o in run.ops if o["ok"] and o["query"] is not None]
-    if queries:
-        qs = sorted(o["s"] for o in queries)
+    if calls:
+        qs = sorted(c["s"] for c in calls)
         figs["query_s_p50"] = (statistics.median(qs), "s", len(qs))
         if len(qs) >= 100:  # ten samples beyond the 90th percentile
             figs["query_s_p90"] = (statistics.quantiles(qs, n=10)[-1], "s", len(qs))
         figs["queries_per_s"] = (len(qs) / sum(qs), "1/s", len(qs))
-    appends = _ok(run, ("append",))
-    if appends:
-        figs["append_s_p50"] = (statistics.median(o["s"] for o in appends), "s", len(appends))
     compacts = _ok(run, ("compact",))
     if compacts:
         figs["compact_s"] = (compacts[0]["s"], "s", len(compacts))

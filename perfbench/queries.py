@@ -135,31 +135,6 @@ def transcript_queries(pdf, rng) -> list[Query]:
     return [qs[i] for i in rng.permutation(len(qs))]
 
 
-def lineitem_queries(pdf, rng) -> list[Query]:
-    """The lineitem counterpart of :func:`transcript_queries`."""
-    ship = _i64(pdf["l_shipdate"].to_numpy())
-    okey = pdf["l_orderkey"].to_numpy()
-    lo = float(rng.uniform(0.1, 0.8))
-    qs = [
-        Query("decode", out=tuple(pdf.columns)),
-        Query("sum", "l_orderkey"),
-        Query("filter_gt", "l_shipdate", (int(np.quantile(ship, rng.uniform(0.9, 0.99))),),
-              ("l_orderkey", "l_linenumber", "l_extendedprice")),
-        Query("filter_range", "l_orderkey",
-              (int(np.quantile(okey, lo)), int(np.quantile(okey, lo + 0.05))),
-              ("l_orderkey", "l_linenumber")),
-        Query("filter_eq_string", "l_returnflag", (str(rng.choice(["A", "N", "R"])),),
-              ("l_orderkey", "l_linenumber")),
-        Query("filter_prefix_string", "l_linestatus", ("F",), ("l_orderkey", "l_quantity")),
-        Query("topk", "l_orderkey", (10, "l_linenumber"),
-              ("l_orderkey", "l_linenumber", "l_partkey")),
-        Query("group_count", "l_returnflag"),
-        Query("lookup_eq", "l_orderkey", (int(okey[rng.integers(len(okey))]),),
-              ("l_orderkey", "l_linenumber")),
-    ]
-    return [qs[i] for i in rng.permutation(len(qs))]
-
-
 def zone_survivors(q: Query, meta) -> tuple[int, int]:
     """``(chunks_total, chunks_kept)``: chunks the operator's zone-map
     predicate keeps, evaluated on the chunk metadata (``inputs.store_chunks``

@@ -26,10 +26,11 @@ ROOT = os.path.dirname(HERE)
 #: the machine shape is pinned here, not in the program: runs at different
 #: core counts are never compared (stored bytes move with the core count)
 MAX_CPUS = 4
-#: the driver JVM's heap, fixed in size and touched in full at start: a heap
-#: left to grow did so by a GC-timing-dependent 0.1-0.3 GB per run, which
-#: was most of the run-to-run spread of ``peak_rss_mb``. Inputs are a few
-#: MB, so 1g leaves the engine's own memory use to show in that metric.
+#: the driver JVM's heap, fixed in size and touched in full at start, so its
+#: resident size is its committed size: ``peak_rss_mb`` counts the heap's
+#: peak USED bytes in its place (see ``jvm_heap``). A heap left to grow did
+#: so by a GC-timing-dependent 0.1-0.3 GB per run, which hid the engine's
+#: own memory use in run-to-run noise.
 DRIVER_MEM = "1g"
 
 
@@ -58,6 +59,19 @@ def pin_environment(work: str) -> int:
         }
     )
     return cpus
+
+
+def jvm_heap(spark) -> dict[str, int]:
+    """Bytes of the driver JVM's heap: ``committed``, and per heap memory
+    pool (eden, survivor, old) its peak used size since the JVM started,
+    read from the pools' MX beans through the gateway. In local mode every
+    task runs in this heap."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    out = {"committed": int(mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted())}
+    for pool in mf.getMemoryPoolMXBeans():
+        if pool.getType().name() == "HEAP":
+            out[str(pool.getName())] = int(pool.getPeakUsage().getUsed())
+    return out
 
 
 def stop_spark(spark, wait_s: float = 60.0) -> None:
@@ -135,7 +149,7 @@ def main(argv=None) -> int:
 def _run(args, cpus: int, work: str, t_start: float) -> int:
     from metrics import END_TO_END, PER_LAYER, end_to_end, per_layer, workload_figures
     from spans import RssSampler, Tracer
-    from workloads import WORKLOADS, Run
+    from workloads import WORKLOADS, Run, query_calls
 
     from learn_to_compress_spark.sources.session import get_spark
 
@@ -146,9 +160,13 @@ def _run(args, cpus: int, work: str, t_start: float) -> int:
         try:
             run = Run(spark, cpus, args.seed, args.seconds, tracer, work, t_start)
             WORKLOADS[args.workload](run)
+            heap = jvm_heap(spark)
         finally:
             stop_spark(spark)
-        peak = rss.peak
+        # the pre-touched heap is resident at its committed size all run
+        # long; count its peak use instead, so heap growth shows
+        heap_peak = sum(v for k, v in heap.items() if k != "committed")
+        peak = rss.peak - heap["committed"] + heap_peak
     probe_s = None
     if args.trace:
         # engine-free drift probe: recognises a contended window; not gated.
@@ -157,6 +175,7 @@ def _run(args, cpus: int, work: str, t_start: float) -> int:
 
         probe_s = _probe_work(0)
 
+    calls = query_calls(run)
     figures = workload_figures(run, peak)
     for name, (value, unit, n) in figures.items():
         print(f"{args.workload} {name} = {value:.6g} {unit} (n={n})")
@@ -168,8 +187,12 @@ def _run(args, cpus: int, work: str, t_start: float) -> int:
         "distinct_digests": len(set(run.digests)),
         "distinct_ratios": len(set(run.ratios)),
         "probe_encode_1t_s": probe_s,
+        "rss_peak_mb": round(rss.peak / 2**20, 1),
+        "jvm_heap_mb": {k: round(v / 2**20, 1) for k, v in heap.items()},
         "op_s": {k: [round(o["s"], 4) for o in run.ops if o["kind"] == k]
                  for k in dict.fromkeys(o["kind"] for o in run.ops)},
+        "query_s": {k: [round(c["s"], 4) for c in calls if c["kind"] == k]
+                    for k in dict.fromkeys(c["kind"] for c in calls)},
     }
     if args.trace:
         metrics, units = per_layer(run, probe_s), PER_LAYER

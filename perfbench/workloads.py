@@ -1,4 +1,4 @@
-"""The four workloads and the per-layer numbers derived from a traced run.
+"""The two workloads and the per-layer numbers derived from a traced run.
 
 Every workload is a closed loop: one client in one process issues its next
 call only after the previous one returned. Each call is an *operation* that
@@ -19,20 +19,13 @@ from collections import defaultdict
 
 import numpy as np
 
-from inputs import checksum, lineitem_rows, lineitem_schema, masked_checksums, store_chunks
-from inputs import store_digest, transcript_rows
-from queries import Query, attach_expected, lineitem_queries, transcript_queries, zone_survivors
+from inputs import checksum, store_chunks, store_digest, transcript_rows
+from queries import Query, attach_expected, transcript_queries, zone_survivors
 
-#: rows per workload input; sized so set-up plus one run stays well inside
-#: the per-run budget on a 4-CPU box
-ROWS = {
-    "ingest_transcripts": 24_000,
-    "ingest_lineitem": 80_000,
-    "scan_transcripts": 24_000,
-    "append_compact": 8_000,  # per append
-}
-TRANSCRIPT_KEYS = ("conv_id", "turn_idx")
-LINEITEM_KEYS = ("l_orderkey", "l_linenumber")
+#: transcript turns per workload input; sized so set-up plus one run stays
+#: well inside the per-run budget on a 4-CPU box
+ROWS = 24_000
+KEYS = ("conv_id", "turn_idx")
 #: precomputed query rounds for scan_transcripts; later rounds reuse them
 SCAN_ROUNDS = 3
 
@@ -178,28 +171,25 @@ def _fit_and_warm(run: Run, raw, key_cols, store=None) -> dict:
     return m
 
 
-def _gen_table(run: Run, table: str, n: int):
+def _gen_table(run: Run):
     from learn_to_compress_spark.sources.transcripts import SCHEMA
 
     with run.tracer.span("sources.gen"):
-        if table == "transcripts":
-            pdf, schema, keys = transcript_rows(run.seed, n), SCHEMA, TRANSCRIPT_KEYS
-        else:
-            pdf, schema, keys = lineitem_rows(run.seed, n), lineitem_schema(), LINEITEM_KEYS
-        raw = _materialize(run, pdf, schema, "raw")
-    return pdf, raw, keys
+        pdf = transcript_rows(run.seed, ROWS)
+        raw = _materialize(run, pdf, SCHEMA, "raw")
+    return pdf, raw
 
 
-def ingest(run: Run, table: str) -> None:
+def ingest(run: Run) -> None:
     """Fresh-store salted ``encode_table`` of the whole table, then a
     decode whose checksum must equal the raw input's."""
     from learn_to_compress_spark.jobs import decode_table
 
-    n = ROWS[f"ingest_{table}"]
-    pdf, raw, keys = _gen_table(run, table, n)
+    n = ROWS
+    pdf, raw = _gen_table(run)
     cols = list(pdf.columns)
     run.rows_per_call = n
-    _fit_and_warm(run, raw, keys)
+    _fit_and_warm(run, raw, KEYS)
     with run.tracer.span("check.expected"):
         raw_ck = checksum(raw, cols)
     run.mark_setup_done()
@@ -207,7 +197,7 @@ def ingest(run: Run, table: str) -> None:
     t0, i, prev = time.perf_counter(), 0, None
     while run.loop_open(t0, i, 3):
         store = run.path(f"store{i}")
-        m = run.encode("encode", raw, store, n, keys, primary=True, resume=False)
+        m = run.encode("encode", raw, store, n, KEYS, primary=True, resume=False)
         if m is not None:
             run.ratios.append(m["ratio"])
             run.op("decode", "decode", lambda: checksum(decode_table(run.spark, store), cols),
@@ -217,30 +207,50 @@ def ingest(run: Run, table: str) -> None:
             shutil.rmtree(prev, ignore_errors=True)
         prev, i = store, i + 1
     if run.tracer.enabled:
-        make_queries = transcript_queries if table == "transcripts" else lineitem_queries
-        queries = make_queries(pdf, run.rng(1))
+        queries = transcript_queries(pdf, run.rng(1))
         with run.tracer.span("check.expected"):
             attach_expected(raw, queries)
-        for q in queries:
-            _query_op(run, q, prev, n)
+        _round_op(run, queries, prev, n)
         layer_probe(run, prev, raw_ck)
-        _compact_probe(run, prev, raw, keys, raw_ck)
+        _compact_probe(run, prev, raw, raw_ck)
 
 
-def _query_op(run: Run, q: Query, store: str, n: int, primary=False):
-    span = "decode" if q.kind == "decode" else f"pushdown.{q.kind}"
-    return run.op(q.kind, span, lambda: q.run(run.spark, store), n,
-                  expected=q.expected, primary=primary, query=q)
+def _round_op(run: Run, queries: list[Query], store: str, n: int, primary=False):
+    """One round of queries as ONE operation, timed as a whole so that
+    every operator in it moves the operation's wall. Each answer is checked;
+    each call's own time is kept with the operation as ``q_s``."""
+    times: list[float] = []
+
+    def go():
+        outs = []
+        for q in queries:
+            t = time.perf_counter()
+            with run.tracer.span("decode" if q.kind == "decode" else f"pushdown.{q.kind}"):
+                outs.append(q.run(run.spark, store))
+            times.append(time.perf_counter() - t)
+        return outs
+
+    def check(outs):
+        wrong = [q.kind for q, o in zip(queries, outs) if o != q.expected]
+        if wrong:
+            print(f"[perfbench] wrong answer from {', '.join(wrong)}", file=sys.stderr)
+        return not wrong
+
+    out = run.op("round", "pushdown.round", go, n, expected=check, primary=primary,
+                 query=queries)
+    run.ops[-1]["q_s"] = times
+    return out
 
 
 def scan(run: Run) -> None:
     """One store encoded in set-up, then whole rounds of the nine transcript
-    read operators (seeded order and constants) until the time is up."""
-    n = ROWS["scan_transcripts"]
-    pdf, raw, keys = _gen_table(run, "transcripts", n)
+    read operators (seeded order and constants) until the time is up; the
+    operation is a round."""
+    n = ROWS
+    pdf, raw = _gen_table(run)
     run.rows_per_call = n
     store = run.path("store")
-    run.ratios.append(_fit_and_warm(run, raw, keys, store)["ratio"])
+    run.ratios.append(_fit_and_warm(run, raw, KEYS, store)["ratio"])
     rng = run.rng(1)
     rounds = [transcript_queries(pdf, rng) for _ in range(SCAN_ROUNDS)]
     with run.tracer.span("check.expected"):
@@ -252,98 +262,25 @@ def scan(run: Run) -> None:
             q.run(run.spark, store)
     run.mark_setup_done()
 
-    # one round at least (the warm round above took the cold calls); a
-    # traced run needs three, so that every operator has a traced and an
-    # untraced call after its first
+    # three rounds at least: after the warm round the JIT is still warming,
+    # and the first measured round runs ~20% slower than the ones after it,
+    # so the median of three is a warm round. A traced run then has a
+    # traced and an untraced round after the first.
     t0, r = time.perf_counter(), 0
-    while run.loop_open(t0, r, 3 if run.tracer.enabled else 1):
-        for q in rounds[r % SCAN_ROUNDS]:
-            _query_op(run, q, store, n, primary=True)
+    while run.loop_open(t0, r, 3):
+        _round_op(run, rounds[r % SCAN_ROUNDS], store, n, primary=True)
         r += 1
     run.digest(store)
     if run.tracer.enabled:
         with run.tracer.span("check.expected"):
             raw_ck = checksum(raw, list(pdf.columns))
         layer_probe(run, store, raw_ck)
-        _compact_probe(run, store, raw, keys, raw_ck)
-
-
-def append_compact(run: Run) -> None:
-    """Seeded small appends into one store, each followed by a point query;
-    then ``compact_store`` and a query on the compacted store."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from learn_to_compress_spark.chunkstore import read_lineage
-    from learn_to_compress_spark.jobs.compact import compact_store
-    from learn_to_compress_spark.sources.transcripts import SCHEMA
-
-    b = ROWS["append_compact"]
-    k = max(2, int(run.seconds) // 2)
-    run.rows_per_call = b
-    rng = run.rng(2)
-    with run.tracer.span("sources.gen"):
-        batches, lo = [], int(rng.integers(0, 1 << 20))
-        for _ in range(k):
-            pdf = transcript_rows(run.seed, b, conv_lo=lo)
-            lo = int(pdf["conv_id"].iloc[-1][5:]) + 1
-            batches.append(pdf)
-        batches = [batches[j] for j in rng.permutation(k)]
-        allpdf = pd.concat([p.assign(batch=j) for j, p in enumerate(batches)], ignore_index=True)
-        schema = T.StructType([*SCHEMA.fields, T.StructField("batch", T.IntegerType(), False)])
-        raw_all = _materialize(run, allpdf, schema, "raw")
-    cols = list(batches[0].columns)
-    _fit_and_warm(run, raw_all.filter(F.col("batch") == 0).drop("batch"), TRANSCRIPT_KEYS)
-    # point query after append j: turn_idx == v over the batches so far;
-    # the last one runs on the compacted store over every batch
-    probes = [int(v) for v in rng.integers(0, 32, size=k + 1)]
-    qcols = ["conv_id", "turn_idx", "ts"]
-    bcol, tcol = F.col("batch"), F.col("turn_idx")
-    preds = [((bcol <= j) & (tcol == v), qcols) for j, v in enumerate(probes[:k])]
-    preds += [(tcol == probes[k], qcols), (F.lit(True), cols)]
-    with run.tracer.span("check.expected"):
-        expected = masked_checksums(raw_all, preds)
-    queries = [Query("lookup_eq", "turn_idx", (v,), tuple(qcols), e)
-               for v, e in zip(probes, expected)]
-    full_ck = expected[-1]
-    run.mark_setup_done()
-
-    from learn_to_compress_spark.jobs import decode_table
-
-    store = run.path("store")
-    for j in range(k):
-        batch = raw_all.filter(bcol == j).drop("batch")
-        run.encode("append", batch, store, b, TRANSCRIPT_KEYS, primary=True,
-                   resume=False, run_id=f"append{j:03d}")
-        _query_op(run, queries[j], store, b * (j + 1))
-    run.op("decode", "decode", lambda: checksum(decode_table(run.spark, store), cols),
-           b * k, expected=full_ck)
-    before = store_chunks(run.spark, store, meta=True)[0] if run.tracer.enabled else None
-    if before is not None:
-        _kernel_replay(run, store, before)
-    res = run.op("compact", "compact", lambda: compact_store(run.spark, store), b * k,
-                 expected=lambda r: r["compacted_parts"] > 0)
-    _query_op(run, queries[k], store, b * k)
-    run.op("decode", "decode", lambda: checksum(decode_table(run.spark, store), cols),
-           b * k, expected=full_ck)
-    run.digest(store)
-    stats = read_lineage(run.spark, store).agg(
-        F.sum("enc_bytes").alias("enc"), F.sum("raw_bytes").alias("raw")
-    ).collect()[0]
-    run.ratios.append(stats.enc / stats.raw)
-    if run.tracer.enabled:
-        run.layer["compact.parts"] = float(res["compacted_parts"] if res else 0)
-        run.layer["compact.chunks_before"] = float(before.num_rows)
-        layer_probe(run, store, full_ck, replay=False)
-        run.layer["compact.chunks_after"] = run.layer["store.chunks"]
+        _compact_probe(run, store, raw, raw_ck)
 
 
 WORKLOADS = {
-    "ingest_transcripts": lambda run: ingest(run, "transcripts"),
-    "ingest_lineitem": lambda run: ingest(run, "lineitem"),
+    "ingest_transcripts": ingest,
     "scan_transcripts": scan,
-    "append_compact": append_compact,
 }
 
 
@@ -402,7 +339,7 @@ def _kernel_replay(run: Run, store: str, meta) -> None:
     run.layer["kernel_per_call_s"] = run.layer["kernel.encode_s"] * run.rows_per_call / rows
 
 
-def layer_probe(run: Run, store, full_ck, replay: bool = True) -> None:
+def layer_probe(run: Run, store, full_ck) -> None:
     """Everything a traced run reports beyond its operations' own spans,
     measured on the workload's final store."""
     from pyspark.sql import functions as F
@@ -412,8 +349,7 @@ def layer_probe(run: Run, store, full_ck, replay: bool = True) -> None:
 
     sp = run.spark
     meta, names = store_chunks(sp, store, meta=True)
-    if replay:
-        _kernel_replay(run, store, meta)
+    _kernel_replay(run, store, meta)
     run.layer["store.chunks"] = float(meta.num_rows)
     run.layer["store.enc_bytes"] = 0.0
     for n in names:
@@ -436,30 +372,39 @@ def layer_probe(run: Run, store, full_ck, replay: bool = True) -> None:
     run.layer["chunkstore.scan_s"] = scan_s
     run.layer["decode.kernel_s"] = run.ops[-1]["s"] - scan_s
 
-    # pushdown: every query operation of the run; zone-map survivors for
-    # those that ran on this store
-    qops = [o for o in run.ops if o["query"] is not None and o["kind"] != "decode"]
-    kinds = sorted({o["kind"] for o in qops})
+    # pushdown: every query call of the run; zone-map survivors for the
+    # last call of each operator. Result rows and chunk totals are fixed by
+    # the seed and the store layout, so they go to the details only.
+    calls = [c for c in query_calls(run) if c["kind"] != "decode"]
     agg = defaultdict(list)
-    for kind in kinds:
-        ops = [o for o in qops if o["kind"] == kind]
-        outs = [_rows_out(o["out"]) for o in ops if o["ok"]]
-        run.detail[f"pushdown.{kind}_s"] = statistics.median(o["s"] for o in ops)
-        run.detail[f"pushdown.{kind}.rows_out"] = float(statistics.median(outs)) if outs else 0.0
-        agg["s"].append(run.detail[f"pushdown.{kind}_s"])
-        agg["rows_out"].append(run.detail[f"pushdown.{kind}.rows_out"])
-        last = ops[-1]["query"]
-        tot, kept = zone_survivors(last, meta)
+    for kind in sorted({c["kind"] for c in calls}):
+        mine = [c for c in calls if c["kind"] == kind]
+        run.detail[f"pushdown.{kind}_s"] = statistics.median(c["s"] for c in mine)
+        run.detail[f"pushdown.{kind}.rows_out"] = float(
+            statistics.median(_rows_out(c["out"]) for c in mine)
+        )
+        tot, kept = zone_survivors(mine[-1]["query"], meta)
         run.detail[f"pushdown.{kind}.chunks_total"] = float(tot)
         run.detail[f"pushdown.{kind}.chunks_kept"] = float(kept)
-        agg["chunks_total"].append(tot)
-        agg["chunks_kept"].append(kept)
-    run.layer["pushdown.s"] = statistics.fmean(agg["s"])
-    for key in ("rows_out", "chunks_total", "chunks_kept"):
-        run.layer[f"pushdown.{key}"] = float(statistics.fmean(agg[key]))
+        for key in ("_s", ".rows_out", ".chunks_total", ".chunks_kept"):
+            agg[key].append(run.detail[f"pushdown.{kind}{key}"])
+    run.layer["pushdown.s"] = statistics.fmean(agg["_s"])
+    run.layer["pushdown.chunks_kept"] = statistics.fmean(agg[".chunks_kept"])
+    run.detail["pushdown.rows_out"] = statistics.fmean(agg[".rows_out"])
+    run.detail["pushdown.chunks_total"] = statistics.fmean(agg[".chunks_total"])
 
 
-def _compact_probe(run: Run, store, raw, keys, raw_ck) -> None:
+def query_calls(run: Run) -> list[dict]:
+    """Every query call of the run's checked query rounds, in order:
+    ``{kind, s, out, query}``."""
+    return [
+        {"kind": q.kind, "s": s, "out": out, "query": q}
+        for o in run.ops if o["kind"] == "round" and o["ok"]
+        for q, s, out in zip(o["query"], o["q_s"], o["out"])
+    ]
+
+
+def _compact_probe(run: Run, store, raw, raw_ck) -> None:
     """Append the input to the store once more as a second run, so every
     part holds two runs of under-filled chunks, then ``compact_store`` it;
     the compacted store must decode to the input twice over."""
@@ -467,7 +412,7 @@ def _compact_probe(run: Run, store, raw, keys, raw_ck) -> None:
     from learn_to_compress_spark.jobs.compact import compact_store
 
     n, h = raw_ck
-    run.encode("append", raw, store, n, keys, resume=False, run_id="append")
+    run.encode("append", raw, store, n, KEYS, resume=False, run_id="append")
     run.layer["compact.chunks_before"] = float(store_chunks(run.spark, store)[0].num_rows)
     res = run.op("compact", "compact", lambda: compact_store(run.spark, store), 2 * n,
                  expected=lambda r: r["compacted_parts"] > 0)
