@@ -14,7 +14,7 @@ from spans import LAYERS
 #: name → unit of the end-to-end metrics (``--trace 0``)
 END_TO_END = {
     "setup_s": "s",
-    "op_s_p50": "s",
+    "op_baseline_ratio": "ratio",
     "compression_ratio": "ratio",
     "peak_rss_mb": "MB",
 }
@@ -75,9 +75,13 @@ def _ok(run, kinds) -> list[dict]:
 
 def end_to_end(run, peak_rss: float) -> dict[str, float]:
     prim = [o for o in run.ops if o["ok"] and o["primary"]]
+    op_s = statistics.fmean(o["s"] for o in prim) if prim else 0.0
+    base_s = statistics.fmean(run.baseline_s) if run.baseline_s else 0.0
     return {
         "setup_s": run.setup_s,
-        "op_s_p50": statistics.median(o["s"] for o in prim) if prim else 0.0,
+        # the mean operation wall over the mean wall of the same run's
+        # plain-Spark baseline passes (``workloads._baseline``)
+        "op_baseline_ratio": op_s / base_s if base_s else 0.0,
         "compression_ratio": statistics.median(run.ratios) if run.ratios else 0.0,
         "peak_rss_mb": peak_rss / 2**20,
     }
@@ -133,6 +137,13 @@ def workload_figures(run, peak_rss: float) -> dict[str, tuple[float, str, int]]:
     figs: dict[str, tuple[float, str, int]] = {}
     e2e = end_to_end(run, peak_rss)
     figs["setup_s"] = (e2e["setup_s"], "s", 1)
+    prim = [o for o in run.ops if o["ok"] and o["primary"]]
+    if prim:
+        figs["op_s_p50"] = (statistics.median(o["s"] for o in prim), "s", len(prim))
+        figs["op_s_mean"] = (statistics.fmean(o["s"] for o in prim), "s", len(prim))
+    if run.baseline_s:
+        figs["baseline_s_mean"] = (statistics.fmean(run.baseline_s), "s", len(run.baseline_s))
+    figs["op_baseline_ratio"] = (e2e["op_baseline_ratio"], "ratio", len(prim))
     calls = query_calls(run)
     decodes = _ok(run, ("decode",)) + [
         {"rows": run.rows_per_call, **c} for c in calls if c["kind"] == "decode"

@@ -32,6 +32,12 @@ MAX_CPUS = 4
 #: so by a GC-timing-dependent 0.1-0.3 GB per run, which hid the engine's
 #: own memory use in run-to-run noise.
 DRIVER_MEM = "1g"
+#: the driver JVM compiles with its quick (C1) tier only: with the optimising
+#: tier on, operations kept speeding up for ~30 s of work after the warm-up
+#: (an encode from 3.4 s to 2.0 s), so each run's figure depended on how far
+#: up that slope it got. C1 code is steady after the first warm operation,
+#: at about the same speed there on these small jobs.
+JIT_OPTS = "-XX:TieredStopAtLevel=1"
 
 
 def pin_environment(work: str) -> int:
@@ -40,7 +46,7 @@ def pin_environment(work: str) -> int:
     local, tmp = os.path.join(work, "spark-local"), os.path.join(work, "tmp")
     os.makedirs(local)
     os.makedirs(tmp)
-    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM} -XX:+AlwaysPreTouch"
+    java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM} -XX:+AlwaysPreTouch {JIT_OPTS}"
     submit = [
         "--conf", f"spark.driver.extraJavaOptions={java_opts}",
         "--conf", "spark.ui.showConsoleProgress=false",
@@ -187,6 +193,7 @@ def _run(args, cpus: int, work: str, t_start: float) -> int:
         "distinct_digests": len(set(run.digests)),
         "distinct_ratios": len(set(run.ratios)),
         "probe_encode_1t_s": probe_s,
+        "baseline_s": [round(x, 4) for x in run.baseline_s],
         "rss_peak_mb": round(rss.peak / 2**20, 1),
         "jvm_heap_mb": {k: round(v / 2**20, 1) for k, v in heap.items()},
         "op_s": {k: [round(o["s"], 4) for o in run.ops if o["kind"] == k]

@@ -26,8 +26,9 @@ from queries import Query, attach_expected, transcript_queries, zone_survivors
 #: well inside the per-run budget on a 4-CPU box
 ROWS = 24_000
 KEYS = ("conv_id", "turn_idx")
-#: precomputed query rounds for scan_transcripts; later rounds reuse them
-SCAN_ROUNDS = 3
+#: baseline passes between two measured iterations: a pass is ~0.8 s and
+#: spreads ~10% within a run, so a run's mean takes eight or more of them
+BASELINE_PASSES = 2
 
 _UNCHECKED = object()
 
@@ -44,6 +45,8 @@ class Run:
         self.tracer = tracer
         self.work = work
         self.ops: list[dict] = []
+        self.baseline = None  # the plain-Spark pass (see ``_baseline``)
+        self.baseline_s: list[float] = []
         self.attempted = 0
         self.failed = 0
         self.digests: list[str] = []
@@ -59,6 +62,8 @@ class Run:
         return os.path.join(self.work, name)
 
     def mark_setup_done(self) -> None:
+        with self.tracer.span("check.baseline"):
+            self.baseline()  # its first pass runs cold: not a sample
         self.setup_s = time.perf_counter() - self.t_start
 
     def rng(self, stream: int) -> np.random.Generator:
@@ -120,6 +125,13 @@ class Run:
             self.digests.append(store_digest(tbl, names))
 
     def loop_open(self, t0: float, i: int, min_iters: int) -> bool:
+        """Whether the measured loop goes on; passes of the baseline bracket
+        every measured iteration."""
+        for _ in range(BASELINE_PASSES):
+            with self.tracer.span("check.baseline"):
+                t = time.perf_counter()
+                self.baseline()
+                self.baseline_s.append(time.perf_counter() - t)
         return i < min_iters or time.perf_counter() - t0 < self.seconds
 
 
@@ -177,7 +189,25 @@ def _gen_table(run: Run):
     with run.tracer.span("sources.gen"):
         pdf = transcript_rows(run.seed, ROWS)
         raw = _materialize(run, pdf, SCHEMA, "raw")
+    run.baseline = _baseline(run, raw)
     return pdf, raw
+
+
+def _baseline(run: Run, raw):
+    """The plain-Spark pass of the raw input that a workload's operations
+    are measured against, in the same session: shuffle by key, sort, every
+    Arrow batch through a Python worker and back unchanged, parquet write.
+    It calls no engine code. On a shared host whole runs ran up to 1.5x
+    slower than others, every operation of a run alike; this pass slowed
+    with them, while a pure-CPU probe in the harness process did not."""
+    out = run.path("baseline")
+
+    def passthrough(batches):
+        yield from batches
+
+    df = (raw.repartition(run.cpus, *KEYS).sortWithinPartitions(*KEYS)
+          .mapInArrow(passthrough, raw.schema))
+    return lambda: df.write.mode("overwrite").parquet(out)
 
 
 def ingest(run: Run) -> None:
@@ -243,32 +273,32 @@ def _round_op(run: Run, queries: list[Query], store: str, n: int, primary=False)
 
 
 def scan(run: Run) -> None:
-    """One store encoded in set-up, then whole rounds of the nine transcript
-    read operators (seeded order and constants) until the time is up; the
-    operation is a round."""
+    """One store encoded in set-up, then rounds of the nine transcript read
+    operators (seeded order and constants, the same in every round) until
+    the time is up; the operation is a round."""
     n = ROWS
     pdf, raw = _gen_table(run)
     run.rows_per_call = n
     store = run.path("store")
     run.ratios.append(_fit_and_warm(run, raw, KEYS, store)["ratio"])
-    rng = run.rng(1)
-    rounds = [transcript_queries(pdf, rng) for _ in range(SCAN_ROUNDS)]
+    queries = transcript_queries(pdf, run.rng(1))
     with run.tracer.span("check.expected"):
-        attach_expected(raw, [q for r in rounds for q in r])
+        attach_expected(raw, queries)
     # every operator's first call (the full decode's too) pays its own cold
-    # start; one untimed round keeps that out of the measured rounds
+    # start; one untimed round keeps that out of the measured rounds. When
+    # the measured rounds cycled through new constants, the one that repeated
+    # the warm round's was the run's fastest in 5 of 6 runs, so every round
+    # repeats the seeded round.
     with run.tracer.span("pushdown.warm"):
-        for q in rounds[-1]:
+        for q in queries:
             q.run(run.spark, store)
     run.mark_setup_done()
 
-    # three rounds at least: after the warm round the JIT is still warming,
-    # and the first measured round runs ~20% slower than the ones after it,
-    # so the median of three is a warm round. A traced run then has a
-    # traced and an untraced round after the first.
+    # three rounds at least, so a traced run has a traced and an untraced
+    # round after its first
     t0, r = time.perf_counter(), 0
     while run.loop_open(t0, r, 3):
-        _round_op(run, rounds[r % SCAN_ROUNDS], store, n, primary=True)
+        _round_op(run, queries, store, n, primary=True)
         r += 1
     run.digest(store)
     if run.tracer.enabled:
