@@ -1,4 +1,4 @@
-"""Chunk store + lineage catalog — the Iceberg-style table layer.
+"""Chunk store + lineage manifest — the Iceberg-style table layer.
 
 The reference keeps compressed blocks as in-process ``uint8_t*`` descriptors
 (``experiments/fix_int.cpp:58-79``); our descriptors are rows of a chunk-store
@@ -20,12 +20,20 @@ chunk skipping is a pushable Parquet predicate instead of a broadcast join.
 (cheaper than the reference's closed-form summation,
 ``headers/piecewise_fix_op.h:167-284`` — no payload bytes touched at all).
 
-A **lineage** side table provides Iceberg-like commit semantics in this
+A **lineage manifest** provides Iceberg-like commit semantics in this
 sandbox (no Iceberg jars): a partition's chunks are visible only if a lineage
-row ``(part_id, run_id, metrics...)`` exists. Data files are written before
-lineage, so a killed job leaves orphan chunk rows that readers never see, and
-a resumed job re-encodes only parts without lineage — idempotent, atomic per
-partition. On a real deployment this maps 1:1 to Iceberg table commits + a
+row ``(part_id, run_id, metrics...)`` exists. The manifest is small (one row
+per part per run) and lives on the driver, like Delta Lake's transaction log:
+it is read and written with pyarrow, never by a Spark job. Each commit is
+ONE parquet file, written under a dot-prefixed temp name and renamed into
+place with ``os.replace`` — so a commit is all-or-nothing, and readers
+(which skip dot- and underscore-prefixed names) never see a partial one.
+Data files are written before the manifest file, so a killed job leaves
+orphan chunk rows that readers never see, and a resumed job re-encodes only
+parts without lineage — idempotent, atomic per partition. Readers resolve
+the manifest on the driver into a ``run_id`` partition filter plus a
+pushable ``part_id`` filter (``read_chunks``), so no read plan joins against
+lineage. On a real deployment this maps 1:1 to Iceberg table commits + a
 metrics table; only this module would change.
 """
 
@@ -33,10 +41,17 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
+from functools import reduce
+from operator import or_
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # per-table-column struct. Parquet matches nested fields BY NAME, so the
 # string zone maps appended in v2.1 (zsmin/zsmax) read as null on stores
@@ -93,17 +108,19 @@ def chunk_run_schema(colspecs: list[tuple[str, str]]) -> T.StructType:
     )
 
 
-LINEAGE_SCHEMA = T.StructType(
+#: one lineage row per (part, run): the driver-side manifest's schema
+MANIFEST_SCHEMA = pa.schema(
     [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("n_chunks", T.LongType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("enc_bytes", T.LongType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
+        ("part_id", pa.int32()),
+        ("run_id", pa.string()),
+        ("n_chunks", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("wall_ms", pa.float64()),
     ]
 )
+LINEAGE_SCHEMA = from_arrow_schema(MANIFEST_SCHEMA)
 
 
 def chunks_path(store: str) -> str:
@@ -154,9 +171,10 @@ def snapshot_store(spark: SparkSession, store: str) -> int:
     runs while the snapshot keeps pinning the old ones (``vacuum_store``
     treats snapshot-referenced runs as live; ``drop_snapshot`` is the
     ``expire_snapshots`` analogue that releases them)."""
+    man = read_manifest(store)
     pairs = [
-        [int(r.part_id), r.run_id]
-        for r in committed_parts(spark, store).collect()
+        [p, r]
+        for p, r in zip(man.column("part_id").to_pylist(), man.column("run_id").to_pylist())
     ]
     d = snapshots_dir(store)
     os.makedirs(d, exist_ok=True)
@@ -196,7 +214,91 @@ def load_store_schema(store: str) -> dict:
         return json.load(fh)
 
 
+def read_manifest(store: str, snapshot: int | None = None) -> pa.Table:
+    """The visible lineage rows as an Arrow table, read on the driver.
+
+    Every row is a commit: batch resume never re-encodes a committed part
+    (so at most one batch run per part), while streaming appends commit one
+    run per micro-batch into the same parts. Chunks from a run that died
+    before its manifest file landed have no row here and stay invisible —
+    the Iceberg-style atomicity contract. Rows are unique per
+    ``(part_id, run_id)`` by construction (one row per part per run).
+
+    ``snapshot``: the pinned pair set of that snapshot (time travel). A
+    snapshot records pairs only, so its table has just ``part_id`` and
+    ``run_id``. A missing or empty lineage dir is an empty table."""
+    if snapshot is not None:
+        pairs = snapshot_runs(store, snapshot)
+        return pa.table(
+            {
+                "part_id": pa.array([p for p, _ in pairs], pa.int32()),
+                "run_id": pa.array([r for _, r in pairs], pa.string()),
+            }
+        )
+    path = lineage_current_dir(store)
+    if not os.path.isdir(path):
+        return MANIFEST_SCHEMA.empty_table()
+    # the default ignore prefixes ("." and "_") skip in-flight temp files,
+    # Spark's _SUCCESS markers and .crc sidecars of older stores
+    return ds.dataset(path, schema=MANIFEST_SCHEMA, format="parquet").to_table()
+
+
+def write_manifest(dirpath: str, rows: pa.Table, name: str) -> None:
+    """Atomically add one manifest file ``dirpath/name``: write a
+    dot-prefixed temp file (invisible to every reader), then ``os.replace``
+    it into place — the commit point."""
+    os.makedirs(dirpath, exist_ok=True)
+    final = os.path.join(dirpath, name)
+    tmp = os.path.join(dirpath, f".{name}.tmp")
+    pq.write_table(rows.cast(MANIFEST_SCHEMA), tmp)
+    os.replace(tmp, final)
+
+
+def commit_run(store: str, rows: pa.Table, run_id: str) -> None:
+    """Make ``rows`` (one run's per-part lineage) visible: one new file in
+    the current lineage dir."""
+    write_manifest(
+        lineage_current_dir(store), rows, f"{run_id}-{uuid.uuid4().hex[:8]}.parquet"
+    )
+
+
+def run_manifest_rows(store: str, run_id: str, wall_ms: float) -> pa.Table:
+    """Per-part lineage rows of one run, aggregated on the driver from the
+    run's own chunk files. Only the top-level ``part_id``/``n_rows``/
+    ``raw_bytes``/``enc_bytes`` columns are read, never a payload."""
+    run_dir = os.path.join(chunks_path(store), f"run_id={run_id}")
+    if not os.path.isdir(run_dir):
+        return MANIFEST_SCHEMA.empty_table()
+    chunks = ds.dataset(run_dir, format="parquet").to_table(
+        columns=["part_id", "n_rows", "raw_bytes", "enc_bytes"]
+    )
+    agg = chunks.group_by("part_id").aggregate(
+        [("part_id", "count"), ("n_rows", "sum"), ("raw_bytes", "sum"), ("enc_bytes", "sum")]
+    ).sort_by("part_id")
+    n = agg.num_rows
+    return pa.table(
+        {
+            "part_id": agg.column("part_id"),
+            "run_id": pa.array([run_id] * n, pa.string()),
+            "n_chunks": agg.column("part_id_count"),
+            "n_rows": agg.column("n_rows_sum"),
+            "raw_bytes": agg.column("raw_bytes_sum"),
+            "enc_bytes": agg.column("enc_bytes_sum"),
+            "wall_ms": pa.array([float(wall_ms)] * n, pa.float64()),
+        }
+    ).cast(MANIFEST_SCHEMA)
+
+
+def manifest_totals(rows: pa.Table) -> tuple[int, int, int]:
+    """``(n_rows, raw_bytes, enc_bytes)`` summed over manifest rows."""
+    return tuple(
+        int(sum(rows.column(c).to_pylist())) for c in ("n_rows", "raw_bytes", "enc_bytes")
+    )
+
+
 def read_lineage(spark: SparkSession, store: str) -> DataFrame:
+    """The current manifest as a Spark DataFrame, for SQL over lineage.
+    The engine itself reads the manifest with :func:`read_manifest`."""
     path = lineage_current_dir(store)
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
@@ -204,33 +306,30 @@ def read_lineage(spark: SparkSession, store: str) -> DataFrame:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 
-def committed_parts(
-    spark: SparkSession, store: str, snapshot: int | None = None
-) -> DataFrame:
-    """(part_id, run_id) pairs that are visible.
-
-    Every lineage row is a commit: batch resume never re-encodes a committed
-    part (so at most one batch run per part), while streaming appends commit
-    one run per micro-batch into the same parts. Chunks from a run that died
-    before its lineage write have no pair here and stay invisible — that is
-    the Iceberg-style atomicity contract. Lineage rows are unique per
-    (part_id, run_id) by construction (one commit row per part per run), so
-    no distinct/aggregation is needed — the read path stays shuffle-free.
-
-    ``snapshot``: read the pinned pair set of that snapshot manifest
-    instead of the current lineage (time travel)."""
-    if snapshot is not None:
-        pairs = snapshot_runs(store, snapshot)
-        return spark.createDataFrame(
-            pairs,
-            T.StructType(
-                [
-                    T.StructField("part_id", T.IntegerType(), False),
-                    T.StructField("run_id", T.StringType(), False),
-                ]
-            ),
-        )
-    return read_lineage(spark, store).select("part_id", "run_id")
+def visible_filter(manifest: pa.Table) -> Column:
+    """The manifest's ``(part_id, run_id)`` pairs as one chunk-row
+    predicate: ``run_id IN (…) AND part_id IN (…)``, one term per distinct
+    part set (a batch run, or every micro-batch that touched the same
+    parts, is one term). ``run_id`` is the Hive partition column, so Spark
+    prunes whole run dirs at planning; the ``part_id`` list is a pushable
+    Parquet predicate. An empty manifest matches nothing."""
+    parts_of: dict[str, set[int]] = {}
+    for p, r in zip(manifest.column("part_id").to_pylist(), manifest.column("run_id").to_pylist()):
+        parts_of.setdefault(r, set()).add(int(p))
+    runs_of: dict[frozenset, list[str]] = {}
+    for r in sorted(parts_of):
+        runs_of.setdefault(frozenset(parts_of[r]), []).append(r)
+    if not runs_of:
+        return F.lit(False)
+    terms = [
+        F.col("run_id").isin(runs) & F.col("part_id").isin(sorted(parts))
+        for parts, runs in runs_of.items()
+    ]
+    if len(terms) == 1:
+        return terms[0]
+    # a disjunction mixing data columns is not a partition filter; the
+    # leading run_id list keeps run-dir pruning at planning
+    return F.col("run_id").isin(sorted(parts_of)) & reduce(or_, terms)
 
 
 def read_chunks(
@@ -240,25 +339,24 @@ def read_chunks(
     leaves: list | None = None,
     snapshot: int | None = None,
 ) -> DataFrame:
-    """Visible chunk rows (semi-joined against committed lineage).
+    """Visible chunk rows: the driver resolves the lineage manifest (or the
+    ``snapshot`` manifest) into partition and ``part_id`` filters on the
+    scan (:func:`visible_filter`) — no join, no lineage job.
 
     ``columns`` prunes to the named table columns' structs. ``leaves`` prunes
     harder: a list of Column expressions (nested-leaf selections like
-    ``F.col("c_ts.payload").alias("p_ts")``) applied DIRECTLY on the scan,
-    **before** the lineage semi-join — Spark's nested schema pruning only
-    fires on Project-over-Relation, so selecting leaves after the join would
-    silently read every struct field. With ``leaves``, a payload-free
-    operator (SUM over ``vsum``) reads zero payload bytes from Parquet. The
-    lineage side is broadcast, so no shuffle of chunk rows occurs.
+    ``F.col("c_ts.payload").alias("p_ts")``) applied DIRECTLY on the scan —
+    Spark's nested schema pruning only fires on Project(-over-Filter)-over-
+    Relation. With ``leaves``, a payload-free operator (SUM over ``vsum``)
+    reads zero payload bytes from Parquet.
     """
     doc = load_store_schema(store)
     colspecs = [tuple(cs) for cs in doc["colspecs"]]
     df = spark.read.schema(chunk_run_schema(colspecs)).parquet(chunks_path(store))
+    df = df.filter(visible_filter(read_manifest(store, snapshot)))
     if leaves is not None:
-        df = df.select("part_id", "run_id", *leaves)
-    elif columns is not None:
+        return df.select("part_id", "run_id", *leaves).drop("part_id", "run_id")
+    if columns is not None:
         meta = [f.name for f in _META_FIELDS]
         df = df.select(*meta, "run_id", *[col_field(c) for c in columns])
-    commits = committed_parts(spark, store, snapshot=snapshot)
-    joined = df.join(F.broadcast(commits), ["part_id", "run_id"], "left_semi")
-    return joined.drop("part_id", "run_id") if leaves is not None else joined
+    return df

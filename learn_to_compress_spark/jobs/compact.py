@@ -9,19 +9,22 @@ sweep, ``benchmark/leco_int_benchmark_block.sh``, shows ratio degrading at
 small blocks). ``compact_store`` rewrites fragmented partitions into
 full-size chunks and swaps them in ATOMICALLY:
 
-1. pick victim parts from lineage METADATA only (no payload read);
+1. pick victim parts from the lineage manifest only (no payload read,
+   no Spark job);
 2. decode exactly those parts (parquet row-group skip on ``part_id``) and
    re-encode into a staged run — ``encode_table(commit=False)`` writes chunk
    files that no reader can see;
-3. build the next lineage version = current lineage minus the victims' rows
-   plus the staged run's rows, write it to a fresh ``lineage_v/<N>/`` dir;
+3. build the next lineage version = current manifest minus the victims'
+   rows plus the staged run's rows (aggregated on the driver from the
+   staged files' top-level fields), write it as one file into a fresh
+   ``lineage_v/<N>/`` dir;
 4. ``os.replace`` the pointer file — the single atomic commit point
    (Iceberg's metadata-location CAS). A crash at ANY earlier step leaves the
    store byte-identical for readers; the staged run is an invisible orphan
    that ``vacuum_store`` removes.
 
-Readers need no coordination: visibility is "lineage row exists for
-(part_id, run_id)" (``chunkstore.committed_parts``), and the rewritten rows
+Readers need no coordination: visibility is "manifest row exists for
+(part_id, run_id)" (``chunkstore.read_manifest``), and the rewritten rows
 keep their part ids because partition assignment is a pure function of the
 keys (``jobs/encode.py`` module docstring). Single-writer assumption: a
 concurrent append between steps 3 and 4 would be dropped by the swap —
@@ -32,22 +35,29 @@ optimistic commit would abort one side.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..chunkstore import (
     chunks_path,
     lineage_current_dir,
     lineage_pointer_path,
+    list_snapshots,
     load_store_schema,
-    read_lineage,
+    read_lineage,  # noqa: F401 -- perfbench/spans.py rebinds it here by name
+    read_manifest,
+    run_manifest_rows,
+    snapshot_runs,
+    write_manifest,
 )
 from ..sources.session import DEFAULT_CHUNK_ROWS
 from .decode import decode_table
-from .encode import chunk_schema, encode_table
+from .encode import encode_table
 
 
 def fragmented_parts(
@@ -57,27 +67,26 @@ def fragmented_parts(
     min_fill: float = 0.5,
     min_runs: int = 2,
 ) -> list[int]:
-    """Victim part ids, from lineage metadata only.
+    """Victim part ids, from the lineage manifest only.
 
     A part is fragmented when rewriting would actually help: its visible
     chunks average below ``min_fill`` of a full chunk AND it spans at least
     ``min_runs`` runs (single-run parts are already as compact as their
     input allowed) AND a rewrite would produce fewer chunks."""
-    agg = (
-        read_lineage(spark, store)
-        .groupBy("part_id")
-        .agg(
-            F.sum("n_chunks").alias("chunks"),
-            F.sum("n_rows").alias("rows"),
-            F.countDistinct("run_id").alias("runs"),
-        )
-        .filter(
-            (F.col("runs") >= min_runs)
-            & (F.col("rows") < F.col("chunks") * int(chunk_rows * min_fill))
-            & (F.col("chunks") > F.ceil(F.col("rows") / chunk_rows))
-        )
+    agg = read_manifest(store).group_by("part_id").aggregate(
+        [("n_chunks", "sum"), ("n_rows", "sum"), ("run_id", "count_distinct")]
     )
-    return [int(r.part_id) for r in agg.select("part_id").collect()]
+    fill = int(chunk_rows * min_fill)
+    return sorted(
+        int(p)
+        for p, chunks, rows, runs in zip(
+            agg.column("part_id").to_pylist(),
+            agg.column("n_chunks_sum").to_pylist(),
+            agg.column("n_rows_sum").to_pylist(),
+            agg.column("run_id_count_distinct").to_pylist(),
+        )
+        if runs >= min_runs and rows < chunks * fill and chunks > math.ceil(rows / chunk_rows)
+    )
 
 
 def compact_store(
@@ -120,26 +129,15 @@ def compact_store(
     run_id = staged["run_id"]
 
     # next lineage version: everything minus victims, plus the staged run
-    colspecs = [tuple(cs) for cs in doc["colspecs"]]
-    run_dir = os.path.join(chunks_path(store), f"run_id={run_id}")
-    new_rows = (
-        spark.read.schema(chunk_schema(colspecs))
-        .parquet(run_dir)
-        .groupBy("part_id")
-        .agg(
-            F.lit(run_id).alias("run_id"),
-            F.count("*").alias("n_chunks"),
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.lit(float(staged["wall_ms"])).alias("wall_ms"),
-        )
+    current = read_manifest(store)
+    keep = current.filter(
+        pc.invert(pc.is_in(current.column("part_id"), pa.array(victims, pa.int32())))
     )
-    keep = read_lineage(spark, store).filter(~F.col("part_id").isin(victims))
+    new_rows = run_manifest_rows(store, run_id, staged["wall_ms"])
     # next version = max(existing lineage_v entries) + 1, NOT pointer + 1:
     # a compaction that crashed after writing lineage_v/<N> but before the
     # pointer swap leaves an orphan <N>; deriving from the pointer would
-    # recompute the same N and errorifexists would abort every subsequent
+    # recompute the same N and makedirs would abort every subsequent
     # compaction until a manual vacuum (ADVICE r2)
     vdir = os.path.join(store, "lineage_v")
     ver = 0
@@ -148,7 +146,8 @@ def compact_store(
         if existing:
             ver = max(existing) + 1
     next_dir = os.path.join(store, "lineage_v", f"{ver:010d}")
-    keep.unionByName(new_rows).coalesce(1).write.mode("errorifexists").parquet(next_dir)
+    os.makedirs(next_dir)  # never reuse a version dir
+    write_manifest(next_dir, pa.concat_tables([keep, new_rows]), "manifest.parquet")
 
     # the atomic commit: os.replace of the pointer file
     tmp = lineage_pointer_path(store) + ".tmp"
@@ -175,13 +174,9 @@ def vacuum_store(spark: SparkSession, store: str) -> dict:
     in it is still referenced, so compacting a subset of parts strands the
     rest of their runs until a later compaction picks those parts too (same
     trade as Iceberg file-level expiry with coarse files)."""
-    referenced = {
-        r.run_id for r in read_lineage(spark, store).select("run_id").distinct().collect()
-    }
+    referenced = set(read_manifest(store).column("run_id").to_pylist())
     # snapshots pin their runs (Iceberg: only expire_snapshots releases
     # them) — drop_snapshot first to reclaim a snapshot's bytes
-    from ..chunkstore import list_snapshots, snapshot_runs
-
     for sid in list_snapshots(store):
         referenced |= {run for _p, run in snapshot_runs(store, sid)}
     removed_runs = []
@@ -192,6 +187,10 @@ def vacuum_store(spark: SparkSession, store: str) -> dict:
             removed_runs.append(d.split("=", 1)[1])
     removed_lineage = []
     cur = lineage_current_dir(store)
+    # temp files of manifest commits that died before their os.replace
+    for f in os.listdir(cur) if os.path.isdir(cur) else []:
+        if f.startswith(".") and f.endswith(".tmp"):
+            os.remove(os.path.join(cur, f))
     vroot = os.path.join(store, "lineage_v")
     if os.path.isdir(vroot):
         for d in os.listdir(vroot):

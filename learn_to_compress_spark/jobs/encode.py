@@ -5,11 +5,11 @@ Plan shape (one shuffle, then embarrassingly-parallel map):
 
     input DataFrame
       → part_id = pmod(xxhash64(conv_id, turn_idx // salt_block), P)   [salted]
-      → [resume: anti-filter against committed lineage part_ids]
+      → [resume: anti-filter against the manifest's committed part_ids]
       → repartition(P, part_id)                                        [shuffle]
       → sortWithinPartitions(part_id, *key_cols)                       [stable order]
       → mapInArrow(encode kernel)  — one OUTPUT ROW per column chunk
-      → append Parquet chunk files, then append lineage rows           [commit]
+      → append Parquet chunk files, then one manifest file (driver)    [commit]
 
 The salt splits a long conversation into ``salt_block``-turn ranges so a
 hot conversation cannot hot-spot one partition (north_star skew clause);
@@ -38,8 +38,11 @@ from ..chunkstore import (
     chunk_schema,
     chunks_path,
     col_field,
-    lineage_current_dir,
-    read_lineage,
+    commit_run,
+    manifest_totals,
+    read_lineage,  # noqa: F401 -- perfbench/spans.py rebinds it here by name
+    read_manifest,
+    run_manifest_rows,
     schema_path,
 )
 from ..sources.session import DEFAULT_CHUNK_ROWS
@@ -768,31 +771,23 @@ def encode_table(
         work = df.withColumn("_part_id", part_col)
 
     if resume:
-        done = [r.part_id for r in read_lineage(spark, store).select("part_id").distinct().collect()]
+        committed = read_manifest(store)
+        done = sorted(set(committed.column("part_id").to_pylist()))
         if done and set(done) >= set(range(num_parts)):
             # resume no-op fast path: every commit unit is already visible,
             # so the encode job would ship an empty plan — answer from the
-            # lineage metadata instead (repeated reads through a cached
-            # store pay one tiny metadata scan, not a full Spark job)
+            # manifest instead (no Spark job at all)
             if restore_conf:
                 for key, val in restore_conf.items():
                     spark.conf.set(key, val)
-            stats = (
-                read_lineage(spark, store)
-                .agg(
-                    F.sum("n_rows").alias("rows"),
-                    F.sum("raw_bytes").alias("raw"),
-                    F.sum("enc_bytes").alias("enc"),
-                )
-                .collect()[0]
-            )
+            rows, raw, enc = manifest_totals(committed)
             return {
                 "run_id": None,
                 "wall_ms": 0.0,
-                "rows": stats.rows,
-                "raw_bytes": stats.raw,
-                "enc_bytes": stats.enc,
-                "ratio": (stats.enc / stats.raw) if stats.raw else None,
+                "rows": rows,
+                "raw_bytes": raw,
+                "enc_bytes": enc,
+                "ratio": (enc / raw) if raw else None,
                 "chunk_rows": chunk_rows,
                 "resumed_noop": True,
             }
@@ -839,7 +834,7 @@ def encode_table(
             )
         )
     # per-run partition directory (Hive-style): readers discover ``run_id``
-    # as a partition column, the lineage metrics job lists ONLY this run's
+    # as a partition column, the commit's metrics pass lists ONLY this run's
     # files (at 10^12 rows a metrics pass must not scan the whole store),
     # and a killed run's orphans are one directory. Uncompressed parquet:
     # payloads are already entropy-coded, so snappy on top costs CPU at
@@ -853,56 +848,35 @@ def encode_table(
                 spark.conf.set(key, val)
     wall_ms = (time.monotonic() - t0) * 1000
 
-    # lineage commit: aggregate this run's chunk rows into per-part metrics —
-    # a metadata-only scan (n_rows/raw/enc are top-level fields; nested
-    # schema pruning keeps payload bytes unread)
-    mine = spark.read.schema(chunk_schema(colspecs)).parquet(run_dir)
-    lineage = mine.groupBy("part_id").agg(
-        F.lit(run_id).alias("run_id"),
-        F.count("*").alias("n_chunks"),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.lit(float(wall_ms)).alias("wall_ms"),
-    )
+    # lineage commit, on the driver: per-part metrics from the run's own
+    # files (top-level fields only), then one atomic manifest file
+    mine = run_manifest_rows(store, run_id, wall_ms)
     if not commit:
         # staged run (compaction rewrite): chunk files exist but are
         # INVISIBLE — the caller swaps them in atomically via the lineage
         # pointer. A crash leaves an orphan run dir for vacuum_store.
-        st = lineage.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        ).collect()[0]
+        rows, raw, enc = manifest_totals(mine)
         return {
             "run_id": run_id,
             "wall_ms": wall_ms,
-            "rows": st.rows or 0,
-            "raw_bytes": st.raw,
-            "enc_bytes": st.enc,
-            "ratio": (st.enc / st.raw) if st.raw else None,
+            "rows": rows,
+            "raw_bytes": raw,
+            "enc_bytes": enc,
+            "ratio": (enc / raw) if raw else None,
             "committed": False,
             "chunk_rows": chunk_rows,
             **({"tune_sizes": tune_sizes} if tune_sizes else {}),
         }
-    lineage.write.mode("append").parquet(lineage_current_dir(store))
+    commit_run(store, mine, run_id)
 
-    stats = (
-        read_lineage(spark, store)
-        .agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        )
-        .collect()[0]
-    )
+    rows, raw, enc = manifest_totals(read_manifest(store))
     return {
         "run_id": run_id,
         "wall_ms": wall_ms,
-        "rows": stats.rows,
-        "raw_bytes": stats.raw,
-        "enc_bytes": stats.enc,
-        "ratio": (stats.enc / stats.raw) if stats.raw else None,
+        "rows": rows,
+        "raw_bytes": raw,
+        "enc_bytes": enc,
+        "ratio": (enc / raw) if raw else None,
         "chunk_rows": chunk_rows,
         **({"tune_sizes": tune_sizes} if tune_sizes else {}),
     }

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..chunkstore import col_field, read_chunks, read_lineage
+from ..chunkstore import col_field, manifest_totals, read_chunks, read_manifest
 from ..jobs.decode import _SPARK_OF_LOGICAL, _pa_of_logical, decode_column_arrow, load_schema
 from ..select import (
     column_filter_gt,
@@ -34,10 +34,10 @@ _INT_LOGICALS = ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
 
 
 def count_rows(spark: SparkSession, store: str) -> int:
-    """COUNT(*) straight from lineage metadata — no payload touched
-    (the reference's COUNT is trivially ``n_rows`` per chunk header)."""
-    row = read_lineage(spark, store).agg(F.sum("n_rows").alias("n")).collect()[0]
-    return int(row.n or 0)
+    """COUNT(*) straight from the lineage manifest on the driver — no
+    payload touched, no Spark job (the reference's COUNT is trivially
+    ``n_rows`` per chunk header)."""
+    return manifest_totals(read_manifest(store))[0]
 
 
 def sum_column(spark: SparkSession, store: str, column: str) -> DataFrame:
@@ -485,57 +485,55 @@ def topk_table(
     post-decode sort+limit to a compressed-domain plan).
 
     Two phases:
-    1. **Metadata-only bound**: one tiny scan of ``(zmin, n_rows)`` per
-       chunk. Sorting chunks by ``zmin`` DESC and accumulating ``n_rows``
-       until ≥ k proves at least k values ≥ the last included ``zmin`` —
-       a sound global threshold T, so the main scan pushes ``zmax >= T``
-       to Parquet and chunks that cannot reach the top-k never leave
-       storage (for a clustered column that is all but O(1) chunks).
+    1. **Metadata-only bound**: one tiny scan of ``(zmin, nvalid)`` per
+       chunk, collected to the driver. Sorting chunks by ``zmin`` DESC and
+       accumulating ``nvalid`` until ≥ k proves at least k values ≥ the
+       last included ``zmin`` — a sound global threshold T, so the main
+       scan pushes ``zmax >= T`` to Parquet and chunks that cannot reach
+       the top-k never leave storage (for a clustered column that is all
+       but O(1) chunks).
     2. **Per-chunk local top-k**: surviving chunks decode the key (+ the
        unique ``tiebreak`` for determinism), lexsort descending, and emit
        only their k best rows. The union is ≤ k·chunks rows, so the final
        global ``orderBy().limit(k)`` shuffles a few kilobytes — never the
        table.
+
+    NULL keys sort last (DESC NULLS LAST): when the store holds fewer than
+    k non-null keys, the result is padded with null-key rows, as the SQL
+    pads it.
     """
     k = int(k)
-    colspecs, _ = load_schema(store)
-    logical = dict(colspecs)[column]
-    from pyspark.sql import Window
-
     meta = read_chunks(
         spark,
         store,
         leaves=[
             F.col(f"{col_field(column)}.zmin").alias("zmin"),
             # the bound must count NON-NULL values (nulls sort last under
-            # DESC and can never be top-k); pre-v2.2 stores have no nvalid
-            # leaf — count those chunks as 0, which only lowers the
-            # threshold (less pruning, still sound), degenerating to no
-            # pruning when every chunk is old
-            F.coalesce(
-                F.col(f"{col_field(column)}.nvalid"), F.lit(0)
-            ).alias("n_rows"),
+            # DESC); pre-v2.2 stores have no nvalid leaf — count those
+            # chunks as 0, which only lowers the threshold (less pruning,
+            # still sound), degenerating to no pruning when every chunk is
+            # old
+            F.coalesce(F.col(f"{col_field(column)}.nvalid"), F.lit(0)).alias("nvalid"),
         ],
-    ).where(F.col("zmin").isNotNull())
+    ).where(F.col("zmin").isNotNull()).toArrow()
     # running non-null count down the zmin-DESC order; the first zmin whose
-    # cumulative count reaches k is the bound — a metadata-only job over
-    # chunk rows (1/chunk_rows of the table, the Iceberg-planning scale),
-    # returning ONE row to the driver
-    w = Window.orderBy(F.col("zmin").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    row = (
-        meta.withColumn("cum", F.sum("n_rows").over(w))
-        .where(F.col("cum") >= k)
-        .orderBy(F.col("zmin").desc())
-        .select("zmin")
-        .first()
-    )
-    thresh = int(row[0]) if row is not None else None
+    # cumulative count reaches k is the bound. One row per chunk (1/chunk_rows
+    # of the table, the Iceberg-planning scale), summed on the driver — no
+    # single-partition window exchange
+    zmin = meta.column("zmin").to_numpy()
+    # ties in zmin cannot move the bound, so their order is free
+    order = np.argsort(zmin, kind="stable")[::-1]
+    zmin = zmin[order]
+    cum = np.cumsum(meta.column("nvalid").to_numpy()[order])
+    hit = np.flatnonzero(cum >= k)
+    thresh = int(zmin[hit[0]]) if hit.size else None
     prune = None
     if thresh is not None:
         zmax = F.col("_zmax0")
         prune = zmax.isNull() | (zmax >= F.lit(thresh))
+    # fewer than k non-null keys (or an unknown count): the SQL pads with
+    # null-key rows, so they stay candidates, ranked below every value
+    pad = thresh is None
 
     from ..select import column_decode_i64
 
@@ -544,23 +542,26 @@ def topk_table(
         # exactly like the SQL (a dropped local row tied on `column` but
         # higher on `tiebreak` would otherwise beat an emitted one).
         # Nulls: column_decode_i64 returns (dense values at non-null
-        # slots, validity) — null KEY rows are excluded outright (DESC
-        # NULLS LAST can never put them in the top-k while any non-null
-        # candidate remains), null TIEBREAKS sort as -inf (NULLS LAST
-        # within equal keys), matching the SQL.
+        # slots, validity). Null KEY rows rank below every value (DESC
+        # NULLS LAST) and are candidates only when padding; null TIEBREAKS
+        # sort as -inf (NULLS LAST within equal keys), matching the SQL.
         a, va = column_decode_i64(
             bytes(payloads[0]), n, logicals[0], companion=companions[0]
         )
-        apos = np.flatnonzero(va) if va is not None else np.arange(n, dtype=np.int64)
         b, vb = column_decode_i64(
             bytes(payloads[1]), n, logicals[1], companion=companions[1]
         )
         bfull = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
         bfull[np.flatnonzero(vb) if vb is not None else slice(None)] = b
-        # ascending lexsort, take the tail — avoids negating int64 min
-        # (NaT / sentinel), which is its own negation and would sort FIRST
-        order = np.lexsort((bfull[apos], a))[-max(k, 1):]
-        return np.sort(apos[order])
+        valid = np.ones(n, dtype=bool) if va is None else np.asarray(va, dtype=bool)
+        akey = np.zeros(n, dtype=np.int64)
+        akey[valid] = a
+        cand = np.arange(n, dtype=np.int64) if pad else np.flatnonzero(valid)
+        # ascending lexsort (validity, then key, then tiebreak), take the
+        # tail — avoids negating int64 min (NaT / sentinel), which is its
+        # own negation and would sort FIRST
+        order = np.lexsort((bfull[cand], akey[cand], valid[cand]))[-max(k, 1):]
+        return np.sort(cand[order])
 
     df = _gather_table(spark, store, [column, tiebreak], out_cols, pos_fn, prune)
     return df.orderBy(F.col(column).desc(), F.col(tiebreak).desc()).limit(k)

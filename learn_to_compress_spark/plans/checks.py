@@ -26,12 +26,21 @@ def explain_text(df: DataFrame) -> str:
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
+    """Each pushed predicate, split at the list's top-level commas only
+    (``In(part_id, [0,1])`` is one predicate)."""
     text = explain_text(df)
     out = []
-    for m in re.finditer(r"PushedFilters: \[(.*?)\]", text):
-        body = m.group(1).strip()
-        if body:
-            out.extend(p.strip() for p in body.split(","))
+    for line in re.findall(r"PushedFilters: \[(.*)\]", text):
+        depth, cur = 0, ""
+        for ch in line:
+            if ch == "," and depth == 0:
+                out.append(cur.strip())
+                cur = ""
+                continue
+            depth += (ch in "([") - (ch in ")]")
+            cur += ch
+        if cur.strip():
+            out.append(cur.strip())
     return out
 
 

@@ -7,16 +7,15 @@ micro-batch, committing one lineage run per batch.
 
 Exactly-once: the run id is derived from the batch id, and a replayed batch
 (after a failure between the data write and the checkpoint commit) is
-detected in lineage and skipped — together with the data-before-lineage
+detected in the lineage manifest and skipped — together with the data-before-lineage
 write order this makes ingestion idempotent end-to-end.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..chunkstore import read_lineage
+from ..chunkstore import read_manifest
 from ..jobs.encode import encode_table
 from ..sources.session import DEFAULT_CHUNK_ROWS
 
@@ -36,19 +35,12 @@ def encode_stream(
     and stops (the batch-ingest shape); pass False for a continuous
     micro-batch trigger.
     """
-    spark = stream_df.sparkSession
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         run_id = f"stream-{batch_id:010d}"
-        already = (
-            read_lineage(spark, store)
-            .filter(F.col("run_id") == run_id)
-            .limit(1)
-            .count()
-        )
-        if already:
+        if run_id in read_manifest(store).column("run_id").to_pylist():
             return  # replayed batch after a mid-commit failure: idempotent skip
         encode_table(
             batch_df,

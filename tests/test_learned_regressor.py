@@ -89,7 +89,7 @@ def test_pruned_selection_still_roundtrips(installed_model):
         assert (out.to_numpy(dtype=np.int64) == b).all(), name
 
 
-def test_regressor_params_roundtrip():
+def test_regressor_params_roundtrip(installed_model):
     p = learned.var_regressor_params()
     t = learned.CartRegressor.from_params(p)
     rng = np.random.default_rng(3)

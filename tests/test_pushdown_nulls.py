@@ -123,3 +123,23 @@ def test_topk_nullable_timestamp_key(spark, tmp_path):
     got = df.toPandas()
     assert got["turn_idx"].tolist() == exp["turn_idx"].tolist()
     assert got["ts"].notna().all()
+
+
+def test_topk_pads_with_null_keys_like_sql(spark, tmp_path):
+    """k above the non-null key count: ORDER BY a DESC, turn_idx DESC
+    LIMIT k puts the non-null keys first, then pads with null-key rows
+    (DESC is NULLS LAST) in tiebreak order. Whole chunks are null-keyed."""
+    rows = [
+        (f"c{i % 4}", i, (i * 7) if i % 50 == 0 else None, i * 11)
+        for i in range(300)
+    ]
+    store = _store(spark, tmp_path, "null_topk_pad", rows)
+    raw = spark.createDataFrame(rows, schema=_SCHEMA)
+    for k in (6, 20, 400):
+        got = topk_table(spark, store, "a", k, ["conv_id", "turn_idx", "a", "b"], "turn_idx")
+        exp = raw.orderBy(F.col("a").desc(), F.col("turn_idx").desc()).limit(k)
+        cols = ["conv_id", "turn_idx", "a", "b"]
+        got_rows = [tuple(r) for r in got.select(*cols).collect()]
+        exp_rows = [tuple(r) for r in exp.select(*cols).collect()]
+        assert got_rows == exp_rows, k
+        assert len(got_rows) == min(k, len(rows))
