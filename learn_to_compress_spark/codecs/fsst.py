@@ -22,6 +22,12 @@ compressed spans). Decoding the concatenation equals concatenating per-row
 decodes because the code stream is stateless (escape pairs are local), so
 full decode stays one pass.
 
+A codec race only needs to know whether FSST beats a size, not FSST's
+bytes: :func:`compress_rows` takes an optional byte ``cap`` and gives up
+(returns ``None``) as soon as the code bytes it has emitted reach it.
+Without a cap, or when the output stays under it, the result is the same
+as an uncapped call.
+
 Serialized symbol table: ``n_sym:u8 | (len:u8, bytes)*``.
 """
 
@@ -155,15 +161,23 @@ class _Matcher:
 _STRAGGLERS = 48
 
 
-def _finish_row(mt: _Matcher, bp: np.ndarray, start: int, end: int):
-    """Token positions + codes for one row's remaining span [start, end)."""
+def _finish_row(mt: _Matcher, bp: np.ndarray, start: int, end: int, budget):
+    """Token positions + codes for one row's remaining span [start, end),
+    or ``None`` once the row's emitted bytes (1 per symbol, 2 per escape)
+    reach ``budget``."""
     span = np.arange(start, end, dtype=np.int64)
     ln, code = mt.longest(bp, span, end - span)
+    ln, code = ln.tolist(), code.tolist()
     pos_out, code_out = [], []
+    used = 0
     i = start
     while i < end:
+        c = code[i - start]
         pos_out.append(i)
-        code_out.append(code[i - start])
+        code_out.append(c)
+        used += 1 if c >= 0 else 2
+        if used >= budget:
+            return None
         i += ln[i - start]
     return (
         np.array(pos_out, dtype=np.int64),
@@ -171,10 +185,16 @@ def _finish_row(mt: _Matcher, bp: np.ndarray, start: int, end: int):
     )
 
 
-def compress_rows(blob: bytes, ends: np.ndarray, symbols: list[bytes]):
+def compress_rows(blob: bytes, ends: np.ndarray, symbols: list[bytes], cap=None):
     """Compress each row's span independently → (compressed blob,
     compressed-domain ends). Matches never span row boundaries, so any row
     can be decoded from its compressed span alone.
+
+    ``cap`` bounds the compressed blob: the walk keeps a running count of
+    emitted bytes (1 per symbol code, 2 per escape) in both the vectorized
+    iterations and the straggler finisher, and returns ``None`` as soon as
+    the count reaches ``cap`` — the blob would be at least ``cap`` bytes.
+    Otherwise the result is byte-identical to the uncapped call.
 
     Fully vectorized greedy longest-match — NO per-row or per-match Python
     (the round-2 per-row ``pat.sub`` loop was the encode-throughput
@@ -201,6 +221,9 @@ def compress_rows(blob: bytes, ends: np.ndarray, symbols: list[bytes]):
     ends = np.asarray(ends, dtype=np.int64)
     n_rows = ends.size
     nbytes = len(blob)
+    budget = np.inf if cap is None else cap
+    if budget <= 0:
+        return None
     if nbytes == 0 or n_rows == 0:
         return b"", np.zeros(n_rows, dtype=np.int64)
     b = np.frombuffer(blob, dtype=np.uint8)
@@ -220,14 +243,22 @@ def compress_rows(blob: bytes, ends: np.ndarray, symbols: list[bytes]):
     counts = np.zeros(n_rows, dtype=np.int64)  # tokens per row
     chunks: list[tuple[np.ndarray, np.ndarray, np.ndarray, int]] = []
     k = 0
+    used = 0  # compressed bytes emitted so far
     while cur.size:
         if cur.size < _STRAGGLERS:
             for c, r, e in zip(cur, rid, rend):
-                p, kk = _finish_row(mt, bp, int(c), int(e))
+                row = _finish_row(mt, bp, int(c), int(e), budget - used)
+                if row is None:
+                    return None
+                p, kk = row
+                used += p.size + int(np.count_nonzero(kk < 0))
                 chunks.append((p, np.full(1, r, dtype=np.int64), kk, k))
                 counts[r] += p.size
             break
         ln, code = mt.longest(bp, cur, rend - cur)
+        used += cur.size + int(np.count_nonzero(code < 0))
+        if used >= budget:
+            return None
         chunks.append((cur, rid, code, k))
         counts[rid] += 1  # rid is unique per iteration: plain fancy add
         k += 1

@@ -112,19 +112,30 @@ class FsstStringCodec:
 
     name = "fsst"
 
-    def encode(self, strs) -> bytes:
+    def encode(self, strs, cap=None) -> bytes | None:
+        """The payload, or ``None`` when it is not shorter than ``cap``.
+
+        A capped call first checks a lower bound that needs no training:
+        offsets sub-block + symbol-count byte + comp-ends header (9) +
+        ⌈blob/8⌉ (a code byte covers at most 8 input bytes; an escape
+        spends 2 on 1). Past that, the remaining budget caps the greedy
+        parse, which gives up as soon as it reaches it."""
         arr = _as_binary_array(strs)
         blob, ends = _blob_and_ends(arr)
+        offsets = _encode_ints_best(ends)
+        if cap is not None and len(offsets) + 1 + 9 + -(-len(blob) // 8) >= cap:
+            return None
         symbols = fsst_mod.train(blob)
-        comp, comp_ends = fsst_mod.compress_rows(blob, ends, symbols)
-        return b"".join(
-            [
-                _encode_ints_best(ends),
-                fsst_mod.serialize_table(symbols),
-                _encode_ints_best(comp_ends.astype(np.uint64)),
-                comp,
-            ]
+        symtab = fsst_mod.serialize_table(symbols)
+        budget = None if cap is None else cap - len(offsets) - len(symtab) - 9
+        res = fsst_mod.compress_rows(blob, ends, symbols, budget)
+        if res is None:
+            return None
+        comp, comp_ends = res
+        payload = b"".join(
+            [offsets, symtab, _encode_ints_best(comp_ends.astype(np.uint64)), comp]
         )
+        return None if cap is not None and len(payload) >= cap else payload
 
     def _parts(self, payload: bytes, n: int):
         ends_u, off = _decode_ints_best(payload, 0, n)

@@ -72,9 +72,10 @@ def _plan_wide(arr: pa.Array):
     bits = padded * np.log2(K)
     # blocks whose suffixes fit 63 bits are ALSO handled here (the wide
     # Horner/serializer is width-agnostic): the auto-selection race never
-    # offers them (``_pick_string_codec`` prefers the uint64 rung when it is
-    # eligible), but ``selection="force:leco_str_wide"`` must be able to pin
-    # the wide rung on any subset-alphabet block
+    # offers them (``select._pick_string_codec`` races only the first
+    # eligible rung: uint64, then wide, then outlier), but
+    # ``selection="force:leco_str_wide"`` must be able to pin the wide rung
+    # on any subset-alphabet block
     if bits > MAX_BITS:
         return None
     if padded * np.log2(257) <= MAX_BITS:

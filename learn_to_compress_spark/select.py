@@ -55,7 +55,7 @@ STRING_CODEC_IDS = {
 }
 STRING_CODEC_NAMES = {v: k for k, v in STRING_CODEC_IDS.items()}
 
-STR_SAMPLE_ROWS = 512  # strings keep sampling: FSST size has no closed form
+STR_SAMPLE_ROWS = 512  # strings race on a sample: sizes come from real encodes
 
 
 def _sample_slices(n: int, want: int, parts: int = 4) -> np.ndarray:
@@ -489,7 +489,20 @@ def decode_int_column(payload: bytes, n: int, logical: str, companion=None):
     return pd.Series(out)
 
 
-def _pick_string_codec(arr) -> str:
+def _pick_string_codec(arr) -> tuple[str, bytes | None]:
+    """Race the string codecs on the chunk (or, past 2048 rows, on a
+    ``STR_SAMPLE_ROWS`` sample) → ``(winner, payload)``.
+
+    The winner is the first smallest encode in candidate-list order.
+    ``payload`` is the winner's encode of the full chunk when the race ran
+    on it, else ``None`` (the caller encodes the winner once).
+
+    FSST is raced last with a cap: it wins only if strictly smaller than
+    every candidate listed before it and no larger than every one listed
+    after it, i.e. smaller than ``min(earlier sizes, later sizes + 1)``.
+    ``FsstStringCodec.encode`` returns ``None`` — often before finishing,
+    or even training — exactly when it does not get under that cap, so the
+    winner is the one a full FSST encode would give."""
     import pyarrow as pa
 
     cands = [DictStringCodec(), WordDictCodec(), FsstStringCodec(), StrRawCodec()]
@@ -513,25 +526,36 @@ def _pick_string_codec(arr) -> str:
             if LecoStringOutlierCodec.eligible(arr):
                 cands.append(LecoStringOutlierCodec())
     n = len(arr)
-    if n <= 2048:
-        sizes = {c.name: len(c.encode(arr)) for c in cands}
+    full = n <= 2048
+    if full:
+        race = arr
     else:
-        pos = _sample_slices(n, STR_SAMPLE_ROWS)
         import pyarrow.compute as pc
 
-        sample = pc.take(arr, pa.array(pos))
-        scale = n / len(sample)
-        sizes = {}
-        for c in cands:
-            try:
-                sizes[c.name] = len(c.encode(sample)) * scale
-            except ValueError:
-                # plan-gated codecs (LeCo rungs / outlier) can be eligible on
-                # the full chunk but not on the sample — skip, don't crash
-                continue
-        if not sizes:
-            return "str_raw"
-    return min(sizes, key=sizes.get)
+        # every sample size shares the scale n / len(sample), so raw sample
+        # lengths rank the candidates the same as the scaled sizes
+        race = pc.take(arr, pa.array(_sample_slices(n, STR_SAMPLE_ROWS)))
+    fsst_at = next(i for i, c in enumerate(cands) if c.name == "fsst")
+    payloads = {}
+    for c in cands[:fsst_at] + cands[fsst_at + 1 :]:
+        try:
+            payloads[c.name] = c.encode(race)
+        except ValueError:
+            # plan-gated codecs (LeCo rungs / outlier) can be eligible on
+            # the full chunk but not on the sample — skip, don't crash
+            if full:
+                raise
+    before = {c.name for c in cands[:fsst_at]}
+    cap = min(
+        (len(v) + (k not in before) for k, v in payloads.items()), default=None
+    )
+    fsst = cands[fsst_at].encode(race, cap=cap)
+    if fsst is not None:  # under the cap: FSST beats every other candidate
+        name = "fsst"
+        payloads[name] = fsst
+    else:  # dicts keep insertion (= candidate-list) order
+        name = min(payloads, key=lambda k: len(payloads[k]))
+    return name, payloads[name] if full else None
 
 
 def encode_string_column_arrow(arr, selection: str = "exact") -> tuple[str, bytes]:
@@ -550,8 +574,9 @@ def encode_string_column_arrow(arr, selection: str = "exact") -> tuple[str, byte
     has_nulls = arr.null_count > 0
     nonnull = arr.drop_null().cast(pa.large_binary()) if has_nulls else arr.cast(pa.large_binary())
     flags = _FLAG_NULLS if has_nulls else 0
+    payload = None
     if not len(nonnull):
-        name = "str_raw"
+        name, payload = "str_raw", b""
     elif selection.startswith("force:"):
         name = selection[6:]
         if name not in STRING_CODEC_IDS:
@@ -559,10 +584,11 @@ def encode_string_column_arrow(arr, selection: str = "exact") -> tuple[str, byte
         if name in (
             "leco_str", "leco_str_wide", "leco_str_outlier"
         ) and not STRING_CODEC_CLASSES[name].eligible(nonnull):
-            name = _pick_string_codec(nonnull)
+            name, payload = _pick_string_codec(nonnull)
     else:
-        name = _pick_string_codec(nonnull)
-    payload = STRING_CODEC_CLASSES[name]().encode(nonnull) if len(nonnull) else b""
+        name, payload = _pick_string_codec(nonnull)
+    if payload is None:
+        payload = STRING_CODEC_CLASSES[name]().encode(nonnull)
     parts = [bytes([flags])]
     if has_nulls:
         valid = ~arr.is_null().to_numpy(zero_copy_only=False)
