@@ -17,12 +17,13 @@ sums, dual recenter) of ``[s, i+H)`` (extend through the horizon) against
 evaluation per decision is cached from the previous step, so encoding is
 ~2 scalar window pricings per horizon block.
 
-Role in the engine: **raced, gated** — it joins the per-chunk race only
-when variable segmentation already won (``select.encode_int_values``):
-measured on real shapes, the uniform horizon boundaries beat the top-down
-argmax split on drift-shaped random walks (cumulative-Poisson sensor
-streams, ~15 % smaller) and lose on jump-segmented data (conversation
-timestamps, smooth ramps) — the per-column race memo arbitrates, so
+Role in the engine: **raced, gated** — its ``var_la`` leg of the int
+race ladder (``select.RACE_LEGS``) runs only when variable segmentation
+already won: measured on real shapes, the uniform horizon boundaries
+beat the top-down argmax split on drift-shaped random walks
+(cumulative-Poisson sensor streams, ~15 % smaller) and lose on
+jump-segmented data (conversation timestamps, smooth ramps) — the
+per-column race memo arbitrates, so
 losing columns stop paying for it after ``RACE_PATIENCE`` chunks
 (SURVEY §2 "what's missing" item 5, now closed as implemented).
 

@@ -13,17 +13,11 @@ the decoded key columns — which is exactly the invariant the driver checks
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from ..chunkstore import col_field, load_store_schema, read_chunks
-from ..select import (
-    decode_double_column,
-    decode_int_column,
-    decode_string_column,
-)
 
 _SPARK_OF_LOGICAL = {
     "int32": T.IntegerType(),
@@ -38,14 +32,6 @@ _SPARK_OF_LOGICAL = {
 def load_schema(store: str) -> tuple[list[tuple[str, str]], list[str]]:
     doc = load_store_schema(store)
     return [tuple(cs) for cs in doc["colspecs"]], doc["key_cols"]
-
-
-def decode_column(payload: bytes, n: int, logical: str) -> pd.Series:
-    if logical == "string":
-        return decode_string_column(payload, n)
-    if logical == "double":
-        return decode_double_column(payload, n)
-    return decode_int_column(payload, n, logical)
 
 
 def decode_column_arrow(payload: bytes, n: int, logical: str, companion=None):

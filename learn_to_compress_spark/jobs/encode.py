@@ -232,8 +232,8 @@ def _sample_race_seed(
     sample_rows: int | None = None,
 ) -> dict[str, dict]:
     """Driver-side pre-seeding of the per-column race memos: encode TWO
-    sampled chunks per int column and pre-bench every costly candidate
-    (poly2/spline/outlier/var/lookahead) that lost on all of them.
+    sampled chunks per int column and pre-bench every race leg
+    (``select.RACE_LEGS``) that lost on all of them.
 
     Shipped into the encode kernel, the seed makes adaptive race pruning
     effective even when a task sees only one or two chunks of a column
@@ -402,8 +402,8 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
             install_var_regressor(var_model)
         seqs: dict[int, int] = {}
         # per-column race memos live for the whole partition: adaptive
-        # candidate pruning amortizes the costly poly2/spline/outlier/var
-        # races across a column's chunks (select.RACE_PATIENCE). The
+        # candidate pruning amortizes the race legs (select.RACE_LEGS)
+        # across a column's chunks (select.RACE_PATIENCE). The
         # driver-side sample seed pre-benches candidates that lost on every
         # sampled chunk (the RECHECK re-race still runs per worker).
         race_memos: dict[str, dict] = {
@@ -796,21 +796,21 @@ def encode_table(
 
     # pre-bench costly race candidates from a bounded driver sample (only
     # meaningful for the exact race; forced/learned selections skip races)
-    var_model = None
+    var_model = race_seed = None
     if selection == "exact":
         # driver-side one-time fit of the segmentation-gain regressor
         # (CART race pruning, regress_tree.h); ships as plain arrays in the
-        # kernel closure. Fit BEFORE the sample seed so the driver's own
-        # seeding race prunes with it too.
-        from ..learned import install_var_regressor, var_regressor_params
+        # kernel closure. The driver's own seeding race prunes with it too,
+        # and only that race: library calls after the encode stay exhaustive.
+        from .. import learned
 
-        var_model = var_regressor_params()
-        install_var_regressor(var_model)
-    race_seed = (
-        _sample_race_seed(df, key_cols, colspecs, chunk_rows)
-        if selection == "exact"
-        else None
-    )
+        var_model = learned.var_regressor_params()
+        saved = learned._VAR_REG
+        learned.install_var_regressor(var_model)
+        try:
+            race_seed = _sample_race_seed(df, key_cols, colspecs, chunk_rows)
+        finally:
+            learned._VAR_REG = saved
 
     t0 = time.monotonic()
     if presorted:

@@ -373,16 +373,20 @@ def _regressor_training(block: int = 4096):
     return np.stack(X), np.asarray(y)
 
 
+#: the installed tree ``predict_var_ratio`` prunes with (None: no pruning)
 _VAR_REG: CartRegressor | None = None
+_VAR_PARAMS: dict | None = None
 
 
 def var_regressor_params() -> dict:
-    """Driver-side lazy train → plain-array params for the kernel closure."""
-    global _VAR_REG
-    if _VAR_REG is None:
+    """Driver-side lazy train → plain-array params for the kernel closure.
+    Fitting installs nothing: library calls in this process keep the
+    exhaustive race until a caller installs the params."""
+    global _VAR_PARAMS
+    if _VAR_PARAMS is None:
         X, y = _regressor_training()
-        _VAR_REG = CartRegressor().fit(X, y)
-    return _VAR_REG.to_params()
+        _VAR_PARAMS = CartRegressor().fit(X, y).to_params()
+    return _VAR_PARAMS
 
 
 def install_var_regressor(params: dict | None) -> None:

@@ -17,11 +17,12 @@ reference is unsigned-only, ``headers/piecewise_fix_integer_template.h:14-16``).
 from __future__ import annotations
 
 import struct
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
 
-from .codecs import CODEC_IDS, CODEC_NAMES, int_candidates, int_codec
+from .codecs import CODEC_IDS, CODEC_NAMES, int_codec
 from .codecs import strings_outlier as _strings_outlier  # noqa: F401 — registers the outlier rung
 from .codecs import strings_wide as _strings_wide  # noqa: F401 — registers the wide rung
 from .codecs.strings import (
@@ -32,6 +33,7 @@ from .codecs.strings import (
     StrRawCodec,
     WordDictCodec,
 )
+from .learned import pick_int_codec_learned, predict_var_ratio
 
 _FLAG_NULLS = 1
 _FLAG_SIGNFLIP = 2
@@ -156,12 +158,12 @@ def _pick_int_codec(vals: np.ndarray, dtype) -> str:
     return min(sizes, key=sizes.get)
 
 
-# Adaptive race pruning (per-column, inside one encode kernel): a costly
-# candidate (poly2/spline/outlier fit, leco_var segmentation) that lost its
-# last RACE_PATIENCE eligible races on a column is benched and re-tried once
-# every RACE_RECHECK eligible chunks — the streaming analogue of the
-# reference's sampled per-method selection (``experiments/best_compress.cpp:
-# 59-86`` benchmarks candidates on sample blocks, then fixes the method).
+# Adaptive race pruning (per-column, inside one encode kernel): a race leg
+# (``RACE_LEGS``) that lost its last RACE_PATIENCE eligible races on a
+# column is benched and re-tried once every RACE_RECHECK eligible chunks —
+# the streaming analogue of the reference's sampled per-method selection
+# (``experiments/best_compress.cpp:59-86`` benchmarks candidates on sample
+# blocks, then fixes the method).
 # Homogeneous columns (the normal case) pay the full race ≤ PATIENCE times
 # and the cheap analytic race thereafter; a mid-column distribution shift is
 # picked up at the next recheck, bounding any CR give-up to < RECHECK chunks
@@ -203,6 +205,86 @@ def _race_record(memo, cand: str, won: bool) -> None:
     memo[cand] = (0 if won else losses + 1, 0)
 
 
+def _var_pruned(vals: np.ndarray) -> bool:
+    """CART-regressor race pruning (``headers/regress_tree.h``,
+    ``experiments/regressor_CART.cpp``): a driver-fitted variance CART
+    predicts leco_var_bytes / best_fixed_bytes from nine O(n) features, and
+    the segmentation encodes are skipped unless the predicted win clears
+    ``VAR_PRUNE_RATIO``. No model installed ⇒ never pruned."""
+    pred = predict_var_ratio(vals)
+    pruned = pred is not None and pred >= VAR_PRUNE_RATIO
+    VAR_RACE_STATS["skipped" if pruned else "raced"] += 1
+    return pruned
+
+
+class RaceLeg(NamedTuple):
+    key: str  # race memo key
+    codecs: tuple[str, ...]  # raced in this order
+    vs: frozenset = frozenset(CODEC_IDS) - {"raw", "rle", "dict"}  # winners it races
+    min_n: int = 256
+    floor: tuple[int, float] | None = (0, 0.02)  # (bytes, share of raw bytes)
+    only_after: dict = {}  # codec -> the leg-entry winner it needs
+    prune: Callable[[np.ndarray], bool] | None = None
+
+
+# The exact int race: LeCo encodes every candidate and keeps the smallest
+# (``experiments/best_compress.cpp:59-86``). The analytic pick among
+# raw/for/delta/leco/rle/dict enters this ladder, and each leg in turn races
+# its codecs against the current winner when the chunk has ``min_n`` values,
+# the winner is in ``vs``, the winner's payload is over ``floor`` (bytes +
+# share · raw bytes) and the column memo allows the leg — asked last, since
+# it advances the memo. A ``prune`` hook may then skip the leg unrecorded.
+# Each codec that ``only_after`` admits passes its ``eligible()`` and O(n)
+# ``size_bytes()`` pre-checks where it has them, and takes the lead only
+# when strictly smaller (ties keep the earlier codec); the leg records one
+# win or loss. The legs: the minimax line in leco's layout (lp, op #18); the
+# nonlinear and exception-list models (ops #16, #17); variable segmentation
+# (ops #10, #13), the one leg without an analytic size, then the lookahead
+# segmenter (``piecewise_cost_lookahead.h``); vbyte and Elias-Fano (op #19).
+RACE_LEGS = (
+    RaceLeg("lp", ("leco_lp",), vs=frozenset({"leco"}), floor=(17, 0.0)),
+    RaceLeg("poly2", ("poly2",)),
+    RaceLeg("poly_max", ("poly_max",)),
+    RaceLeg("spline", ("spline",)),
+    RaceLeg("outlier", ("leco_outlier",)),
+    RaceLeg("var", ("leco_var", "delta_var"), min_n=4096, floor=(0, 0.05),
+            only_after={"delta_var": "delta"}, prune=_var_pruned),
+    RaceLeg("var_la", ("leco_var_lookahead",), vs=frozenset({"leco_var", "delta_var"}),
+            min_n=4096, floor=None),
+    RaceLeg("baseline", ("vbyte", "elias_fano"), vs=frozenset(CODEC_IDS)),
+)
+
+
+def _race_ladder(vals, udtype, name: str, payload: bytes, memo) -> tuple[str, bytes]:
+    """Race ``RACE_LEGS`` against the analytic pick → the final winner."""
+    for leg in RACE_LEGS:
+        if not (
+            vals.size >= leg.min_n
+            and name in leg.vs
+            and (leg.floor is None or len(payload) > leg.floor[0] + leg.floor[1] * vals.nbytes)
+            and _race_allowed(memo, leg.key)
+        ):
+            continue
+        if leg.prune is not None and leg.prune(vals):
+            continue
+        entry, won = name, False
+        for cname in leg.codecs:
+            if leg.only_after.get(cname, entry) != entry:
+                continue
+            codec = int_codec(cname, udtype)
+            eligible = getattr(codec, "eligible", None)
+            size_bytes = getattr(codec, "size_bytes", None)
+            if (eligible and not eligible(vals)) or (
+                size_bytes and size_bytes(vals) >= len(payload)
+            ):
+                continue
+            cand = codec.encode(vals)
+            if len(cand) < len(payload):
+                name, payload, won = cname, cand, True
+        _race_record(memo, leg.key, won)
+    return name, payload
+
+
 def encode_int_values(
     raw: np.ndarray, mask, logical: str, selection: str = "exact", memo=None
 ) -> tuple[str, bytes]:
@@ -211,8 +293,8 @@ def encode_int_values(
     ``raw``: the non-null values (datetime64[us] or integer dtype);
     ``mask``: boolean null mask over the full column, or None.
     ``selection``: "exact" (analytic min-size, default), "learned" (CART
-    over block features, operator #37 — constant-time selection, no
-    poly2/leco_var races), or "force:<codec>" (pin a registry codec for
+    over block features, operator #37 — constant-time selection, no race
+    ladder), or "force:<codec>" (pin a registry codec for
     every chunk — the per-codec verification seam, mirroring the
     reference's fixed-method drivers ``experiments/best_compress.cpp:114-133``;
     correctness is unaffected because every codec roundtrips exactly).
@@ -239,199 +321,12 @@ def encode_int_values(
         if name not in CODEC_IDS or name in ("linked", "fsst"):
             raise ValueError(f"force: unknown int codec {name!r}")
     elif selection == "learned":
-        from .learned import pick_int_codec_learned
-
         name = pick_int_codec_learned(vals)
     else:
         name = _pick_int_codec(vals, udtype)
     payload = int_codec(name, udtype).encode(vals) if vals.size else b""
-    if selection == "learned":
-        parts = [bytes([flags])]
-        if mask is not None:
-            parts.append(np.packbits(~mask, bitorder="little").tobytes())
-        parts.append(bytes([CODEC_IDS[name]]))
-        parts.append(payload)
-        return name, b"".join(parts)
-    # LeCo_LP (operator #18, scripts/leco_lp/leco_lp.py): the minimax
-    # linear fit directly minimizes the residual BIT WIDTH (the LS line
-    # optimizes the wrong norm and can sit a bit wider when one tail
-    # drifts). Same payload layout as leco — decode/pushdowns identical —
-    # so it races first, against the LS line itself, under the usual
-    # analytic-size-first gate; ties go to leco (strict <).
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and name == "leco"
-        and len(payload) > 17  # a zero-residual LS line can't be beaten
-        and _race_allowed(memo, "lp")
-    ):
-        from .codecs.leco_lp import LecoLpCodec
-
-        won = False
-        lp = LecoLpCodec(udtype)
-        if lp.size_bytes(vals) < len(payload):
-            cand = lp.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "leco_lp", cand, True
-        _race_record(memo, "lp", won)
-    # Poly2 (operator #16, nonlinear_fix) joins the race only where the best
-    # linear model left room — curvature is exactly what it fixes; its
-    # analytic size is one extra vector pass (gated, so the common linear
-    # case never pays for it). All races are skipped under force: — the
-    # pinned codec must stay the one serialized.
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and name in ("leco", "leco_lp", "for", "delta")
-        and len(payload) > 0.02 * vals.nbytes
-        and _race_allowed(memo, "poly2")
-    ):
-        from .codecs.poly import Poly2Codec
-
-        won = False
-        p2 = Poly2Codec(udtype)
-        if p2.size_bytes(vals) < len(payload):
-            cand = p2.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "poly2", cand, True
-        _race_record(memo, "poly2", won)
-    # Poly_max (operator #16 completed): auto-degree k∈{2,3} polynomial
-    # with exact minimax (hull) recentering of the linear part — wins where
-    # curvature plus a drifting tail leaves the L2 fit a bit wide, and where
-    # genuine cubic shape needs the third coefficient. Same gated
-    # analytic-size-first race as poly2.
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and name in ("leco", "leco_lp", "for", "delta", "poly2")
-        and len(payload) > 0.02 * vals.nbytes
-        and _race_allowed(memo, "poly_max")
-    ):
-        from .codecs.poly_max import PolyMaxCodec
-
-        won = False
-        pm = PolyMaxCodec(udtype)
-        if pm.size_bytes(vals) < len(payload):
-            cand = pm.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "poly_max", cand, True
-        _race_record(memo, "poly_max", won)
-    # LeCo_outlier (operator #17, piecewise_ransac/outlier_detect): spikes
-    # in an otherwise-modelable column blow the fixed residual width; the
-    # exception-list codec keeps the narrow bulk width. Raced under the same
-    # gate as poly2 (analytic size first, encode only on a win).
-    # Spline / cubic model (spline_fix.h): second nonlinear family; same
-    # gated analytic-size-first race as poly2 — the common linear case
-    # never pays for it
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and name in ("leco", "leco_lp", "for", "delta", "poly2", "poly_max")
-        and len(payload) > 0.02 * vals.nbytes
-        and _race_allowed(memo, "spline")
-    ):
-        from .codecs.spline import SplineCodec
-
-        won = False
-        sp = SplineCodec(udtype)
-        if sp.size_bytes(vals) < len(payload):
-            cand = sp.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "spline", cand, True
-        _race_record(memo, "spline", won)
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and name in ("leco", "leco_lp", "for", "delta", "poly2", "poly_max", "spline")
-        and len(payload) > 0.02 * vals.nbytes
-        and _race_allowed(memo, "outlier")
-    ):
-        from .codecs.outlier import LecoOutlierCodec
-
-        won = False
-        oc = LecoOutlierCodec(udtype)
-        if oc.size_bytes(vals) < len(payload):
-            cand = oc.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "leco_outlier", cand, True
-        _race_record(memo, "outlier", won)
-    # Variable segmentation has no closed-form size; try it only where it
-    # can plausibly win — a modelable column whose best fixed codec is still
-    # mediocre — and keep the smaller payload. LeCo_var (operator #10) races
-    # always; Delta_var (operator #13) only when fixed delta was the winner,
-    # mirroring the reference's separate delta_cost codec.
-    if (
-        selection == "exact"
-        and vals.size >= 4096
-        and name in ("leco", "leco_lp", "for", "delta", "poly2", "poly_max", "spline", "leco_outlier")
-        and len(payload) > 0.05 * vals.nbytes
-        and _race_allowed(memo, "var")
-    ):
-        # CART-regressor race pruning (``headers/regress_tree.h``,
-        # ``experiments/regressor_CART.cpp``): segmentation is the one race
-        # leg without a closed-form size, so a driver-fitted variance CART
-        # predicts leco_var_bytes/best_fixed_bytes from nine O(n) features
-        # and the full segmentation encode runs only when the predicted win
-        # clears VAR_PRUNE_RATIO. No model installed (library calls, tests)
-        # ⇒ predict returns None and the race stays exhaustive.
-        from .learned import predict_var_ratio
-
-        pred = predict_var_ratio(vals)
-        if pred is not None and pred >= VAR_PRUNE_RATIO:
-            VAR_RACE_STATS["skipped"] += 1
-        else:
-            VAR_RACE_STATS["raced"] += 1
-            fixed_name = name
-            won = False
-            var_payload = int_codec("leco_var", udtype).encode(vals)
-            if len(var_payload) < len(payload):
-                name, payload, won = "leco_var", var_payload, True
-            if fixed_name == "delta":
-                dv = int_codec("delta_var", udtype).encode(vals)
-                if len(dv) < len(payload):
-                    name, payload, won = "delta_var", dv, True
-            _race_record(memo, "var", won)
-    # The online lookahead segmenter (piecewise_cost_lookahead.h) races
-    # only where variable segmentation is already in play: its uniform
-    # horizon boundaries beat the top-down argmax split on drift-shaped
-    # random walks (~15 % on cumulative-Poisson sensors), and lose on
-    # jump-segmented data — exactly what the per-column memo arbitrates.
-    if (
-        selection == "exact"
-        and vals.size >= 4096
-        and name in ("leco_var", "delta_var")
-        and _race_allowed(memo, "var_la")
-    ):
-        won = False
-        la = int_codec("leco_var_lookahead", udtype).encode(vals)
-        if len(la) < len(payload):
-            name, payload, won = "leco_var_lookahead", la, True
-        _race_record(memo, "var_la", won)
-    # Baseline codecs (operator #19) race the FINAL winner where their
-    # shapes apply: vbyte's per-value sizing beats every fixed-width codec
-    # on heavy-tailed magnitudes, and Elias-Fano stores a monotone chunk at
-    # n·(2+log2(u/n)) bits where delta pays bits(max gap) per value. Both
-    # sizes are one exact O(n) pass, so the lose-case cost is tiny.
-    if (
-        selection == "exact"
-        and vals.size >= 256
-        and len(payload) > 0.02 * vals.nbytes
-        and _race_allowed(memo, "baseline")
-    ):
-        from .codecs.baseline import EliasFanoCodec, VbyteCodec
-
-        won = False
-        vb = VbyteCodec(udtype)
-        if vb.size_bytes(vals) < len(payload):
-            cand = vb.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "vbyte", cand, True
-        ef = EliasFanoCodec(udtype)
-        if EliasFanoCodec.eligible(vals) and ef.size_bytes(vals) < len(payload):
-            cand = ef.encode(vals)
-            if len(cand) < len(payload):
-                name, payload, won = "elias_fano", cand, True
-        _race_record(memo, "baseline", won)
+    if selection == "exact":
+        name, payload = _race_ladder(vals, udtype, name, payload, memo)
     parts = [bytes([flags])]
     if mask is not None:
         parts.append(np.packbits(~mask, bitorder="little").tobytes())
@@ -1223,8 +1118,7 @@ def encode_double_column(ser: pd.Series) -> tuple[str, bytes]:
         # sizes are invariant under the bijection, while the model codecs
         # gain the monotone domain (sensor series, sorted doubles)
         mono = _f64_to_mono(bits)
-        sizes = int_codec_sizes(mono, np.uint64)
-        name = min(sizes, key=lambda k2: sizes[k2])
+        name = _pick_int_codec(mono, np.uint64)
         payload = int_codec(name, np.uint64).encode(mono)
     else:
         name, payload = "raw", b""

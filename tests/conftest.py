@@ -8,3 +8,14 @@ def spark():
     s = get_spark("local[4]", chunk_rows=2048, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def installed_model():
+    """The race-pruning regressor installed in this process for one test."""
+    from learn_to_compress_spark import learned
+
+    learned.install_var_regressor(learned.var_regressor_params())
+    yield
+    # other tests expect the exhaustive race in library calls
+    learned._VAR_REG = None

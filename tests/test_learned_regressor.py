@@ -9,7 +9,6 @@ The contract: (1) held-out selection regret ≤ 1.02 vs the exhaustive race,
 the selection)."""
 
 import numpy as np
-import pytest
 
 from learn_to_compress_spark import learned, select
 from learn_to_compress_spark.select import (
@@ -17,14 +16,6 @@ from learn_to_compress_spark.select import (
     decode_int_column,
     encode_int_values,
 )
-
-
-@pytest.fixture()
-def installed_model():
-    learned.install_var_regressor(learned.var_regressor_params())
-    yield
-    # other tests expect the exhaustive race in library calls
-    learned._VAR_REG = None
 
 
 def _holdout_blocks(block=4096, n=120):

@@ -51,6 +51,19 @@ def test_roundtrip_bit_identical(spark, store):
     assert raw["text"].equals(dec["text"])
 
 
+def test_encode_table_leaves_driver_regressor_alone(spark, tmp_path, monkeypatch):
+    """The driver installs the race-pruning regressor only for its seeding
+    race: library calls after an encode keep the exhaustive race."""
+    from learn_to_compress_spark import learned
+
+    monkeypatch.setattr(learned, "_VAR_REG", None)
+    encode_table(
+        transcripts_df(spark, 20, parallelism=2), str(tmp_path / "s"),
+        chunk_rows=CHUNK_ROWS, num_parts=2,
+    )
+    assert learned._VAR_REG is None
+
+
 def test_column_pruned_decode(spark, store):
     dec = decode_table(spark, store, columns=["conv_id", "turn_idx"])
     assert dec.columns == ["conv_id", "turn_idx"]
