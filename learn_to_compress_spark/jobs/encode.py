@@ -204,6 +204,8 @@ def tune_chunk_rows(
     """
     import pyarrow as pa
 
+    from .. import learned
+
     colspecs = colspecs_of(df)
     pdf = df.limit(int(sample_rows)).toPandas()
     if key_cols:
@@ -211,14 +213,16 @@ def tune_chunk_rows(
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     n = tbl.num_rows
     sizes: dict[int, int] = {}
-    for cand in candidates:
-        total = 0
-        for s in range(0, n, cand):
-            sl = tbl.slice(s, min(cand, n - s))
-            for name, logical in colspecs:
-                _, payload, _ = _encode_one_arrow(sl.column(name), logical)
-                total += len(payload) + _CHUNK_META_OVERHEAD
-        sizes[cand] = total
+    # the executors' exact race prunes with the regressor, so pricing does too
+    with learned.var_regressor_installed(learned.var_regressor_params()):
+        for cand in candidates:
+            total = 0
+            for s in range(0, n, cand):
+                sl = tbl.slice(s, min(cand, n - s))
+                for name, logical in colspecs:
+                    _, payload, _ = _encode_one_arrow(sl.column(name), logical)
+                    total += len(payload) + _CHUNK_META_OVERHEAD
+            sizes[cand] = total
     # ties break toward the LARGER chunk (fewer store rows, cheaper scans)
     best = min(sizes, key=lambda c: (sizes[c], -c))
     return best, sizes
@@ -800,17 +804,14 @@ def encode_table(
     if selection == "exact":
         # driver-side one-time fit of the segmentation-gain regressor
         # (CART race pruning, regress_tree.h); ships as plain arrays in the
-        # kernel closure. The driver's own seeding race prunes with it too,
-        # and only that race: library calls after the encode stay exhaustive.
+        # kernel closure. The driver's seeding race (like the chunk-size
+        # tuner) prunes with it only while it runs: library calls after the
+        # encode stay exhaustive.
         from .. import learned
 
         var_model = learned.var_regressor_params()
-        saved = learned._VAR_REG
-        learned.install_var_regressor(var_model)
-        try:
+        with learned.var_regressor_installed(var_model):
             race_seed = _sample_race_seed(df, key_cols, colspecs, chunk_rows)
-        finally:
-            learned._VAR_REG = saved
 
     t0 = time.monotonic()
     if presorted:

@@ -19,6 +19,8 @@ job exposes ``selection="learned"`` to switch.
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 
 _LABELS = ["raw", "for", "delta", "leco", "rle", "dict"]
@@ -394,6 +396,20 @@ def install_var_regressor(params: dict | None) -> None:
     global _VAR_REG
     if _VAR_REG is None and params:
         _VAR_REG = CartRegressor.from_params(params)
+
+
+@contextlib.contextmanager
+def var_regressor_installed(params: dict | None):
+    """Prune with the tree of ``params`` (None: no pruning) inside the
+    block, then restore whatever was installed before. Driver-side races
+    that price what the executors will do run inside one."""
+    global _VAR_REG
+    saved = _VAR_REG
+    _VAR_REG = CartRegressor.from_params(params) if params else None
+    try:
+        yield
+    finally:
+        _VAR_REG = saved
 
 
 def predict_var_ratio(vals: np.ndarray) -> float | None:

@@ -354,22 +354,7 @@ def _read_validity(payload: bytes, n: int, flags: int, off: int):
 
 
 def decode_int_column(payload: bytes, n: int, logical: str, companion=None):
-    udtype = np.dtype(_UNSIGNED_OF[logical])
-    width = udtype.itemsize * 8
-    stype = np.dtype(np.int32) if width == 32 else np.dtype(np.int64)
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
-    name = CODEC_NAMES[payload[off]]
-    off += 1
-    if not n_valid:
-        vals = np.empty(0, dtype=udtype)
-    elif name == "linked":
-        vals = _linked_unsigned(payload[off:], n_valid, udtype, companion)
-    else:
-        vals = int_codec(name, udtype).decode(payload[off:], n_valid)
-    if flags & _FLAG_SIGNFLIP:
-        vals = vals ^ udtype.type(1 << (width - 1))
-    signed = vals.view(stype)
+    signed, valid = _decode_signed(payload, n, logical, companion)
     if logical.startswith("timestamp"):
         dense = signed.view("datetime64[us]")
         if valid is None:
@@ -379,7 +364,7 @@ def decode_int_column(payload: bytes, n: int, logical: str, companion=None):
         return pd.Series(out)
     if valid is None:
         return pd.Series(signed)
-    out = pd.array([None] * n, dtype="Int32" if width == 32 else "Int64")
+    out = pd.array([None] * n, dtype="Int32" if signed.itemsize == 4 else "Int64")
     out[np.flatnonzero(valid)] = signed
     return pd.Series(out)
 
@@ -499,20 +484,20 @@ def encode_string_column(ser: pd.Series) -> tuple[str, bytes]:
     return encode_string_column_arrow(pa.Array.from_pandas(ser, type=pa.large_string()))
 
 
+def _string_frame(payload: bytes, n: int):
+    """(validity mask or None, non-null count, codec, codec payload) of a
+    framed string column."""
+    valid, n_valid, off = _read_validity(payload, n, payload[0], 1)
+    codec = STRING_CODEC_CLASSES[STRING_CODEC_NAMES[payload[off]]]()
+    return valid, n_valid, codec, payload[off + 1 :]
+
+
 def decode_string_column(payload: bytes, n: int) -> pd.Series:
     import pyarrow as pa
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
-    name = STRING_CODEC_NAMES[payload[off]]
-    off += 1
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if n_valid:
-        decoded = (
-            STRING_CODEC_CLASSES[name]()
-            .decode(payload[off:], n_valid)
-            .cast(pa.large_string())
-            .to_pandas()
-        )
+        decoded = codec.decode(body, n_valid).cast(pa.large_string()).to_pandas()
     else:
         decoded = pd.Series([], dtype=object)
     if valid is None:
@@ -612,6 +597,31 @@ def _int_frame(payload: bytes, n: int, logical: str):
     return flags, valid, n_valid, codec, payload[off + 1 :], udtype
 
 
+def _signed(vals: np.ndarray, flags: int, udtype) -> np.ndarray:
+    """Stored unsigned values → the column's signed dtype."""
+    if flags & _FLAG_SIGNFLIP:
+        vals = vals ^ udtype.type(1 << (udtype.itemsize * 8 - 1))
+    return vals.view(np.int32 if udtype.itemsize == 4 else np.int64)
+
+
+def _decode_signed(payload: bytes, n: int, logical: str, companion=None):
+    """(dense values at non-null slots in the column's signed dtype,
+    validity mask or None)."""
+    flags, valid, n_valid, codec, sub, udtype = _int_frame(payload, n, logical)
+    if not n_valid:
+        vals = np.empty(0, dtype=udtype)
+    elif codec.name == "linked":
+        vals = _linked_unsigned(sub, n_valid, udtype, companion)
+    else:
+        vals = codec.decode(sub, n_valid)
+    return _signed(vals, flags, udtype), valid
+
+
+def _rows(valid, dense: np.ndarray) -> np.ndarray:
+    """Positions among the non-null values → full-column row positions."""
+    return dense if valid is None else np.flatnonzero(valid)[dense]
+
+
 def column_sum(payload: bytes, n: int, logical: str, companion=None) -> int:
     """Exact SUM of a framed int/timestamp column (timestamps: µs since epoch),
     computed from the compressed payload via the codec's sum pushdown."""
@@ -624,12 +634,10 @@ def column_sum(payload: bytes, n: int, logical: str, companion=None) -> int:
         lo = int((v64 & np.int64(0xFFFFFFFF)).sum(dtype=np.int64))
         return (hi << 32) + lo  # linked frames carry no sign-flip
     total = codec.sum(sub, n_valid)
+    # stored unsigned == signed only when no value has the top bit set;
+    # signflip guarantees that for negative-containing columns
     if flags & _FLAG_SIGNFLIP:
         total -= n_valid * (1 << (udtype.itemsize * 8 - 1))
-    elif udtype.itemsize == 8:
-        # stored unsigned == signed only when no value has the top bit set;
-        # signflip guarantees that for negative-containing columns
-        pass
     return total
 
 
@@ -650,9 +658,7 @@ def column_filter_gt(
         else:
             v64 = _linked_decode_signed(sub, n_valid, companion)
             pos = np.flatnonzero(v64 > np.int64(v))
-        if valid is not None:
-            pos = np.flatnonzero(valid)[pos]
-        return pos
+        return _rows(valid, pos)
     width = udtype.itemsize * 8
     # clamp thresholds outside the stored domain BEFORE handing v to the
     # codec: codecs compare in their unsigned dtype, where a negative v
@@ -670,21 +676,13 @@ def column_filter_gt(
         pos = np.arange(n_valid, dtype=np.int64)
     else:
         pos = codec.filter_gt(sub, n_valid, int(v))
-    if valid is not None:
-        pos = np.flatnonzero(valid)[pos]
-    return pos
+    return _rows(valid, pos)
 
 
 def column_decode_i64(payload: bytes, n: int, logical: str, companion=None):
     """(dense signed-domain int64 values at non-null slots, validity mask or
     None). Timestamps come back as µs since epoch."""
-    flags, valid, n_valid, codec, sub, udtype = _int_frame(payload, n, logical)
-    if codec.name == "linked" and n_valid:
-        return _linked_decode_signed(sub, n_valid, companion), valid
-    vals = codec.decode(sub, n_valid) if n_valid else np.empty(0, dtype=udtype)
-    if flags & _FLAG_SIGNFLIP:
-        vals = vals ^ udtype.type(1 << (udtype.itemsize * 8 - 1))
-    signed = vals.view(np.int32 if udtype.itemsize == 4 else np.int64)
+    signed, valid = _decode_signed(payload, n, logical, companion)
     return signed.astype(np.int64, copy=False), valid
 
 
@@ -717,20 +715,10 @@ def column_filter_mod_band(
             MOD_BAND_STATS["slots_decoded"] += int(n_decoded)
     if pos is None:
         MOD_BAND_STATS["slots_decoded"] += n_valid
-        if codec.name == "linked":
-            v64 = _linked_decode_signed(sub, n_valid, companion)
-        else:
-            vals = codec.decode(sub, n_valid)
-            if flags & _FLAG_SIGNFLIP:
-                vals = vals ^ udtype.type(1 << (udtype.itemsize * 8 - 1))
-            v64 = vals.view(np.int32 if udtype.itemsize == 4 else np.int64).astype(
-                np.int64, copy=False
-            )
+        v64, _ = column_decode_i64(payload, n, logical, companion)
         rem = v64 % base
         pos = np.flatnonzero((rem > lo) & (rem < hi))
-    if valid is not None:
-        pos = np.flatnonzero(valid)[pos]
-    return pos
+    return _rows(valid, pos)
 
 
 def column_gather(payload: bytes, n: int, logical: str, positions: np.ndarray, companion=None):
@@ -746,10 +734,7 @@ def column_gather(payload: bytes, n: int, logical: str, positions: np.ndarray, c
             .iloc[positions]
             .reset_index(drop=True)
         )
-    vals = codec.gather(sub, positions, n_valid)
-    if flags & _FLAG_SIGNFLIP:
-        vals = vals ^ udtype.type(1 << (udtype.itemsize * 8 - 1))
-    signed = vals.view(np.int32 if udtype.itemsize == 4 else np.int64)
+    signed = _signed(codec.gather(sub, positions, n_valid), flags, udtype)
     if logical.startswith("timestamp"):
         return pd.Series(signed.view("datetime64[us]"))
     return pd.Series(signed)
@@ -764,17 +749,9 @@ def column_gather_string_arrow(payload: bytes, n: int, positions: np.ndarray):
     import pyarrow as pa
 
     positions = np.asarray(positions, dtype=np.int64)
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
-    if (
-        valid is None
-        and hasattr(codec, "gather")
-        and n
-        and len(positions) / n <= 0.2
-    ):
-        return codec.gather(payload[off + 1 :], positions, n).cast(pa.large_string())
+    valid, _, codec, body = _string_frame(payload, n)
+    if valid is None and hasattr(codec, "gather") and n and len(positions) / n <= 0.2:
+        return codec.gather(body, positions, n).cast(pa.large_string())
     return decode_string_column_arrow(payload, n).take(pa.array(positions))
 
 
@@ -790,18 +767,15 @@ def column_value_counts_string(payload: bytes, n: int):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
+    _, n_valid, codec, body = _string_frame(payload, n)
     null_count = n - n_valid
     if not n_valid:
         return pa.array([], type=pa.large_string()), np.empty(0, np.int64), null_count
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
     if hasattr(codec, "value_counts"):
-        uniq, counts = codec.value_counts(payload[off + 1 :], n_valid)
+        uniq, counts = codec.value_counts(body, n_valid)
         keep = counts > 0
         return uniq.cast(pa.large_string()).filter(pa.array(keep)), counts[keep], null_count
-    arr = codec.decode(payload[off + 1 :], n_valid).cast(pa.large_string())
+    arr = codec.decode(body, n_valid).cast(pa.large_string())
     vc = pc.value_counts(arr)
     return (
         vc.field("values"),
@@ -819,27 +793,12 @@ def column_value_counts_string(payload: bytes, n: int):
 def decode_int_column_arrow(payload: bytes, n: int, logical: str, companion=None):
     import pyarrow as pa
 
-    udtype = np.dtype(_UNSIGNED_OF[logical])
-    width = udtype.itemsize * 8
-    stype = np.dtype(np.int32) if width == 32 else np.dtype(np.int64)
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
-    name = CODEC_NAMES[payload[off]]
-    off += 1
-    if not n_valid:
-        vals = np.empty(0, dtype=udtype)
-    elif name == "linked":
-        vals = _linked_unsigned(payload[off:], n_valid, udtype, companion)
-    else:
-        vals = int_codec(name, udtype).decode(payload[off:], n_valid)
-    if flags & _FLAG_SIGNFLIP:
-        vals = vals ^ udtype.type(1 << (width - 1))
-    signed = vals.view(stype)
+    signed, valid = _decode_signed(payload, n, logical, companion)
     ts = logical.startswith("timestamp")
     if valid is None:
         np_out = signed.view("datetime64[us]") if ts else signed
         return pa.array(np_out)
-    full = np.zeros(n, dtype=stype)
+    full = np.zeros(n, dtype=signed.dtype)
     full[np.flatnonzero(valid)] = signed
     np_out = full.view("datetime64[us]") if ts else full
     return pa.array(np_out, mask=~valid)
@@ -857,16 +816,13 @@ def column_codes_string(payload: bytes, n: int):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if not n_valid:
         return pa.array([], type=pa.large_string()), np.empty(0, np.int64), valid
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
     if hasattr(codec, "codes"):
-        uniq, codes = codec.codes(payload[off + 1 :], n_valid)
+        uniq, codes = codec.codes(body, n_valid)
         return uniq.cast(pa.large_string()), codes, valid
-    denc = pc.dictionary_encode(codec.decode(payload[off + 1 :], n_valid))
+    denc = pc.dictionary_encode(codec.decode(body, n_valid))
     codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     return denc.dictionary.cast(pa.large_string()), codes, valid
 
@@ -890,12 +846,9 @@ def column_sum_at(payload: bytes, n: int, logical: str, positions, companion=Non
 def decode_string_column_arrow(payload: bytes, n: int, logical: str = "string"):
     import pyarrow as pa
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
-    name = STRING_CODEC_NAMES[payload[off]]
-    off += 1
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if n_valid:
-        dense = STRING_CODEC_CLASSES[name]().decode(payload[off:], n_valid)
+        dense = codec.decode(body, n_valid)
     else:
         dense = pa.array([], type=pa.large_binary())
     if valid is None:
@@ -927,23 +880,15 @@ def column_positions_eq_string(payload: bytes, n: int, needle: bytes) -> np.ndar
     once and compare with one Arrow C++ ``equal`` kernel."""
     import pyarrow.compute as pc
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if n_valid == 0:
         return np.empty(0, np.int64)
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
-    body = payload[off + 1 :]
     pe = getattr(codec, "positions_eq", None)
     dense = pe(body, n_valid, needle) if pe is not None else None
     if dense is None:
         arr = codec.decode(body, n_valid)
-        dense = np.flatnonzero(
-            pc.equal(arr, needle).to_numpy(zero_copy_only=False)
-        )
-    if valid is not None:
-        return np.flatnonzero(valid)[dense]
-    return dense
+        dense = np.flatnonzero(pc.equal(arr, needle).to_numpy(zero_copy_only=False))
+    return _rows(valid, dense)
 
 
 def column_positions_in_string(payload: bytes, n: int, needles: list) -> np.ndarray:
@@ -955,13 +900,9 @@ def column_positions_in_string(payload: bytes, n: int, needles: list) -> np.ndar
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if n_valid == 0:
         return np.empty(0, np.int64)
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
-    body = payload[off + 1 :]
     pi = getattr(codec, "positions_in", None)
     if pi is not None:
         dense = pi(body, n_valid, needles)
@@ -969,9 +910,7 @@ def column_positions_in_string(payload: bytes, n: int, needles: list) -> np.ndar
         arr = codec.decode(body, n_valid)
         hit = pc.is_in(arr, value_set=pa.array(list(needles), pa.binary()))
         dense = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
-    if valid is not None:
-        return np.flatnonzero(valid)[dense]
-    return dense
+    return _rows(valid, dense)
 
 
 # per-process observability for the string range pushdown (tests assert the
@@ -994,14 +933,10 @@ def column_positions_gt_string(
     with one Arrow C++ kernel (counted in ``STR_FILTER_STATS``)."""
     import pyarrow.compute as pc
 
-    flags = payload[0]
-    valid, n_valid, off = _read_validity(payload, n, flags, 1)
+    valid, n_valid, codec, body = _string_frame(payload, n)
     if n_valid == 0:
         return np.empty(0, np.int64)
     STR_FILTER_STATS["rows_total"] += n_valid
-    name = STRING_CODEC_NAMES[payload[off]]
-    codec = STRING_CODEC_CLASSES[name]()
-    body = payload[off + 1 :]
     pg = getattr(codec, "positions_gt", None)
     dense = pg(body, n_valid, needle, strict) if pg is not None else None
     if dense is None:
@@ -1009,9 +944,7 @@ def column_positions_gt_string(
         arr = codec.decode(body, n_valid)
         cmp = pc.greater if strict else pc.greater_equal
         dense = np.flatnonzero(cmp(arr, needle).to_numpy(zero_copy_only=False))
-    if valid is not None:
-        return np.flatnonzero(valid)[dense]
-    return dense
+    return _rows(valid, dense)
 
 
 def prefix_upper_bound(prefix: bytes) -> bytes | None:

@@ -15,7 +15,5 @@ def installed_model():
     """The race-pruning regressor installed in this process for one test."""
     from learn_to_compress_spark import learned
 
-    learned.install_var_regressor(learned.var_regressor_params())
-    yield
-    # other tests expect the exhaustive race in library calls
-    learned._VAR_REG = None
+    with learned.var_regressor_installed(learned.var_regressor_params()):
+        yield

@@ -51,11 +51,8 @@ def test_holdout_regret_at_most_2pct(installed_model):
     for b in _holdout_blocks():
         _, p1 = encode_int_values(b.copy(), None, "int64", memo=None)
         pruned += len(p1)
-        learned._VAR_REG, saved = None, learned._VAR_REG
-        try:
+        with learned.var_regressor_installed(None):
             _, p0 = encode_int_values(b.copy(), None, "int64", memo=None)
-        finally:
-            learned._VAR_REG = saved
         exhaustive += len(p0)
     regret = pruned / exhaustive
     assert regret <= 1.02, f"selection regret {regret:.4f} > 1.02"
@@ -80,14 +77,22 @@ def test_pruned_selection_still_roundtrips(installed_model):
         assert (out.to_numpy(dtype=np.int64) == b).all(), name
 
 
-def test_regressor_params_roundtrip(installed_model):
-    p = learned.var_regressor_params()
-    t = learned.CartRegressor.from_params(p)
+def test_regressor_params_roundtrip():
+    """The plain-array params executors rebuild the tree from predict
+    exactly as the fitted tree does."""
+    X, y = learned._regressor_training()
+    fitted = learned.CartRegressor().fit(X, y)
+    rebuilt = [
+        learned.CartRegressor.from_params(fitted.to_params()),
+        learned.CartRegressor.from_params(learned.var_regressor_params()),
+    ]
     rng = np.random.default_rng(3)
     x = np.arange(4096, dtype=np.float64)
     b = (x * 3 + rng.integers(0, 100, 4096)).astype(np.uint64)
-    f = learned.var_gain_features(b)
-    assert t.predict_one(f) == learned._VAR_REG.predict_one(f)
+    for f in (*X, learned.var_gain_features(b)):
+        for t in rebuilt:
+            assert t.predict_one(f) == fitted.predict_one(f)
+    assert len({fitted.predict_one(f) for f in X}) > 1  # a tree, not a stump
 
 
 def test_features_fixed_width_and_finite():

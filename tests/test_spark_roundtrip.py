@@ -64,6 +64,38 @@ def test_encode_table_leaves_driver_regressor_alone(spark, tmp_path, monkeypatch
     assert learned._VAR_REG is None
 
 
+def test_tuner_prices_with_the_executors_pruning(spark, monkeypatch):
+    """chunk_rows="auto" prices every candidate with the race the executors
+    run, CART pruning included, whatever tree the driver had installed
+    before, and leaves that tree installed as it found it. Sawtooth turn
+    numbers are where pruning moves bytes (leco_var vs for)."""
+    import pyarrow as pa
+
+    from learn_to_compress_spark import learned
+    from learn_to_compress_spark.jobs.encode import (
+        _CHUNK_META_OVERHEAD,
+        _encode_one_arrow,
+        tune_chunk_rows,
+    )
+
+    rng = np.random.default_rng(0)
+    turn = np.concatenate([np.arange(k) for k in rng.integers(5, 200, 400)])[:16384]
+    tbl = pa.table({"seq": np.arange(turn.size), "turn_idx": turn})
+    df = spark.createDataFrame(tbl.to_pandas())
+    params = learned.var_regressor_params()
+    with learned.var_regressor_installed(params):
+        want = sum(
+            len(_encode_one_arrow(tbl.column(c).slice(s, 8192), "int64")[1])
+            + _CHUNK_META_OVERHEAD
+            for s in (0, 8192) for c in tbl.column_names
+        )
+    for tree in (None, learned.CartRegressor.from_params(params)):
+        monkeypatch.setattr(learned, "_VAR_REG", tree)
+        _, sizes = tune_chunk_rows(df, ("seq",), candidates=(8192,))
+        assert sizes == {8192: want}
+        assert learned._VAR_REG is tree
+
+
 def test_column_pruned_decode(spark, store):
     dec = decode_table(spark, store, columns=["conv_id", "turn_idx"])
     assert dec.columns == ["conv_id", "turn_idx"]
