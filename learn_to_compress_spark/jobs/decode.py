@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
-from ..chunkstore import col_field, load_store_schema, read_chunks
+from ..chunkstore import col_field, load_store_schema, read_chunks, store_colspecs
 
 _SPARK_OF_LOGICAL = {
     "int32": T.IntegerType(),
@@ -27,11 +27,6 @@ _SPARK_OF_LOGICAL = {
     "string": T.StringType(),
     "double": T.DoubleType(),
 }
-
-
-def load_schema(store: str) -> tuple[list[tuple[str, str]], list[str]]:
-    doc = load_store_schema(store)
-    return [tuple(cs) for cs in doc["colspecs"]], doc["key_cols"]
 
 
 def decode_column_arrow(payload: bytes, n: int, logical: str, companion=None):
@@ -84,8 +79,8 @@ def decode_table(
     import pyarrow as pa
 
     doc = load_store_schema(store)
-    all_logical = {cs[0]: cs[1] for cs in (tuple(c) for c in doc["colspecs"])}
-    colspecs, _key_cols = load_schema(store)
+    colspecs = store_colspecs(doc)
+    all_logical = dict(colspecs)
     if columns is not None:
         colspecs = [cs for cs in colspecs if cs[0] in columns]
     out_schema = T.StructType(
@@ -132,6 +127,7 @@ def decode_table(
             *[F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_names],
         ],
         snapshot=snapshot,
+        doc=doc,
     )
     if parts is not None:
         # pushable top-level predicate: parquet row-group stats skip chunk

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..chunkstore import (
+    check_run_id,
     chunk_schema,
     chunks_path,
     col_field,
@@ -697,9 +698,13 @@ def encode_table(
     same input + scan configuration (split count is persisted and
     validated). Default stays the salted shuffle — correct for ANY row
     order, per the north-star skew clause.
+
+    ``run_id`` names the run's ``run_id=<id>`` directory and is quoted into
+    read predicates, so it must match ``[A-Za-z0-9._-]+`` (``ValueError``
+    before anything is written); default: 12 random hex digits.
     """
     spark = df.sparkSession
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = check_run_id(uuid.uuid4().hex[:12] if run_id is None else run_id)
     colspecs = colspecs_of(df)
     logical_of = dict(colspecs)
     stored_doc = _load_schema_doc(store)

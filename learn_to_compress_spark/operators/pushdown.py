@@ -21,8 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..chunkstore import col_field, manifest_totals, read_chunks, read_manifest
-from ..jobs.decode import _SPARK_OF_LOGICAL, _pa_of_logical, decode_column_arrow, load_schema
+from ..chunkstore import (
+    col_field,
+    load_store_schema,
+    manifest_totals,
+    read_chunks,
+    read_manifest,
+    store_colspecs,
+)
+from ..jobs.decode import _SPARK_OF_LOGICAL, _pa_of_logical, decode_column_arrow
 from ..select import (
     column_filter_gt,
     column_filter_mod_band,
@@ -51,12 +58,12 @@ def sum_column(spark: SparkSession, store: str, column: str) -> DataFrame:
     :func:`sum_column_kernel` for that parity path). Timestamp columns sum
     in µs since epoch. decimal(38,0): µs sums overflow int64 at ~5k rows.
     """
-    colspecs, _ = load_schema(store)
-    logical = dict(colspecs)[column]
+    doc = load_store_schema(store)
+    logical = dict(store_colspecs(doc))[column]
     if logical not in _INT_LOGICALS:
         raise ValueError(f"sum_column supports int/timestamp columns, got {logical}")
     chunks = read_chunks(
-        spark, store, leaves=[F.col(f"{col_field(column)}.vsum").alias("partial")]
+        spark, store, leaves=[F.col(f"{col_field(column)}.vsum").alias("partial")], doc=doc
     )
     return chunks.agg(
         F.sum("partial").cast(T.DecimalType(38, 0)).alias(f"sum_{column}")
@@ -69,17 +76,16 @@ def sum_column_kernel(spark: SparkSession, store: str, column: str) -> DataFrame
     ``headers/piecewise_fix_op.h:167-284``) — kept alongside the
     metadata-only :func:`sum_column` as the parity path and as the
     cross-check that ``vsum`` metadata is consistent with the payloads."""
-    from ..chunkstore import load_store_schema
-
-    colspecs, _ = load_schema(store)
-    logical = dict(colspecs)[column]
+    doc = load_store_schema(store)
+    logical_of = dict(store_colspecs(doc))
+    logical = logical_of[column]
     # linked columns need the companion payload leaf for the decode fallback
-    comp_name = (load_store_schema(store).get("linked_cols") or {}).get(column)
-    comp_logical = dict(colspecs).get(comp_name)
+    comp_name = (doc.get("linked_cols") or {}).get(column)
+    comp_logical = logical_of.get(comp_name)
     leaves = [F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("payload")]
     if comp_name:
         leaves.append(F.col(f"{col_field(comp_name)}.payload").alias("comp"))
-    sel = read_chunks(spark, store, leaves=leaves)
+    sel = read_chunks(spark, store, leaves=leaves, doc=doc)
 
     from decimal import Decimal
 
@@ -103,8 +109,7 @@ def sum_column_kernel(spark: SparkSession, store: str, column: str) -> DataFrame
     return partials.agg(F.sum("partial").cast(T.DecimalType(38, 0)).alias(f"sum_{column}"))
 
 
-def _decode_schema(colspecs, names) -> T.StructType:
-    logical_of = dict(colspecs)
+def _decode_schema(logical_of, names) -> T.StructType:
     return T.StructType(
         [T.StructField(n, _SPARK_OF_LOGICAL[logical_of[n]], True) for n in names]
     )
@@ -118,6 +123,7 @@ def _gather_table(
     pos_fn,
     prune=None,
     zone_fields=("zmin", "zmax"),
+    doc: dict | None = None,
 ) -> DataFrame:
     """Shared shape of every projection-under-selection operator:
 
@@ -130,16 +136,15 @@ def _gather_table(
     ``key_col`` may be a LIST of columns (compound predicates): the kernel
     then calls ``pos_fn(payloads, n, logicals, companions)`` with parallel
     lists, and each key column's zone-map leaves ride along as
-    ``_zmin<j>``/``_zmax<j>`` for the caller's prune expression."""
+    ``_zmin<j>``/``_zmax<j>`` for the caller's prune expression. ``doc``:
+    the store's schema doc, when the caller has already loaded it."""
     import pyarrow as pa
-
-    from ..chunkstore import load_store_schema
 
     multi = isinstance(key_col, (list, tuple))
     key_cols = list(key_col) if multi else [key_col]
-    doc = load_store_schema(store)
-    colspecs, _ = load_schema(store)
-    logical_of = dict(colspecs)
+    if doc is None:
+        doc = load_store_schema(store)
+    logical_of = dict(store_colspecs(doc))
     need = list(dict.fromkeys([*key_cols, *out_cols]))
     # linked (correlated-column) frames reference a companion column of the
     # same chunk row — its payload leaf rides along for any linked column
@@ -160,11 +165,11 @@ def _gather_table(
                 F.col(f"{col_field(kc)}.{zone_fields[1]}").alias(f"_zmax{sfx}"),
             ]
             zone_names += [f"_zmin{sfx}", f"_zmax{sfx}"]
-    chunks = read_chunks(spark, store, leaves=leaves + zone_leaves)
+    chunks = read_chunks(spark, store, leaves=leaves + zone_leaves, doc=doc)
     if prune is not None:
         chunks = chunks.filter(prune).drop(*zone_names)
     sel = chunks
-    out_schema = _decode_schema(colspecs, out_cols)
+    out_schema = _decode_schema(logical_of, out_cols)
     pa_types = _pa_of_logical()
     key_logical = logical_of[key_cols[0]]
 
@@ -503,9 +508,11 @@ def topk_table(
     pads it.
     """
     k = int(k)
+    doc = load_store_schema(store)
     meta = read_chunks(
         spark,
         store,
+        doc=doc,
         leaves=[
             F.col(f"{col_field(column)}.zmin").alias("zmin"),
             # the bound must count NON-NULL values (nulls sort last under
@@ -563,7 +570,7 @@ def topk_table(
         order = np.lexsort((bfull[cand], akey[cand], valid[cand]))[-max(k, 1):]
         return np.sort(cand[order])
 
-    df = _gather_table(spark, store, [column, tiebreak], out_cols, pos_fn, prune)
+    df = _gather_table(spark, store, [column, tiebreak], out_cols, pos_fn, prune, doc=doc)
     return df.orderBy(F.col(column).desc(), F.col(tiebreak).desc()).limit(k)
 
 
@@ -702,8 +709,8 @@ def minmax_column(spark: SparkSession, store: str, column: str) -> DataFrame:
     carry null zone maps and are skipped by the aggregate. Output columns:
     ``min_<col>``, ``max_<col>``.
     """
-    colspecs, _ = load_schema(store)
-    logical = dict(colspecs)[column]
+    doc = load_store_schema(store)
+    logical = dict(store_colspecs(doc))[column]
     if logical == "string":
         lo, hi = "zsmin", "zsmax"
         conv = lambda c: c  # noqa: E731
@@ -724,6 +731,7 @@ def minmax_column(spark: SparkSession, store: str, column: str) -> DataFrame:
     chunks = read_chunks(
         spark,
         store,
+        doc=doc,
         leaves=[
             F.col(f"{col_field(column)}.{lo}").alias("_lo"),
             F.col(f"{col_field(column)}.{hi}").alias("_hi"),
@@ -746,13 +754,14 @@ def avg_column(spark: SparkSession, store: str, column: str) -> DataFrame:
     ``nvalid`` and fall back to ``n_rows`` (exact for null-free columns —
     re-encode to upgrade). Output column: ``avg_<col>``.
     """
-    colspecs, _ = load_schema(store)
-    logical = dict(colspecs)[column]
+    doc = load_store_schema(store)
+    logical = dict(store_colspecs(doc))[column]
     if logical not in ("int32", "int64"):
         raise ValueError(f"avg_column supports int columns, got {logical}")
     chunks = read_chunks(
         spark,
         store,
+        doc=doc,
         leaves=[
             F.col(f"{col_field(column)}.vsum").alias("_s"),
             F.coalesce(F.col(f"{col_field(column)}.nvalid"), F.col("n_rows")).alias("_n"),
@@ -783,12 +792,13 @@ def group_count_string_table(spark: SparkSession, store: str, column: str) -> Da
 
     from ..select import column_value_counts_string
 
-    colspecs, _ = load_schema(store)
-    if dict(colspecs)[column] != "string":
+    doc = load_store_schema(store)
+    if dict(store_colspecs(doc))[column] != "string":
         raise ValueError("group_count_string_table supports string columns")
     sel = read_chunks(
         spark,
         store,
+        doc=doc,
         leaves=[F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("p")],
     )
 
@@ -853,10 +863,8 @@ def sum_filtered_column(
     epoch for timestamps). Returns NULL when no qualifying non-null value
     exists (SQL SUM semantics). Output column: ``sum_<column>``.
     """
-    from ..chunkstore import load_store_schema
-
-    colspecs, _ = load_schema(store)
-    logical_of = dict(colspecs)
+    doc = load_store_schema(store)
+    logical_of = dict(store_colspecs(doc))
     if logical_of[column] not in _INT_LOGICALS:
         raise ValueError(f"sum_filtered_column sums int/timestamp columns, got {logical_of[column]}")
     if logical_of[filter_col] not in _INT_LOGICALS:
@@ -880,6 +888,7 @@ def sum_filtered_column(
         read_chunks(
             spark,
             store,
+            doc=doc,
             leaves=[
                 F.col(f"{col_field(column)}.vsum").alias("partial"),
                 F.coalesce(
@@ -893,14 +902,14 @@ def sum_filtered_column(
     )
 
     c_logical, f_logical = logical_of[column], logical_of[filter_col]
-    linked = load_store_schema(store).get("linked_cols") or {}
+    linked = doc.get("linked_cols") or {}
     need = list(dict.fromkeys([filter_col, column]))
     comp_of_name = {t: c for t, c in linked.items() if t in need}
     read_cols = list(dict.fromkeys(need + list(comp_of_name.values())))
     leaves = [F.col("n_rows")] + [
         F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_cols
     ] + [boundary_pred.alias("_keep")]
-    boundary_sel = read_chunks(spark, store, leaves=leaves).filter(F.col("_keep"))
+    boundary_sel = read_chunks(spark, store, leaves=leaves, doc=doc).filter(F.col("_keep"))
 
     from decimal import Decimal
 
@@ -961,23 +970,21 @@ def group_sum_string_table(
     are all null sums to NULL, and null keys form their own group. Output
     columns: ``<key_col>``, ``sum_<val_col>`` (decimal(38,0)).
     """
-    from ..chunkstore import load_store_schema
     from ..select import column_codes_string, column_decode_i64
 
-    colspecs, _ = load_schema(store)
-    logical_of = dict(colspecs)
+    doc = load_store_schema(store)
+    logical_of = dict(store_colspecs(doc))
     if logical_of[key_col] != "string":
         raise ValueError("group_sum_string_table groups by a string column")
     if logical_of[val_col] not in _INT_LOGICALS:
         raise ValueError(f"group_sum_string_table sums int/timestamp columns, got {logical_of[val_col]}")
     v_logical = logical_of[val_col]
-    linked = load_store_schema(store).get("linked_cols") or {}
-    comp_name = linked.get(val_col)
+    comp_name = (doc.get("linked_cols") or {}).get(val_col)
     read_cols = list(dict.fromkeys([key_col, val_col] + ([comp_name] if comp_name else [])))
     leaves = [F.col("n_rows")] + [
         F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_cols
     ]
-    sel = read_chunks(spark, store, leaves=leaves)
+    sel = read_chunks(spark, store, leaves=leaves, doc=doc)
 
     def kernel(batches):
         for pdf in batches:
@@ -1062,12 +1069,13 @@ def count_distinct_string(spark: SparkSession, store: str, column: str) -> DataF
 
     from ..select import column_value_counts_string
 
-    colspecs, _ = load_schema(store)
-    if dict(colspecs)[column] != "string":
+    doc = load_store_schema(store)
+    if dict(store_colspecs(doc))[column] != "string":
         raise ValueError("count_distinct_string supports string columns")
     sel = read_chunks(
         spark,
         store,
+        doc=doc,
         leaves=[F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("p")],
     )
 

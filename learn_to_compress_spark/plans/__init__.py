@@ -1,5 +1,6 @@
 from .checks import (
     explain_text,
+    kernel_partitions,
     pushed_filters,
     scan_read_schema,
     shuffle_exchanges,
@@ -8,6 +9,7 @@ from .checks import (
 
 __all__ = [
     "explain_text",
+    "kernel_partitions",
     "pushed_filters",
     "scan_read_schema",
     "shuffle_exchanges",

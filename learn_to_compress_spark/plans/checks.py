@@ -9,7 +9,8 @@ tests and bench runs can ASSERT the properties instead of assuming them:
 * ``scan_read_schema`` — columns actually read by each scan (payload bytes
   must not be read by metadata-only operators);
 * ``wholestage_codegen_spans`` — how much of the plan runs inside
-  WholeStageCodegen (the JVM fast path).
+  WholeStageCodegen (the JVM fast path);
+* ``kernel_partitions`` — how many tasks feed each Python map kernel.
 """
 
 from __future__ import annotations
@@ -74,3 +75,26 @@ def shuffle_exchanges(df: DataFrame) -> int:
         return len(ids)
     # non-formatted fallback (simple/extended explain text)
     return len(re.findall(r"(?<!Broadcast)(?<!Reused)Exchange ", text))
+
+
+def kernel_partitions(df: DataFrame) -> list[int]:
+    """Partition count of the input of each Python map kernel
+    (``MapInArrow``/``MapInPandas``) in ``df``'s physical plan, in plan
+    order — one Python task per partition. Builds the kernels' input RDDs;
+    runs no Spark job."""
+    out: list[int] = []
+
+    def walk(node) -> None:
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(node.plan())
+        if name in ("MapInArrow", "MapInPandas"):
+            out.append(node.child().execute().getNumPartitions())
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out

@@ -14,6 +14,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from learn_to_compress_spark.chunkstore import (
@@ -199,3 +200,160 @@ def test_manifest_schema_matches_committed_files(spark, tmp_path):
     man = read_manifest(store)
     assert man.schema == MANIFEST_SCHEMA
     assert sum(man.column("n_rows").to_pylist()) == res["rows"] == evens.count()
+
+
+def test_bad_run_id_raises_before_any_write(spark, tmp_path):
+    from learn_to_compress_spark.chunkstore import check_run_id
+
+    for ok in (uuid.uuid4().hex[:12], uuid.uuid4().hex, "append", "stream-0000000042"):
+        assert check_run_id(ok) == ok
+    _df, evens, _odds = _halves(spark)
+    fresh = str(tmp_path / "fresh")
+    store = str(tmp_path / "ids")
+    encode_table(evens, store, num_parts=4, resume=False)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), store), os.path.getmtime(os.path.join(d, f)))
+            for d, _dirs, files in os.walk(store)
+            for f in files
+        )
+
+    before = listing()
+    for bad in ("it's", "a/b", "run_id=x", "", "a b"):
+        for target in (store, fresh):
+            with pytest.raises(ValueError, match="run_id"):
+                encode_table(evens, target, num_parts=4, resume=False, run_id=bad)
+    assert listing() == before
+    assert not os.path.exists(fresh)
+
+
+# --- visibility equivalence: read_chunks vs a brute-force pyarrow read ----
+
+
+def _write_run(store, run_id, parts, rng, next_chunk):
+    """One run's chunk file, laid out as the encode job lays it out
+    (``chunks/run_id=<id>/``, metadata fields only): 1–4 chunks per part.
+    The directory name is spliced verbatim, as stores written before run
+    ids were checked spliced it."""
+    rows = [(p, next_chunk + i) for i, p in enumerate(sorted(parts) * 3) if rng.random() < 0.6]
+    rows += [(p, next_chunk + 3 * len(parts) + j) for j, p in enumerate(sorted(parts))]
+    run_dir = os.path.join(store, "chunks", f"run_id={run_id}")
+    os.makedirs(run_dir)
+    n = len(rows)
+    pq.write_table(
+        pa.table(
+            {
+                "part_id": pa.array([p for p, _ in rows], pa.int32()),
+                "chunk_id": pa.array([c for _, c in rows], pa.int64()),
+                "n_rows": pa.array([10] * n, pa.int32()),
+                "raw_bytes": pa.array([100] * n, pa.int64()),
+                "enc_bytes": pa.array([rng.randrange(1, 50) for _ in range(n)], pa.int64()),
+            }
+        ),
+        os.path.join(run_dir, "part-00000.parquet"),
+    )
+    return next_chunk + 4 * len(parts)
+
+
+def _brute_force(store, pairs):
+    """Every chunk row of the store's chunk files whose (part_id, run_id)
+    is in ``pairs``, as sorted (part_id, chunk_id, run_id) tuples."""
+    root = os.path.join(store, "chunks")
+    got = []
+    for d in os.listdir(root):
+        run = d.split("=", 1)[1]
+        t = pq.read_table(os.path.join(root, d), columns=["part_id", "chunk_id"])
+        got += [
+            (p, c, run)
+            for p, c in zip(t.column("part_id").to_pylist(), t.column("chunk_id").to_pylist())
+            if (p, run) in pairs
+        ]
+    return sorted(got)
+
+
+def _pairs(manifest):
+    return set(zip(manifest.column("part_id").to_pylist(), manifest.column("run_id").to_pylist()))
+
+
+def _scanned(spark, store, snapshot=None):
+    return sorted(
+        (r.part_id, r.chunk_id, r.run_id)
+        for r in read_chunks(spark, store, columns=[], snapshot=snapshot).collect()
+    )
+
+
+def _check(spark, store):
+    """The scan equals the brute-force read; returns the visible runs."""
+    pairs = _pairs(read_manifest(store))
+    assert _scanned(spark, store) == _brute_force(store, pairs)
+    return {r for _p, r in pairs}
+
+
+@pytest.fixture(params=["false", "true"], ids=["escapes", "raw_literals"])
+def string_literals(spark, request):
+    """Both settings of ``spark.sql.parser.escapedStringLiterals``."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, "false")
+
+
+def test_read_chunks_matches_brute_force_visibility(spark, tmp_path, string_literals):
+    """Random multi-run stores: batch runs and appends with overlapping and
+    disjoint part sets, partly committed and staged runs, a compaction
+    version swap, a snapshot, and run ids holding a quote and a backslash.
+    After every step ``read_chunks`` returns exactly the chunk rows whose
+    (part_id, run_id) pair the manifest names, whichever way the SQL parser
+    reads string literals."""
+    import json
+    import random
+
+    from learn_to_compress_spark.chunkstore import (
+        lineage_pointer_path,
+        snapshot_store,
+        write_manifest,
+    )
+
+    legacy = ["o'brien", "back\\slash"]
+    for seed in range(3 if string_literals == "false" else 1):
+        rng = random.Random(seed)
+        store = str(tmp_path / f"vis{seed}")
+        os.makedirs(store)
+        with open(os.path.join(store, "_schema.json"), "w") as fh:
+            json.dump({"colspecs": [["x", "int64"]], "key_cols": ["x"]}, fh)
+        n_parts, chunk, seen = 8, 0, set()
+        ids = [uuid.uuid4().hex[:12] for _ in range(5)] + legacy + ["stream-0000000007"]
+        rng.shuffle(ids)
+        snap = snap_pairs = None
+        for step, run_id in enumerate(ids):
+            if step % 3 == 0:  # overlapping part sets
+                parts = set(rng.sample(range(n_parts), rng.randrange(1, n_parts + 1)))
+            else:  # an append into parts not yet visible, or any if none left
+                free = set(range(n_parts)) - {p for p, _ in _pairs(read_manifest(store))}
+                parts = free or set(rng.sample(range(n_parts), 2))
+            chunk = _write_run(store, run_id, parts, rng, chunk)
+            rows = run_manifest_rows(store, run_id, 0.0)
+            mode = "all" if run_id in legacy else rng.choice(["all", "all", "some", "staged"])
+            if mode == "some":
+                keep = pa.array(rng.sample(sorted(parts), max(1, len(parts) // 2)), pa.int32())
+                rows = rows.filter(pc.is_in(rows.column("part_id"), value_set=keep))
+            if mode != "staged":
+                commit_run(store, rows, run_id)
+            seen |= _check(spark, store)
+            if step == 3:
+                snap = snapshot_store(spark, store)
+                snap_pairs = _pairs(read_manifest(store))
+            if step == 5:
+                # compaction's swap: a new lineage version keeps some parts'
+                # rows and drops the rest, then the pointer moves to it
+                cur = read_manifest(store)
+                victims = pa.array(rng.sample(range(n_parts), 3), pa.int32())
+                kept = cur.filter(pc.invert(pc.is_in(cur.column("part_id"), value_set=victims)))
+                vdir = os.path.join("lineage_v", f"{seed:010d}")
+                write_manifest(os.path.join(store, vdir), kept, "manifest.parquet")
+                with open(lineage_pointer_path(store), "w") as fh:
+                    json.dump({"dir": vdir}, fh)
+                assert _check(spark, store) == {r for _p, r in _pairs(kept)}
+        assert set(legacy) <= seen
+        assert _scanned(spark, store, snapshot=snap) == _brute_force(store, snap_pairs)

@@ -10,6 +10,7 @@ from learn_to_compress_spark.chunkstore import read_lineage
 from learn_to_compress_spark.jobs import decode_table, encode_table
 from learn_to_compress_spark.plans import (
     explain_text,
+    kernel_partitions,
     pushed_filters,
     scan_read_schema,
     shuffle_exchanges,
@@ -325,3 +326,67 @@ def test_topk_prunes_chunks_at_scan(spark, tmp_path):
     assert got[["conv_id", "turn_idx"]].values.tolist() == exp[
         ["conv_id", "turn_idx"]
     ].values.tolist()
+
+
+def _multi_file_store(spark, tmp_path, name):
+    """The 60-conversation store written by four encode tasks (one chunk
+    file each), so Spark's own scan splits it four ways."""
+    store = str(tmp_path / name)
+    encode_table(
+        transcripts_df(spark, 60, parallelism=2), store, num_parts=8, shuffle_width=4
+    )
+    return store
+
+
+def _spark_splits(spark, store):
+    from learn_to_compress_spark.chunkstore import chunks_path
+
+    return spark.read.parquet(chunks_path(store)).rdd.getNumPartitions()
+
+
+def test_small_store_feeds_each_kernel_from_one_partition(spark, tmp_path):
+    """A store below SCAN_TASK_BYTES is one read task: decode, filter> and
+    GROUP BY count each run their Python kernel once, the zone-map and
+    part_id predicates still reach the Parquet scan, and no Exchange
+    appears (one partition already satisfies the GROUP BY)."""
+    from learn_to_compress_spark.operators import filter_gt_table, group_count_string_table
+
+    store = _multi_file_store(spark, tmp_path, "plan_store_small")
+    assert _spark_splits(spark, store) > 1
+    dec = decode_table(spark, store)
+    flt = filter_gt_table(spark, store, "turn_idx", 50, ["conv_id", "turn_idx"])
+    grp = group_count_string_table(spark, store, "role")
+    for df in (dec, flt, grp):
+        assert kernel_partitions(df) == [1], explain_text(df)
+        assert shuffle_exchanges(df) == 0, explain_text(df)
+        assert any(p.startswith("In(part_id") for p in pushed_filters(df)), explain_text(df)
+    assert any("zmax" in p for p in pushed_filters(flt)), explain_text(flt)
+    want = {r.role: r["count"] for r in dec.groupBy("role").count().collect()}
+    assert {r.role: r.cnt for r in grp.collect()} == want
+
+
+def test_scan_partitions_follow_stored_bytes(spark, tmp_path, monkeypatch):
+    """ceil(enc_bytes / SCAN_TASK_BYTES) read tasks, never more than
+    Spark's own split count: a store above the per-task budget keeps more
+    than one partition, and one above the budget times Spark's splits keeps
+    Spark's count."""
+    from learn_to_compress_spark import chunkstore
+    from learn_to_compress_spark.chunkstore import manifest_totals, read_manifest
+    from learn_to_compress_spark.operators import group_count_string_table
+
+    store = _multi_file_store(spark, tmp_path, "plan_store_sized")
+    enc = manifest_totals(read_manifest(store))[2]
+    splits = _spark_splits(spark, store)
+    assert splits > 2
+    monkeypatch.setattr(chunkstore, "SCAN_TASK_BYTES", enc // 2 + 1)
+    assert kernel_partitions(decode_table(spark, store)) == [2]
+    monkeypatch.setattr(chunkstore, "SCAN_TASK_BYTES", 1)
+    df = decode_table(spark, store)
+    assert kernel_partitions(df) == [splits]
+    assert df.count() == manifest_totals(read_manifest(store))[0]
+    # more than one read task: the GROUP BY shuffles its partials again
+    # (an adaptive plan, inspected here after it ran)
+    grp = group_count_string_table(spark, store, "role")
+    assert shuffle_exchanges(grp) == 1, explain_text(grp)
+    assert sum(r.cnt for r in grp.collect()) == manifest_totals(read_manifest(store))[0]
+    assert kernel_partitions(grp) == [splits]
