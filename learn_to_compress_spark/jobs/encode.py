@@ -24,6 +24,7 @@ driver-side state.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -140,7 +141,7 @@ def _encode_one_arrow(
 
     info: dict = {}
     if logical == "string":
-        name, payload = encode_string_column_arrow(col, str_sel)
+        name, payload = encode_string_column_arrow(col, str_sel, memo=memo)
         raw = int(
             pc.sum(pc.binary_length(nonnull.cast(pa.large_binary()))).as_py() or 0
         )
@@ -179,6 +180,13 @@ def _encode_one_arrow(
 #: power-of-two band around the 65Ki default
 CHUNK_ROWS_CANDIDATES = (8192, 16384, 32768, 65536, 131072)
 
+#: rows of the driver sample the chunk-size tuner and the linked probe read;
+#: the race seed reads ``_seed_rows(chunk_rows)``
+TUNE_ROWS = 1 << 17
+PROBE_ROWS = 1 << 15
+
+_INT_LOGICALS = ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
+
 #: approximate per-chunk per-column store overhead (one parquet struct row:
 #: codec name, zone map, sums, offsets) charged to each candidate so tiny
 #: chunks don't win on payload bytes alone
@@ -189,7 +197,8 @@ def tune_chunk_rows(
     df: DataFrame,
     key_cols: tuple[str, ...] = (),
     candidates: tuple[int, ...] = CHUNK_ROWS_CANDIDATES,
-    sample_rows: int = 1 << 17,
+    sample_rows: int = TUNE_ROWS,
+    sample: pd.DataFrame | None = None,
 ) -> tuple[int, dict[int, int]]:
     """Per-table block-size auto-tuner (``headers/search_hyper.h:14``
     ``pick_block_size``, ``headers/search_blocksize.h``): encode a sampled
@@ -199,8 +208,10 @@ def tune_chunk_rows(
     Spark shape: ONE bounded ``limit(sample_rows)`` collect — driver work is
     size-independent at any table scale (the reference samples random blocks
     for the same reason) — then a local key-sort replays the kernel's
-    within-chunk order. Exact pricing, no extrapolation: the sample IS
-    encoded at each candidate. Returns ``(best_chunk_rows,
+    within-chunk order. ``sample``: an already collected sample of every
+    column (``encode_table``'s driver sample), of which the first
+    ``sample_rows`` rows are used instead. Exact pricing, no extrapolation:
+    the sample IS encoded at each candidate. Returns ``(best_chunk_rows,
     {candidate: total_bytes})``.
     """
     import pyarrow as pa
@@ -208,7 +219,9 @@ def tune_chunk_rows(
     from .. import learned
 
     colspecs = colspecs_of(df)
-    pdf = df.limit(int(sample_rows)).toPandas()
+    if sample is None:
+        sample = df.limit(int(sample_rows)).toPandas()
+    pdf = sample.head(int(sample_rows))
     if key_cols:
         pdf = pdf.sort_values(list(key_cols), kind="stable").reset_index(drop=True)
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
@@ -229,42 +242,65 @@ def tune_chunk_rows(
     return best, sizes
 
 
+def _seed_rows(chunk_rows: int) -> int:
+    return min(2 * chunk_rows, TUNE_ROWS)
+
+
+def _int_cols(colspecs) -> list[tuple[str, str]]:
+    return [(n, lg) for n, lg in colspecs if lg in _INT_LOGICALS]
+
+
+def _with_keys(key_cols, cols) -> list[str]:
+    return list(dict.fromkeys([*(k for k in key_cols if k), *cols]))
+
+
+def _sample_head(sample: pd.DataFrame, key_cols, cols, n_rows: int) -> pd.DataFrame:
+    """The first ``n_rows`` rows of the driver sample, key cols + ``cols``,
+    stably sorted by the key cols it holds — the kernel's within-chunk
+    order."""
+    pdf = sample.head(int(n_rows))[_with_keys(key_cols, cols)]
+    sortable = [k for k in key_cols if k in pdf.columns]
+    if sortable:
+        pdf = pdf.sort_values(sortable, kind="stable").reset_index(drop=True)
+    return pdf
+
+
+def _driver_sample(df: DataFrame, key_cols, colspecs, n_rows: int, all_cols: bool):
+    """``encode_table``'s one bounded driver collect: the first ``n_rows``
+    rows of every column (for the chunk-size tuner) or of the key and
+    int/timestamp columns only (race seed, linked probe), so a text column
+    ships only when the tuner prices it."""
+    cols = df.columns if all_cols else _with_keys(key_cols, [n for n, _ in _int_cols(colspecs)])
+    return df.select(*cols).limit(int(n_rows)).toPandas()
+
+
 def _sample_race_seed(
-    df: DataFrame,
+    sample: pd.DataFrame,
     key_cols: tuple[str, ...],
     colspecs,
     chunk_rows: int,
-    sample_rows: int | None = None,
 ) -> dict[str, dict]:
-    """Driver-side pre-seeding of the per-column race memos: encode TWO
-    sampled chunks per int column and pre-bench every race leg
-    (``select.RACE_LEGS``) that lost on all of them.
+    """Driver-side pre-seeding of the per-column race memos: encode the
+    first ``_seed_rows(chunk_rows)`` rows of the driver sample, in
+    ``chunk_rows`` chunks, per int/timestamp column and pre-bench every race
+    leg (``select.RACE_LEGS``) that lost on every one of those chunks (one
+    or two of them; a sample shorter than a chunk is one chunk).
 
     Shipped into the encode kernel, the seed makes adaptive race pruning
     effective even when a task sees only one or two chunks of a column
     (small jobs / many-partition layouts) — at scale the per-worker
     ``RACE_RECHECK`` re-race still corrects a sample that under-represents
-    a late distribution shift. Only int/timestamp columns sample (string
-    races are sampling-based already), so the bounded ``limit().toPandas``
-    collect never ships a text column."""
+    a late distribution shift. String columns are not seeded: the kernel
+    benches FSST after a column's first lost race, so a task's first chunk
+    is its own seed, and the sample never ships a text column for it."""
     import pyarrow as pa
 
     from ..select import RACE_PATIENCE
 
-    int_cols = [
-        (n, lg) for n, lg in colspecs
-        if lg in ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
-    ]
-    if not int_cols:
-        return {}
-    take = list(dict.fromkeys([*(k for k in key_cols if k), *(n for n, _ in int_cols)]))
-    n_rows = sample_rows if sample_rows is not None else min(2 * chunk_rows, 1 << 17)
-    pdf = df.select(*take).limit(int(n_rows)).toPandas()
+    int_cols = _int_cols(colspecs)
+    pdf = _sample_head(sample, key_cols, [n for n, _ in int_cols], _seed_rows(chunk_rows))
     if not len(pdf):
         return {}
-    sortable = [k for k in key_cols if k in pdf.columns]
-    if sortable:
-        pdf = pdf.sort_values(sortable, kind="stable").reset_index(drop=True)
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     seed: dict[str, dict] = {}
     for name, logical in int_cols:
@@ -284,17 +320,17 @@ def _sample_race_seed(
 
 
 def _propose_linked_cols(
-    df: DataFrame,
+    sample: pd.DataFrame,
     key_cols: tuple[str, ...],
     colspecs,
-    sample_rows: int = 1 << 15,
     margin: float = 0.7,
 ) -> dict[str, str] | None:
     """Sampled group-correlation probe — auto-detect companion columns for
     the linked codec (the reference's colcor mode is driven by a caller-set
     group-correlation flag,
-    ``piecewise_cost_merge_integer_template_link_colcor.h:634``; here a
-    bounded driver sample proposes the map instead of the user).
+    ``piecewise_cost_merge_integer_template_link_colcor.h:634``; here the
+    first ``PROBE_ROWS`` rows of the bounded driver sample propose the map
+    instead of the user).
 
     For every ordered pair of null-free int/timestamp columns the probe
     compares an O(n) ANALYTIC size of the linked residual stream (centered
@@ -309,19 +345,10 @@ def _propose_linked_cols(
     from ..codecs.base import preds_castable
     from ..select import int_codec_sizes
 
-    int_cols = [
-        (n, lg) for n, lg in colspecs
-        if lg in ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
-    ]
-    if len(int_cols) < 2:
-        return None
-    take = list(dict.fromkeys([*(k for k in key_cols if k), *(n for n, _ in int_cols)]))
-    pdf = df.select(*take).limit(int(sample_rows)).toPandas()
+    int_cols = _int_cols(colspecs)
+    pdf = _sample_head(sample, key_cols, [n for n, _ in int_cols], PROBE_ROWS)
     if len(pdf) < 1024:
         return None  # too small to trust a correlation
-    sortable = [k for k in key_cols if k in pdf.columns]
-    if sortable:
-        pdf = pdf.sort_values(sortable, kind="stable").reset_index(drop=True)
     arrs: dict[str, np.ndarray] = {}
     for name, logical in int_cols:
         s = pdf[name]
@@ -407,10 +434,12 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
             install_var_regressor(var_model)
         seqs: dict[int, int] = {}
         # per-column race memos live for the whole partition: adaptive
-        # candidate pruning amortizes the race legs (select.RACE_LEGS)
-        # across a column's chunks (select.RACE_PATIENCE). The
-        # driver-side sample seed pre-benches candidates that lost on every
-        # sampled chunk (the RECHECK re-race still runs per worker).
+        # candidate pruning amortizes the int race legs (select.RACE_LEGS)
+        # and the string race's FSST across a column's chunks
+        # (select.RACE_PATIENCE). The driver-side sample seed pre-benches
+        # int legs that lost on every sampled chunk; a string column's first
+        # chunk here is its own seed (the RECHECK re-race still runs per
+        # worker).
         race_memos: dict[str, dict] = {
             name: dict(race_seed.get(name, {})) for name, _ in colspecs
         }
@@ -702,26 +731,55 @@ def encode_table(
     ``run_id`` names the run's ``run_id=<id>`` directory and is quoted into
     read predicates, so it must match ``[A-Za-z0-9._-]+`` (``ValueError``
     before anything is written); default: 12 random hex digits.
+
+    The metrics split the call's wall into three phases: ``prep_s`` (driver
+    work before the job — the one driver sample, chunk-size tuner, linked
+    probe, race seed, schema and resume bookkeeping), ``wall_ms`` (the
+    encode job, in ms) and ``commit_s`` (the run's manifest rows and the
+    lineage commit).
     """
+    t_call = time.monotonic()
     spark = df.sparkSession
     run_id = check_run_id(uuid.uuid4().hex[:12] if run_id is None else run_id)
     colspecs = colspecs_of(df)
     logical_of = dict(colspecs)
+    int_cols = _int_cols(colspecs)
     stored_doc = _load_schema_doc(store)
     if linked_cols is None and stored_doc is not None:
         linked_cols = stored_doc.get("linked_cols")  # resume reuses the map
-    if linked_cols is None and stored_doc is None and selection == "exact":
-        # colcor auto-detect: propose the map from a bounded driver sample
-        # (see _propose_linked_cols). Only on FIRST encode of a store —
-        # appends/resumes reuse the persisted map, keeping the store's
-        # codec identity stable.
-        linked_cols = _propose_linked_cols(df, key_cols, colspecs)
+    # colcor auto-detect (see _propose_linked_cols) only on the FIRST encode
+    # of a store — appends/resumes reuse the persisted map, keeping the
+    # store's codec identity stable
+    probe = (
+        linked_cols is None and stored_doc is None and selection == "exact"
+        and len(int_cols) >= 2
+    )
+    # block-size auto-tuning (operator: pick_block_size): a resumed/appended
+    # store reuses its persisted choice — chunk sizing is part of the
+    # store's identity for reproducible re-encodes
+    tune = chunk_rows == "auto" and "chunk_rows" not in (stored_doc or {})
+    if chunk_rows == "auto" and not tune:
+        chunk_rows = int(stored_doc["chunk_rows"])
+    seed = selection == "exact" and bool(int_cols)
+    # ONE bounded driver collect feeds the tuner, the linked probe and the
+    # race seed; each reads the first rows it needs. A tuned chunk size
+    # seeds from at most TUNE_ROWS rows. Collected on first use, so a
+    # resume no-op collects nothing.
+    n_rows = max(
+        TUNE_ROWS if tune else 0,
+        PROBE_ROWS if probe else 0,
+        _seed_rows(int(chunk_rows)) if seed and not tune else 0,
+    )
+    sample = functools.cache(
+        lambda: _driver_sample(df, key_cols, colspecs, n_rows, all_cols=tune)
+    )
+    if probe:
+        linked_cols = _propose_linked_cols(sample(), key_cols, colspecs)
     if linked_cols:
-        intish = {"int32", "int64", "timestamp_us", "timestamp_ntz_us"}
         for tgt, comp in linked_cols.items():
             if tgt == comp or tgt not in logical_of or comp not in logical_of:
                 raise ValueError(f"linked_cols: bad pair {tgt!r} -> {comp!r}")
-            if logical_of[tgt] not in intish or logical_of[comp] not in intish:
+            if logical_of[tgt] not in _INT_LOGICALS or logical_of[comp] not in _INT_LOGICALS:
                 raise ValueError(
                     f"linked_cols: {tgt!r}/{comp!r} must be int/timestamp columns"
                 )
@@ -730,15 +788,8 @@ def encode_table(
                     f"linked_cols: companion {comp!r} cannot itself be a target"
                 )
     tune_sizes: dict[int, int] | None = None
-    if chunk_rows == "auto":
-        # block-size auto-tuning (operator: pick_block_size): a resumed/
-        # appended store reuses its persisted choice — chunk sizing is part
-        # of the store's identity for reproducible re-encodes
-        stored = _load_schema_doc(store)
-        if stored is not None and "chunk_rows" in stored:
-            chunk_rows = int(stored["chunk_rows"])
-        else:
-            chunk_rows, tune_sizes = tune_chunk_rows(df, key_cols)
+    if tune:
+        chunk_rows, tune_sizes = tune_chunk_rows(df, key_cols, sample=sample())
     chunk_rows = int(chunk_rows)
     restore_conf: dict | None = None
     # the Arrow bridge caps mapInArrow batches at maxRecordsPerBatch — a
@@ -793,6 +844,8 @@ def encode_table(
             return {
                 "run_id": None,
                 "wall_ms": 0.0,
+                "prep_s": time.monotonic() - t_call,
+                "commit_s": 0.0,
                 "rows": rows,
                 "raw_bytes": raw,
                 "enc_bytes": enc,
@@ -815,8 +868,9 @@ def encode_table(
         from .. import learned
 
         var_model = learned.var_regressor_params()
-        with learned.var_regressor_installed(var_model):
-            race_seed = _sample_race_seed(df, key_cols, colspecs, chunk_rows)
+        if seed:
+            with learned.var_regressor_installed(var_model):
+                race_seed = _sample_race_seed(sample(), key_cols, colspecs, chunk_rows)
 
     t0 = time.monotonic()
     if presorted:
@@ -852,7 +906,8 @@ def encode_table(
         if restore_conf:
             for key, val in restore_conf.items():
                 spark.conf.set(key, val)
-    wall_ms = (time.monotonic() - t0) * 1000
+    t1 = time.monotonic()
+    wall_ms = (t1 - t0) * 1000
 
     # lineage commit, on the driver: per-part metrics from the run's own
     # files (top-level fields only), then one atomic manifest file
@@ -865,6 +920,8 @@ def encode_table(
         return {
             "run_id": run_id,
             "wall_ms": wall_ms,
+            "prep_s": t0 - t_call,
+            "commit_s": time.monotonic() - t1,
             "rows": rows,
             "raw_bytes": raw,
             "enc_bytes": enc,
@@ -879,6 +936,8 @@ def encode_table(
     return {
         "run_id": run_id,
         "wall_ms": wall_ms,
+        "prep_s": t0 - t_call,
+        "commit_s": time.monotonic() - t1,
         "rows": rows,
         "raw_bytes": raw,
         "enc_bytes": enc,

@@ -160,7 +160,9 @@ def _pick_int_codec(vals: np.ndarray, dtype) -> str:
 
 # Adaptive race pruning (per-column, inside one encode kernel): a race leg
 # (``RACE_LEGS``) that lost its last RACE_PATIENCE eligible races on a
-# column is benched and re-tried once every RACE_RECHECK eligible chunks —
+# column — or FSST in the string race after a single loss
+# (``_pick_string_codec``) — is benched and re-tried once every RACE_RECHECK
+# eligible chunks —
 # the streaming analogue of the reference's sampled per-method selection
 # (``experiments/best_compress.cpp:59-86`` benchmarks candidates on sample
 # blocks, then fixes the method).
@@ -369,7 +371,7 @@ def decode_int_column(payload: bytes, n: int, logical: str, companion=None):
     return pd.Series(out)
 
 
-def _pick_string_codec(arr) -> tuple[str, bytes | None]:
+def _pick_string_codec(arr, memo=None) -> tuple[str, bytes | None]:
     """Race the string codecs on the chunk (or, past 2048 rows, on a
     ``STR_SAMPLE_ROWS`` sample) → ``(winner, payload)``.
 
@@ -382,7 +384,16 @@ def _pick_string_codec(arr) -> tuple[str, bytes | None]:
     after it, i.e. smaller than ``min(earlier sizes, later sizes + 1)``.
     ``FsstStringCodec.encode`` returns ``None`` — often before finishing,
     or even training — exactly when it does not get under that cap, so the
-    winner is the one a full FSST encode would give."""
+    winner is the one a full FSST encode would give.
+
+    ``memo``: the column's race memo (see ``RACE_PATIENCE``), or None for the
+    exhaustive race. FSST's symbol-table training costs several times the
+    rest of the race, so one loss benches it at once — the memo entry
+    becomes ``(RACE_PATIENCE, 0)``, the state a driver-seeded int leg starts
+    in, with the column's first chunk as the seed — and it is re-raced every
+    ``RACE_RECHECK`` chunks; a win keeps it racing. While FSST is benched
+    the winner is the first smallest of the other candidates; on every chunk
+    where it races, the winner and bytes are the exhaustive race's."""
     import pyarrow as pa
 
     cands = [DictStringCodec(), WordDictCodec(), FsstStringCodec(), StrRawCodec()]
@@ -429,22 +440,29 @@ def _pick_string_codec(arr) -> tuple[str, bytes | None]:
     cap = min(
         (len(v) + (k not in before) for k, v in payloads.items()), default=None
     )
-    fsst = cands[fsst_at].encode(race, cap=cap)
+    raced = _race_allowed(memo, "fsst")
+    fsst = cands[fsst_at].encode(race, cap=cap) if raced else None
     if fsst is not None:  # under the cap: FSST beats every other candidate
+        _race_record(memo, "fsst", True)
         name = "fsst"
         payloads[name] = fsst
     else:  # dicts keep insertion (= candidate-list) order
+        if raced and memo is not None:
+            memo["fsst"] = (RACE_PATIENCE, 0)  # one loss benches FSST
         name = min(payloads, key=lambda k: len(payloads[k]))
     return name, payloads[name] if full else None
 
 
-def encode_string_column_arrow(arr, selection: str = "exact") -> tuple[str, bytes]:
+def encode_string_column_arrow(
+    arr, selection: str = "exact", memo=None
+) -> tuple[str, bytes]:
     """Arrow-native framing: the column never touches Python objects.
 
     ``selection="force:<codec>"`` pins a string codec for every chunk (the
     per-codec verification seam). A forced LeCo rung falls back to the
-    normal race on chunks outside its eligibility domain — correctness
-    always wins over the pin."""
+    exhaustive race on chunks outside its eligibility domain — correctness
+    always wins over the pin. ``memo``: the column's race memo for the
+    exact race (see ``_pick_string_codec``)."""
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):
@@ -466,7 +484,7 @@ def encode_string_column_arrow(arr, selection: str = "exact") -> tuple[str, byte
         ) and not STRING_CODEC_CLASSES[name].eligible(nonnull):
             name, payload = _pick_string_codec(nonnull)
     else:
-        name, payload = _pick_string_codec(nonnull)
+        name, payload = _pick_string_codec(nonnull, memo)
     if payload is None:
         payload = STRING_CODEC_CLASSES[name]().encode(nonnull)
     parts = [bytes([flags])]

@@ -12,6 +12,7 @@ chunk costs.
 from __future__ import annotations
 
 import collections
+import contextlib
 import hashlib
 
 import numpy as np
@@ -32,6 +33,7 @@ from learn_to_compress_spark.codecs.strings import (
 from learn_to_compress_spark.codecs.strings_outlier import LecoStringOutlierCodec
 from learn_to_compress_spark.codecs.strings_wide import LecoStringWideCodec
 from learn_to_compress_spark.select import (
+    RACE_RECHECK,
     STR_SAMPLE_ROWS,
     STRING_CODEC_IDS,
     _sample_slices,
@@ -95,16 +97,18 @@ def _rung(nonnull: pa.Array) -> list:
     return []
 
 
-def _brute_force(arr: pa.Array) -> tuple[str, bytes]:
+def _brute_force(arr: pa.Array, fsst: bool = True) -> tuple[str, bytes]:
     """Reference race: every candidate encoded in full (on the chunk, or on
     the sample past ``FULL_RACE_ROWS``), first minimum in list order wins,
-    then the framing around the winner's full-chunk encode."""
+    then the framing around the winner's full-chunk encode. ``fsst=False``
+    leaves FSST out of the race."""
     nonnull = arr.drop_null().cast(pa.large_binary())
     n = len(nonnull)
     if n == 0:
         name, inner = "str_raw", b""
     else:
         cands = [DictStringCodec, WordDictCodec, FsstStringCodec, StrRawCodec]
+        cands = [c for c in cands if fsst or c is not FsstStringCodec]
         cands += _rung(nonnull)
         race, scale = nonnull, 1.0
         if n > FULL_RACE_ROWS:
@@ -315,3 +319,73 @@ def test_sample_race_then_one_full_encode(kind, encode_calls):
     assert set(counts.values()) == {1}
     assert {"str_dict", "word_dict", "fsst", "str_raw"} <= set(counts)
     assert last == (name, n)
+
+
+# ---------------------------------------------------------------------------
+# race memo: FSST is benched after one loss
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _fsst_calls():
+    """Number of ``FsstStringCodec.encode`` calls so far, as a one-item list."""
+    calls = [0]
+    orig = FsstStringCodec.encode
+
+    def encode(self, strs, *a, **kw):
+        calls[0] += 1
+        return orig(self, strs, *a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(FsstStringCodec, "encode", encode)
+        yield calls
+
+
+def _chunks(kind: str, count: int, n: int = 200) -> list[pa.Array]:
+    return [_column(_rows(kind, n, seed), 0.1, seed) for seed in range(count)]
+
+
+def test_memo_benches_fsst_after_a_loss():
+    """On a column where FSST always loses it races on the first chunk and
+    then once every RACE_RECHECK chunks, with the exhaustive race's bytes."""
+    chunks = _chunks("words", 40)
+    with _fsst_calls() as calls:
+        exhaustive = [encode_string_column_arrow(c) for c in chunks]
+        assert calls[0] == 40 and {n for n, _ in exhaustive} == {"word_dict"}
+        calls[0] = 0
+        memo: dict = {}
+        assert [encode_string_column_arrow(c, memo=memo) for c in chunks] == exhaustive
+        assert 1 < calls[0] <= 1 + 40 // RACE_RECHECK + 1
+
+
+def test_memo_keeps_racing_a_winning_fsst():
+    chunks = _chunks("urls", 20)
+    memo: dict = {}
+    with _fsst_calls() as calls:
+        memoized = [encode_string_column_arrow(c, memo=memo) for c in chunks]
+        assert calls[0] == 20
+    assert memoized == [encode_string_column_arrow(c) for c in chunks]
+    assert {n for n, _ in memoized} == {"fsst"}
+
+
+CHUNK = st.tuples(
+    st.sampled_from(["urls", "urls", "words", "words", "lowcard", "ids", "random"]),
+    st.one_of(st.integers(1, 200), st.integers(FULL_RACE_ROWS + 1, 2300)),
+    st.integers(0, 2**16),
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(seq=st.lists(CHUNK, min_size=1, max_size=RACE_RECHECK + 4))
+def test_memo_race_matches_brute_force(seq):
+    """Over a sequence of mixed chunks sharing one memo, each winner is the
+    exhaustive race's when FSST raced on the chunk, else the first smallest
+    of the other candidates."""
+    memo: dict = {}
+    with _fsst_calls() as calls:
+        for kind, n, seed in seq:
+            arr = _column(_rows(kind, n, seed), 0.1, seed)
+            before = calls[0]
+            got = encode_string_column_arrow(arr, memo=memo)
+            raced = calls[0] > before
+            assert got == _brute_force(arr, fsst=raced)
