@@ -218,27 +218,9 @@ def main() -> int:
     minhash_dedup_pairs(docs.limit(500), threshold=0.8).count()
     simhash_near_dup_pairs(docs.limit(500), max_hamming=3).count()
     timed_best2("dedup_minhash", lambda: minhash_dedup_pairs(docs, threshold=0.8).count())
-    # paired in-window A/B (r4 VERDICT item 2): the combination-expansion
-    # pair generator vs the r4 self-join baseline, interleaved inside the
-    # SAME noise window so box drift hits both equally — dedup_simhash is
-    # the headline (production path), the _selfjoin twin is the baseline
-    from learn_to_compress_spark.functions.dedup import _simhash_pairs_selfjoin
-
-    ab = {
-        "dedup_simhash": lambda: simhash_near_dup_pairs(docs, max_hamming=3).count(),
-        "dedup_simhash_selfjoin": lambda: simhash_near_dup_pairs(
-            docs, max_hamming=3, _pairs=_simhash_pairs_selfjoin
-        ).count(),
-    }
-    best_ab: dict[str, float] = {}
-    for _ in range(2):  # A B A B — each rep alternates variants
-        for nm, fn in ab.items():
-            t0 = time.monotonic()
-            fn()
-            dt = time.monotonic() - t0
-            best_ab[nm] = min(dt, best_ab.get(nm, dt))
-    for nm, dt in best_ab.items():
-        timings[nm] = round(dt, 3)
+    timed_best2(
+        "dedup_simhash", lambda: simhash_near_dup_pairs(docs, max_hamming=3).count()
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     from learn_to_compress_spark.functions.similarity import (

@@ -1,79 +1,21 @@
-"""Two-parallelism scaling evidence (north rule: ≥0.8 throughput scaling
-efficiency from N to 4N executors, evidenced in-sandbox by running the SAME
-job at local[N] and local[4N] on the SAME materialized input).
+"""Engine-free drift probe: a fixed single-thread chunk encode, no Spark.
 
-Writes BENCH/BASELINE.md with rows/s at both levels and
-``efficiency = (rate_4N / rate_N) / 4``.
-
-Usage: python bench_scaling.py [n_convs] [N]   (defaults 120000, 8)
+``_probe_work(seed)`` encodes 65,536 transcript turns (four columns) once
+to warm the process, then once timed, and returns the timed seconds. A
+bench divides a query wall by the probe's ratio between two runs to
+compare them across a shared box's drift; ``bench.py`` and perfbench's
+traced runs call it. The two-parallelism scaling runs this file once held
+are kept as history in ``BENCH/BASELINE.md``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-
-NUM_PARTS = 128  # identical plan at both parallelism levels
-
-
-def run_job(master: str, input_path: str, store: str) -> dict:
-    """One fresh session at ``master``: full warm pass (untimed), then one
-    timed encode + decode pass."""
-    from learn_to_compress_spark.jobs import decode_table, encode_table
-    from learn_to_compress_spark.sources.session import get_spark
-
-    spark = get_spark(master, shuffle_partitions=NUM_PARTS)
-    try:
-        df = spark.read.parquet(input_path)
-        # warm pass: one full untimed encode+decode. Every python worker
-        # faults in its complete buffer pools (this VM's first-touch page
-        # faults run ~140 µs/page and serialize across processes); a
-        # long-running cluster pays this once per executor lifetime, so the
-        # timed pass below measures steady state. Identical at both levels.
-        encode_table(
-            df, store + "_warm", resume=False, num_parts=NUM_PARTS, shuffle_width=64
-        )
-        decode_table(spark, store + "_warm").count()
-        t0 = time.monotonic()
-        # 64 output files (shuffle_width): decode is map-only over the store
-        # files, so the file count IS its task count — 64 gives local[32]
-        # two balanced waves instead of one straggler-bound wave
-        m = encode_table(df, store, resume=False, num_parts=NUM_PARTS, shuffle_width=64)
-        t_enc = time.monotonic() - t0
-        t0 = time.monotonic()
-        n = decode_table(spark, store).count()
-        t_dec = time.monotonic() - t0
-        assert n == m["rows"], (n, m["rows"])
-        # presorted fast path (input is conv-clustered): scan → map → write,
-        # zero shuffle — the locality plan a real transcript table gets
-        t0 = time.monotonic()
-        mp_ = encode_table(df, store + "_presorted", resume=False, presorted=True)
-        t_enc_p = time.monotonic() - t0
-        assert mp_["rows"] == m["rows"]
-        return {
-            "master": master,
-            "rows": m["rows"],
-            "raw_bytes": m["raw_bytes"],
-            "enc_bytes": m["enc_bytes"],
-            "ratio": m["ratio"],
-            "encode_sec": round(t_enc, 2),
-            "decode_sec": round(t_dec, 2),
-            "encode_rows_per_sec": round(m["rows"] / t_enc),
-            "decode_rows_per_sec": round(n / t_dec),
-            "encode_mb_per_sec": round(m["raw_bytes"] / t_enc / 1e6, 1),
-            "presorted_encode_sec": round(t_enc_p, 2),
-            "presorted_encode_rows_per_sec": round(m["rows"] / t_enc_p),
-        }
-    finally:
-        spark.stop()
 
 
 def _probe_work(seed):
@@ -103,260 +45,3 @@ def _probe_work(seed):
     for name, logical in cols:
         _encode_one(pdf[name], logical)
     return time.monotonic() - t0
-
-
-def _probe_decode_work(seed):
-    import pandas as pd
-
-    from learn_to_compress_spark.jobs.decode import decode_column_arrow
-    from learn_to_compress_spark.jobs.encode import _encode_one
-    from learn_to_compress_spark.sources.session import tune_malloc
-    from learn_to_compress_spark.sources.transcripts import conv_turns
-
-    tune_malloc()
-    pdf = pd.concat(
-        [conv_turns(i) for i in range(seed * 50, seed * 50 + 900)],
-        ignore_index=True,
-    ).iloc[:65536]
-    cols = [
-        ("turn_idx", "int32"),
-        ("text", "string"),
-        ("ts", "timestamp_us"),
-        ("role", "string"),
-    ]
-    encoded = [
-        (_encode_one(pdf[name], logical)[1], logical) for name, logical in cols
-    ]
-    n = len(pdf)
-    for payload, logical in encoded:  # warm
-        decode_column_arrow(payload, n, logical)
-    t0 = time.monotonic()
-    for payload, logical in encoded:
-        decode_column_arrow(payload, n, logical)
-    return time.monotonic() - t0
-
-
-def hardware_probe(work=_probe_work) -> dict:
-    """Engine-free kernel scaling: the pure chunk-encode/decode kernel under
-    plain multiprocessing. Separates the box's SMT/memory-bandwidth ceiling
-    from any Spark-plan serialization — if this probe caps at X, no job on
-    this box can scale past X."""
-    import multiprocessing as mp
-
-    out = {}
-    for k in (1, 2, 8, 32):
-        best = 0.0
-        for _rep in range(3):  # best-of-3: the probe itself suffers VM noise
-            with mp.Pool(k) as pool:
-                times = pool.map(work, range(k))
-            # each process timed ONE warmed chunk op, all k concurrent:
-            # aggregate throughput = k / slowest (spawn/import/warm excluded)
-            best = max(best, k / max(times))
-        out[k] = round(best, 2)  # chunks/s
-    return out
-
-
-def main() -> int:
-    n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
-    n_small = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    n_big = 4 * n_small
-
-    # input, chunk stores and shuffle all live on tmpfs: this box has ONE
-    # disk shared by both parallelism levels, while on a real cluster 4N
-    # executors bring 4N local disks — tmpfs keeps the shared-disk ceiling
-    # from masquerading as an engine scaling limit (documented in the report)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    work = tempfile.mkdtemp(prefix="ltc_scaling_", dir=base)
-    os.environ["SPARK_GRAFT_LOCAL_DIR"] = os.path.join(work, "spark_local")
-    input_path = os.path.join(work, "input")
-
-    # materialize the input once so both runs read identical bytes
-    from learn_to_compress_spark.sources.session import get_spark
-    from learn_to_compress_spark.sources.transcripts import transcripts_df
-
-    spark = get_spark(f"local[{n_big}]")
-    transcripts_df(spark, n_convs).write.mode("overwrite").parquet(input_path)
-    spark.stop()
-
-    # INTERLEAVED rounds: this shared VM's throughput drifts ~1.7× across
-    # ~10-minute noise windows (CPU steal), so measuring the two levels in
-    # disjoint windows corrupts the ratio. Alternating small/big rounds
-    # back-to-back puts both levels in the same windows; the per-level best
-    # across rounds is the least-contaminated estimate on each side.
-    rounds = int(os.environ.get("LTC_SCALING_ROUNDS", "2"))
-    passes_small, passes_big = [], []
-    for r in range(rounds):
-        passes_small.append(
-            run_job(f"local[{n_small}]", input_path, os.path.join(work, f"s{r}_small"))
-        )
-        passes_big.append(
-            run_job(f"local[{n_big}]", input_path, os.path.join(work, f"s{r}_big"))
-        )
-        for d in (f"s{r}_small", f"s{r}_small_warm", f"s{r}_big", f"s{r}_big_warm",
-                  f"s{r}_small_presorted", f"s{r}_big_presorted"):
-            shutil.rmtree(os.path.join(work, d), ignore_errors=True)
-    r_small = min(passes_small, key=lambda p: p["encode_sec"])
-    r_big = min(passes_big, key=lambda p: p["encode_sec"])
-    # decode best can come from a different round than encode best
-    r_small = {**r_small,
-               "decode_sec": min(p["decode_sec"] for p in passes_small),
-               "decode_rows_per_sec": max(p["decode_rows_per_sec"] for p in passes_small),
-               "presorted_encode_sec": min(p["presorted_encode_sec"] for p in passes_small),
-               "presorted_encode_rows_per_sec": max(p["presorted_encode_rows_per_sec"] for p in passes_small)}
-    r_big = {**r_big,
-             "decode_sec": min(p["decode_sec"] for p in passes_big),
-             "decode_rows_per_sec": max(p["decode_rows_per_sec"] for p in passes_big),
-             "presorted_encode_sec": min(p["presorted_encode_sec"] for p in passes_big),
-             "presorted_encode_rows_per_sec": max(p["presorted_encode_rows_per_sec"] for p in passes_big)}
-    hw = hardware_probe()
-    hw_dec = hardware_probe(_probe_decode_work)
-
-    def eff(key: str) -> float:
-        return round(r_big[key] / r_small[key] / (n_big / n_small), 3)
-
-    # per-round paired efficiencies: each round runs the two levels
-    # back-to-back inside the same noise window, so the pairing cancels the
-    # drift that corrupts cross-round ratios on this shared VM
-    ratio = n_big / n_small
-    round_effs = [
-        {
-            "encode": round(ps["encode_sec"] / pb["encode_sec"] / ratio, 3),
-            "decode": round(ps["decode_sec"] / pb["decode_sec"] / ratio, 3),
-            "presorted_encode": round(
-                ps["presorted_encode_sec"] / pb["presorted_encode_sec"] / ratio, 3
-            ),
-        }
-        for ps, pb in zip(passes_small, passes_big)
-    ]
-    enc_eff = max(eff("encode_rows_per_sec"), max(r["encode"] for r in round_effs))
-    dec_eff = max(eff("decode_rows_per_sec"), max(r["decode"] for r in round_effs))
-    enc_p_eff = max(
-        eff("presorted_encode_rows_per_sec"),
-        max(r["presorted_encode"] for r in round_effs),
-    )
-    # kernel ceilings at the SAME two levels as the job measurement
-    ks, kb = n_small, n_big
-    hw_enc = round(hw[kb] / hw[ks] / ratio, 3)
-    hw_dec_c = round(hw_dec[kb] / hw_dec[ks] / ratio, 3)
-    report = {
-        "n_convs": n_convs,
-        "rows": r_small["rows"],
-        "small": r_small,
-        "big": r_big,
-        "passes_small": passes_small,
-        "passes_big": passes_big,
-        "round_efficiencies": round_effs,
-        "encode_scaling_efficiency": enc_eff,
-        "decode_scaling_efficiency": dec_eff,
-        "presorted_encode_scaling_efficiency": enc_p_eff,
-        "hardware_probe_chunks_per_sec": hw,
-        "hardware_probe_decode_chunks_per_sec": hw_dec,
-        "hw_ceiling_encode": hw_enc,
-        "hw_ceiling_decode": hw_dec_c,
-        "engine_relative_encode": round(enc_eff / hw_enc, 3) if hw_enc else None,
-        "engine_relative_decode": round(dec_eff / hw_dec_c, 3) if hw_dec_c else None,
-    }
-    print(json.dumps(report))
-
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    md = f"""# BENCH/BASELINE — scaling + throughput evidence
-
-North-rule criterion: ≥ 0.8 throughput scaling efficiency from N to 4N
-executors. In-sandbox evidence: the identical encode+decode job (same
-materialized parquet input, {r_small['rows']:,} transcript turns,
-{r_small['raw_bytes']/1e6:.0f} MB raw) run at `local[{n_small}]` and
-`local[{n_big}]`.
-
-| parallelism | encode rows/s | decode rows/s | encode MB/s | encode s | decode s |
-|---|---|---|---|---|---|
-| local[{n_small}] | {r_small['encode_rows_per_sec']:,} | {r_small['decode_rows_per_sec']:,} | {r_small['encode_mb_per_sec']} | {r_small['encode_sec']} | {r_small['decode_sec']} |
-| local[{n_big}] | {r_big['encode_rows_per_sec']:,} | {r_big['decode_rows_per_sec']:,} | {r_big['encode_mb_per_sec']} | {r_big['encode_sec']} | {r_big['decode_sec']} |
-
-**Scaling efficiency (rate_{n_big} / rate_{n_small}) / {n_big // n_small}** —
-max over best-of-level and same-window paired rounds:
-
-- encode: **{report['encode_scaling_efficiency']}** (hw kernel ceiling on
-  this box {report['hw_ceiling_encode']} → engine-relative
-  **{report['engine_relative_encode']}**)
-- decode: **{report['decode_scaling_efficiency']}** (hw kernel ceiling on
-  this box {report['hw_ceiling_decode']} → engine-relative
-  **{report['engine_relative_decode']}**)
-- presorted encode (zero-shuffle locality path for conv-clustered
-  inputs): **{report['presorted_encode_scaling_efficiency']}** —
-  local[{n_small}] {r_small['presorted_encode_sec']}s /
-  local[{n_big}] {r_big['presorted_encode_sec']}s
-
-Per-round paired efficiencies (two levels back-to-back in the same noise
-window): {report['round_efficiencies']!r}. This shared VM's available CPU
-drifts up to ~5× across ~10-minute windows (observed: identical jobs at
-identical settings spanning 26.7 s → 99 s), so the hardware-probe ceilings
-below are the meaningful yardstick for what ANY 8→32-thread job can do here.
-
-Protocol: per level, a fresh session runs one full UNTIMED warm pass (page
-faults amortize exactly once per long-lived worker, as on a real cluster),
-then one timed pass; the levels alternate over {rounds} interleaved rounds
-(this shared VM's available CPU drifts ~1.7× across ~10-minute windows —
-interleaving puts both levels in the same windows) and the per-level best
-is reported. All passes:
-
-| round | {'; '.join(f"local[{n_small}] enc {p['encode_sec']}s dec {p['decode_sec']}s" for p in passes_small)} |
-| ----- | {'; '.join(f"local[{n_big}] enc {p['encode_sec']}s dec {p['decode_sec']}s" for p in passes_big)} |
-
-Compression ratio on this input: **{r_small['ratio']:.4f}** (identical at
-both levels — the job is deterministic).
-
-Plan shape: encode is one shuffle (salted repartition by `pmod(xxhash64(
-conv_id, turn_block), P)`, a fixed {NUM_PARTS} partitions at BOTH levels —
-identical plan, identical output bytes) into an embarrassingly parallel
-`mapInArrow` encode kernel; decode is SHUFFLE-FREE — each chunk-store row is
-self-contained (one row per chunk, one struct per column), so the plan is a
-pure scan → `mapInArrow` with no Exchange (asserted by `tests/test_plans.py`).
-The only serial points are driver-side planning and the lineage commit. Input, chunk store
-and shuffle dirs live on tmpfs for BOTH levels: this box has one disk shared
-by every parallelism level, whereas 4N executors on a real cluster bring 4N
-local disks — tmpfs keeps that shared-disk ceiling out of the comparison. On a real cluster
-the identical job ships via `spark-submit --py-files` (the session factory
-zips the package; see `learn_to_compress_spark/sources/session.py`) and the
-4N executors add memory bandwidth with their cores, which this single box
-cannot (see below).
-
-## Hardware ceiling on this box (engine-free probes)
-
-The pure chunk kernels under plain **multiprocessing, no Spark**
-(chunks/s at k processes):
-
-- encode: {hw!r} → {n_small}→{n_big} ceiling **{report['hw_ceiling_encode']}**
-- decode: {hw_dec!r} → {n_small}→{n_big} ceiling **{report['hw_ceiling_decode']}**
-
-The box tops out well below 4× between 8 and 32 threads — SMT + shared
-memory bandwidth — so NO job on this machine can scale past those ratios in
-8→32; the engine tracks the hardware curve, which is the property the north
-rule's N→4N criterion tests (on a cluster, 4N executors bring 4× memory
-bandwidth along with their cores, which this single box cannot). Structural
-evidence independent of the noisy wall clocks: the decode plan has ZERO
-shuffle (scan → mapInArrow, asserted in `tests/test_plans.py`) and encode
-has exactly one (the salted repartition) — there is no stage whose cost
-grows with cluster size.
-
-Generated by `python bench_scaling.py {n_convs} {n_small}`.
-"""
-    # Preserve hand-appended evidence sections: everything from the first
-    # "### " heading after the generated footer line stays. Without this, a
-    # rerun in a bad window silently REPLACES the representative recorded
-    # sessions with its own numbers (it happened once — see git history of
-    # BENCH/BASELINE.md around r4c).
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    tail = ""
-    if os.path.exists(path):
-        old = open(path).read()
-        marker = old.find("\n### ")
-        if marker != -1:
-            tail = old[marker:]
-    with open(path, "w") as fh:
-        fh.write(md + tail)
-    shutil.rmtree(work, ignore_errors=True)
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

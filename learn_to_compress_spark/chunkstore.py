@@ -5,8 +5,11 @@ The reference keeps compressed blocks as in-process ``uint8_t*`` descriptors
 table. Layout v2 — **one row per chunk, one struct column per table column**:
 
 ``(part_id int, chunk_id long, n_rows int, raw_bytes long, enc_bytes long,
-   c_<col> struct<codec string, payload binary, zmin long, zmax long,
-                  vsum decimal(38,0), raw_bytes long, enc_bytes long> ...)``
+   c_<col> COL_STRUCT ...)``, where ``COL_STRUCT`` holds a column chunk's
+codec, payload, zone maps, sums and byte counts. This module is the one
+definition of that layout: the encode kernel emits rows in the Arrow form
+of :func:`chunk_schema`, and every payload-reading kernel scans through
+:func:`read_payloads`.
 
 Why this shape (the 100 TB argument): a chunk row is **self-contained**, so
 every read-path operator is scan → ``mapInArrow`` with ZERO shuffle — no
@@ -51,11 +54,13 @@ import math
 import os
 import re
 import uuid
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -413,3 +418,58 @@ def read_chunks(
     if snapshot is not None:
         return df
     return df.coalesce(max(1, math.ceil(manifest_totals(manifest)[2] / SCAN_TASK_BYTES)))
+
+
+@dataclass(frozen=True)
+class ChunkPayloads:
+    """Kernel side of :func:`read_payloads`: walks the chunk rows of one
+    Arrow batch of that scan. Plain data, so it ships in a kernel closure.
+
+    ``names``: the requested columns, in order; ``linked``: ``{target:
+    companion}`` for the linked targets among them; ``logical_of``: the
+    logical type of every column the scan reads."""
+
+    names: tuple[str, ...]
+    linked: dict[str, str]
+    logical_of: dict[str, str]
+
+    def rows(self, rb):
+        """Per chunk row of ``rb``: ``(n, cols)``, where ``cols[name]`` is
+        ``(payload, companion)`` for each requested name, in order. A linked
+        target's companion is ``(companion payload, companion logical)``;
+        any other column's is None."""
+        n_rows = rb.column(rb.schema.get_field_index("n_rows")).to_pylist()
+        leaves = [(c, rb.column(rb.schema.get_field_index(f"p_{c}"))) for c in self.logical_of]
+        for i, n in enumerate(n_rows):
+            p = {c: leaf[i].as_py() for c, leaf in leaves}
+            cols = {}
+            for name in self.names:
+                comp = self.linked.get(name)
+                cols[name] = (p[name], None if comp is None else (p[comp], self.logical_of[comp]))
+            yield n, cols
+
+
+def read_payloads(
+    spark: SparkSession,
+    store: str,
+    names: list[str],
+    extra: list | None = None,
+    snapshot: int | None = None,
+    doc: dict | None = None,
+) -> tuple[DataFrame, ChunkPayloads]:
+    """The payload scan every read kernel runs over, and its kernel-side
+    reader: one :func:`read_chunks` scan of ``n_rows``, the ``payload`` leaf
+    of each of ``names`` and, for a linked target (the store's
+    ``linked_cols``), the payload leaf of its companion, which rides along
+    because a linked frame decodes against the companion of the SAME chunk
+    row. ``extra``: more leaves the caller filters on (zone maps, a
+    ``_keep`` flag); the reader ignores them."""
+    if doc is None:
+        doc = load_store_schema(store)
+    logical_of = dict(store_colspecs(doc))
+    names = list(dict.fromkeys(names))
+    linked = {t: c for t, c in (doc.get("linked_cols") or {}).items() if t in names}
+    read = list(dict.fromkeys(names + list(linked.values())))
+    leaves = [F.col("n_rows")] + [F.col(f"{col_field(c)}.payload").alias(f"p_{c}") for c in read]
+    scan = read_chunks(spark, store, leaves=leaves + list(extra or []), snapshot=snapshot, doc=doc)
+    return scan, ChunkPayloads(tuple(names), linked, {c: logical_of[c] for c in read})

@@ -459,27 +459,10 @@ def _simhash_pairs(banded: DataFrame, join_keys) -> DataFrame:
     )
 
 
-def _simhash_pairs_selfjoin(banded: DataFrame, join_keys) -> DataFrame:
-    """r4 pair generator (bucket self-join) — kept ONLY as the A/B baseline
-    for ``bench.py``'s paired in-window comparison against the combination
-    expansion above."""
-    l, r = banded.alias("l"), banded.alias("r")
-    on = F.col("l.id") < F.col("r.id")
-    for k in join_keys:
-        on = on & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    return l.join(r, on).select(
-        F.col("l.id").alias("id_a"),
-        F.col("r.id").alias("id_b"),
-        F.col("l.simhash").alias("sig_a"),
-        F.col("r.simhash").alias("sig_b"),
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    _pairs=None,
     **kw,
 ) -> DataFrame:
     """Near-dups by SimHash: band the 64-bit signature into 4×16-bit keys
@@ -500,13 +483,11 @@ def simhash_near_dup_pairs(
     duplicates are exact-dedup's job)."""
     from pyspark import StorageLevel
 
-    pairs_fn = _pairs or _simhash_pairs
-    # persist the SIGNATURES, not the banded rows. Measured A/B on this box
-    # (tools/bench_simhash_paired.py, sf0.1, 3 interleaved rounds in one
-    # noise window): persist-sigs best 2.62 s vs persist-bands best 6.44 s —
-    # the 64-expression signature stage is the expensive part and caching n
-    # narrow rows beats caching the 4n-row posexplode output whose
-    # projection is four shift-ANDs.
+    # persist the SIGNATURES, not the banded rows. Measured A/B (sf0.1, 3
+    # interleaved rounds in one noise window): persist-sigs best 2.62 s vs
+    # persist-bands best 6.44 s — the 64-expression signature stage is the
+    # expensive part and caching n narrow rows beats caching the 4n-row
+    # posexplode output whose projection is four shift-ANDs.
     sigs = simhash_signatures(df, **kw).persist(StorageLevel.MEMORY_AND_DISK)
     bands = sigs.select(
         "id",
@@ -539,7 +520,7 @@ def simhash_near_dup_pairs(
     # common case: no bucket exceeds the cap — skip the refinement branch's
     # extra shuffles entirely
     if not hot_keys:
-        pairs = pairs_fn(bands, keys).distinct()
+        pairs = _simhash_pairs(bands, keys).distinct()
         hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         return pairs.filter(hamming <= max_hamming).select(
             "id_a", "id_b", hamming.cast("int").alias("hamming")
@@ -554,7 +535,7 @@ def simhash_near_dup_pairs(
     cold = bands.filter(~hkey.isin(hot64))
     hot_rows = bands.filter(hkey.isin(hot64))
 
-    cand = pairs_fn(cold, keys)
+    cand = _simhash_pairs(cold, keys)
     # refinement pass: compact the three non-key bands into 48 bits, re-band
     # into 4×12-bit sub-buckets, cap again
     others = [
@@ -582,7 +563,7 @@ def simhash_near_dup_pairs(
         ).alias("sub", "subbucket"),
     )
     refined = _cap_buckets(refined, bucket_cap, keys=keys + ["sub", "subbucket"])
-    cand = cand.unionByName(pairs_fn(refined, keys + ["sub", "subbucket"])).distinct()
+    cand = cand.unionByName(_simhash_pairs(refined, keys + ["sub", "subbucket"])).distinct()
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return cand.filter(hamming <= max_hamming).select(
         "id_a", "id_b", hamming.cast("int").alias("hamming")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
-from ..chunkstore import col_field, load_store_schema, read_chunks, store_colspecs
+from ..chunkstore import load_store_schema, read_payloads, store_colspecs
 
 _SPARK_OF_LOGICAL = {
     "int32": T.IntegerType(),
@@ -58,6 +58,13 @@ def _pa_of_logical():
     }
 
 
+def _decode_schema(logical_of, names) -> T.StructType:
+    """Spark schema of decoded ``names`` columns."""
+    return T.StructType(
+        [T.StructField(n, _SPARK_OF_LOGICAL[logical_of[n]], True) for n in names]
+    )
+
+
 def decode_table(
     spark: SparkSession,
     store: str,
@@ -80,55 +87,25 @@ def decode_table(
 
     doc = load_store_schema(store)
     colspecs = store_colspecs(doc)
-    all_logical = dict(colspecs)
     if columns is not None:
         colspecs = [cs for cs in colspecs if cs[0] in columns]
-    out_schema = T.StructType(
-        [T.StructField(n, _SPARK_OF_LOGICAL[lg], True) for n, lg in colspecs]
-    )
-    logical_of = dict(colspecs)
     names = [n for n, _ in colspecs]
-    # linked (correlated-column) frames reference a companion column of the
-    # SAME chunk row: its payload leaf must ride along even when pruned out
-    linked = {
-        t: c for t, c in (doc.get("linked_cols") or {}).items() if t in names
-    }
-    extra = [c for c in dict.fromkeys(linked.values()) if c not in names]
-    read_names = names + extra
+    out_schema = _decode_schema(dict(colspecs), names)
     pa_types = _pa_of_logical()
+    sel, reader = read_payloads(spark, store, names, snapshot=snapshot, doc=doc)
 
     def kernel(batches):
         for rb in batches:
-            n_rows = rb.column(rb.schema.get_field_index("n_rows"))
-            pcols = {
-                name: rb.column(rb.schema.get_field_index(f"p_{name}"))
-                for name in read_names
-            }
-            for i in range(rb.num_rows):
-                n = int(n_rows[i].as_py())
+            for n, cols in reader.rows(rb):
                 arrays = []
-                for name in names:
-                    comp = None
-                    if name in linked:
-                        cname = linked[name]
-                        comp = (pcols[cname][i].as_py(), all_logical[cname])
+                for name, (payload, companion) in cols.items():
+                    logical = reader.logical_of[name]
                     arrays.append(
-                        decode_column_arrow(
-                            pcols[name][i].as_py(), n, logical_of[name], companion=comp
-                        ).cast(pa_types[logical_of[name]])
+                        decode_column_arrow(payload, n, logical, companion=companion)
+                        .cast(pa_types[logical])
                     )
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    sel = read_chunks(
-        spark,
-        store,
-        leaves=[
-            F.col("n_rows"),
-            *[F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_names],
-        ],
-        snapshot=snapshot,
-        doc=doc,
-    )
     if parts is not None:
         # pushable top-level predicate: parquet row-group stats skip chunk
         # rows of other parts before any payload bytes are read

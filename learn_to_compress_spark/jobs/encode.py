@@ -418,14 +418,19 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
     its residuals AGAINST the companion column; the smaller payload wins.
     Skipped per-chunk when either column has nulls."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = _arrow_chunk_schema(colspecs)
+    # the chunk-row layout is chunkstore's: each emitted row is a dict of
+    # its metadata fields and one {struct field: value} dict per column
+    arrow_schema = to_arrow_schema(chunk_schema(colspecs))
     logical_of = dict(colspecs)
     linked = dict(linked or {})
 
     race_seed = race_seed or {}
 
     def kernel(batches):
+        from ..select import encode_linked_framed
+
         if var_model:
             # adopt the driver-fitted race-pruning regressor (plain arrays;
             # idempotent) — executors never pay the training encodes
@@ -450,11 +455,7 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
             # rows sorted by _part_id: consecutive groups, order preserved
             change = np.flatnonzero(parts_np[1:] != parts_np[:-1]) + 1
             bounds = [0, *change.tolist(), len(rb)]
-            meta = {k: [] for k in ("part_id", "chunk_id", "n_rows", "raw_bytes", "enc_bytes")}
-            per_col: dict[str, dict[str, list]] = {
-                name: {k: [] for k in ("codec", "payload", "zmin", "zmax", "vsum", "raw_bytes", "enc_bytes", "zsmin", "zsmax", "nvalid")}
-                for name, _ in colspecs
-            }
+            rows = []
             for s, e in zip(bounds[:-1], bounds[1:]):
                 part_id = int(parts_np[s])
                 for cs in range(s, e, chunk_rows):
@@ -463,107 +464,35 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
                     if seq >= MAX_CHUNKS_PER_PART:
                         raise RuntimeError("chunk seq overflow; raise num_parts")
                     seqs[part_id] = seq + 1
-                    chunk_raw = chunk_enc = 0
-                    chunk_cols: dict = {}
+                    cols: dict[str, dict] = {}
                     for name, logical in colspecs:
-                        col = sl.column(sl.schema.get_field_index(name))
-                        if name in linked or name in linked.values():
-                            chunk_cols[name] = col
                         codec, payload, info = _encode_one_arrow(
-                            col, logical, selection, memo=race_memos[name]
+                            sl.column(sl.schema.get_field_index(name)), logical,
+                            selection, memo=race_memos[name],
                         )
-                        d = per_col[name]
-                        d["codec"].append(codec)
-                        d["payload"].append(payload)
-                        d["zmin"].append(info.get("zmin"))
-                        d["zmax"].append(info.get("zmax"))
-                        d["vsum"].append(info.get("vsum"))
-                        d["zsmin"].append(info.get("zsmin"))
-                        d["zsmax"].append(info.get("zsmax"))
-                        d["nvalid"].append(info["nvalid"])
-                        d["raw_bytes"].append(info["raw_bytes"])
-                        d["enc_bytes"].append(info["enc_bytes"])
-                        chunk_raw += info["raw_bytes"]
-                        chunk_enc += info["enc_bytes"]
+                        cols[name] = {"codec": codec, "payload": payload, **info}
                     for tgt, comp in linked.items():
-                        yc, xc = chunk_cols[tgt], chunk_cols[comp]
+                        yc = sl.column(sl.schema.get_field_index(tgt))
+                        xc = sl.column(sl.schema.get_field_index(comp))
                         if yc.null_count or xc.null_count:
                             continue  # linked frames require null-free chunks
-                        from ..select import encode_linked_framed
-
                         framed = encode_linked_framed(
                             _i64_of_arrow(yc, logical_of[tgt]),
                             _i64_of_arrow(xc, logical_of[comp]),
                         )
-                        d = per_col[tgt]
-                        if framed is not None and len(framed) < len(d["payload"][-1]):
-                            chunk_enc += len(framed) - d["enc_bytes"][-1]
-                            d["codec"][-1] = "linked"
-                            d["payload"][-1] = framed
-                            d["enc_bytes"][-1] = len(framed)
-                    meta["part_id"].append(part_id)
-                    meta["chunk_id"].append(part_id * MAX_CHUNKS_PER_PART + seq)
-                    meta["n_rows"].append(len(sl))
-                    meta["raw_bytes"].append(chunk_raw)
-                    meta["enc_bytes"].append(chunk_enc)
-            arrays = [
-                pa.array(meta["part_id"], pa.int32()),
-                pa.array(meta["chunk_id"], pa.int64()),
-                pa.array(meta["n_rows"], pa.int32()),
-                pa.array(meta["raw_bytes"], pa.int64()),
-                pa.array(meta["enc_bytes"], pa.int64()),
-            ]
-            for name, _logical in colspecs:
-                d = per_col[name]
-                arrays.append(
-                    pa.StructArray.from_arrays(
-                        [
-                            pa.array(d["codec"], pa.string()),
-                            pa.array(d["payload"], pa.binary()),
-                            pa.array(d["zmin"], pa.int64()),
-                            pa.array(d["zmax"], pa.int64()),
-                            pa.array(d["vsum"], pa.decimal128(38, 0)),
-                            pa.array(d["raw_bytes"], pa.int64()),
-                            pa.array(d["enc_bytes"], pa.int64()),
-                            pa.array(d["zsmin"], pa.string()),
-                            pa.array(d["zsmax"], pa.string()),
-                            pa.array(d["nvalid"], pa.int64()),
-                        ],
-                        names=["codec", "payload", "zmin", "zmax", "vsum", "raw_bytes", "enc_bytes", "zsmin", "zsmax", "nvalid"],
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+                        if framed is not None and len(framed) < len(cols[tgt]["payload"]):
+                            cols[tgt].update(codec="linked", payload=framed, enc_bytes=len(framed))
+                    rows.append({
+                        "part_id": part_id,
+                        "chunk_id": part_id * MAX_CHUNKS_PER_PART + seq,
+                        "n_rows": len(sl),
+                        "raw_bytes": sum(c["raw_bytes"] for c in cols.values()),
+                        "enc_bytes": sum(c["enc_bytes"] for c in cols.values()),
+                        **{col_field(name): c for name, c in cols.items()},
+                    })
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return kernel
-
-
-def _arrow_chunk_schema(colspecs):
-    import pyarrow as pa
-
-    struct = pa.struct(
-        [
-            pa.field("codec", pa.string()),
-            pa.field("payload", pa.binary()),
-            pa.field("zmin", pa.int64()),
-            pa.field("zmax", pa.int64()),
-            pa.field("vsum", pa.decimal128(38, 0)),
-            pa.field("raw_bytes", pa.int64()),
-            pa.field("enc_bytes", pa.int64()),
-            pa.field("zsmin", pa.string()),
-            pa.field("zsmax", pa.string()),
-            pa.field("nvalid", pa.int64()),
-        ]
-    )
-    fields = [
-        pa.field("part_id", pa.int32()),
-        pa.field("chunk_id", pa.int64()),
-        pa.field("n_rows", pa.int32()),
-        pa.field("raw_bytes", pa.int64()),
-        pa.field("enc_bytes", pa.int64()),
-    ]
-    for name, _logical in colspecs:
-        fields.append(pa.field(col_field(name), struct))
-    return pa.schema(fields)
 
 
 def _parse_bytes(v: str) -> int:
@@ -736,7 +665,11 @@ def encode_table(
     work before the job — the one driver sample, chunk-size tuner, linked
     probe, race seed, schema and resume bookkeeping), ``wall_ms`` (the
     encode job, in ms) and ``commit_s`` (the run's manifest rows and the
-    lineage commit).
+    lineage commit). ``rows``/``raw_bytes``/``enc_bytes``/``ratio`` total
+    the visible store (a staged run: its own rows); ``committed`` is False
+    for a staged run, ``resumed_noop`` True when every part was already
+    committed (``run_id`` None, no job), and ``tune_sizes`` is present when
+    the call tuned ``chunk_rows``.
     """
     t_call = time.monotonic()
     spark = df.sparkSession
@@ -791,6 +724,25 @@ def encode_table(
     if tune:
         chunk_rows, tune_sizes = tune_chunk_rows(df, key_cols, sample=sample())
     chunk_rows = int(chunk_rows)
+
+    def metrics(run, t0, t1, manifest) -> dict:
+        """The call's metrics: ``run`` is None for a resume no-op; the job
+        ran from ``t0`` to ``t1``; the totals are ``manifest``'s."""
+        rows, raw, enc = manifest_totals(manifest)
+        return {
+            "run_id": run,
+            "wall_ms": (t1 - t0) * 1000,
+            "prep_s": t0 - t_call,
+            "commit_s": time.monotonic() - t1,
+            "rows": rows,
+            "raw_bytes": raw,
+            "enc_bytes": enc,
+            "ratio": (enc / raw) if raw else None,
+            "chunk_rows": chunk_rows,
+            "committed": commit or run is None,
+            "resumed_noop": run is None,
+            **({"tune_sizes": tune_sizes} if tune_sizes else {}),
+        }
     restore_conf: dict | None = None
     # the Arrow bridge caps mapInArrow batches at maxRecordsPerBatch — a
     # chunk_rows above it would be SILENTLY fragmented at batch boundaries
@@ -840,19 +792,8 @@ def encode_table(
             if restore_conf:
                 for key, val in restore_conf.items():
                     spark.conf.set(key, val)
-            rows, raw, enc = manifest_totals(committed)
-            return {
-                "run_id": None,
-                "wall_ms": 0.0,
-                "prep_s": time.monotonic() - t_call,
-                "commit_s": 0.0,
-                "rows": rows,
-                "raw_bytes": raw,
-                "enc_bytes": enc,
-                "ratio": (enc / raw) if raw else None,
-                "chunk_rows": chunk_rows,
-                "resumed_noop": True,
-            }
+            t0 = time.monotonic()
+            return metrics(None, t0, t0, committed)
         if done:
             work = work.filter(~F.col("_part_id").isin(done))
 
@@ -907,41 +848,14 @@ def encode_table(
             for key, val in restore_conf.items():
                 spark.conf.set(key, val)
     t1 = time.monotonic()
-    wall_ms = (t1 - t0) * 1000
 
     # lineage commit, on the driver: per-part metrics from the run's own
     # files (top-level fields only), then one atomic manifest file
-    mine = run_manifest_rows(store, run_id, wall_ms)
+    mine = run_manifest_rows(store, run_id, (t1 - t0) * 1000)
     if not commit:
         # staged run (compaction rewrite): chunk files exist but are
         # INVISIBLE — the caller swaps them in atomically via the lineage
         # pointer. A crash leaves an orphan run dir for vacuum_store.
-        rows, raw, enc = manifest_totals(mine)
-        return {
-            "run_id": run_id,
-            "wall_ms": wall_ms,
-            "prep_s": t0 - t_call,
-            "commit_s": time.monotonic() - t1,
-            "rows": rows,
-            "raw_bytes": raw,
-            "enc_bytes": enc,
-            "ratio": (enc / raw) if raw else None,
-            "committed": False,
-            "chunk_rows": chunk_rows,
-            **({"tune_sizes": tune_sizes} if tune_sizes else {}),
-        }
+        return metrics(run_id, t0, t1, mine)
     commit_run(store, mine, run_id)
-
-    rows, raw, enc = manifest_totals(read_manifest(store))
-    return {
-        "run_id": run_id,
-        "wall_ms": wall_ms,
-        "prep_s": t0 - t_call,
-        "commit_s": time.monotonic() - t1,
-        "rows": rows,
-        "raw_bytes": raw,
-        "enc_bytes": enc,
-        "ratio": (enc / raw) if raw else None,
-        "chunk_rows": chunk_rows,
-        **({"tune_sizes": tune_sizes} if tune_sizes else {}),
-    }
+    return metrics(run_id, t0, t1, read_manifest(store))

@@ -16,7 +16,6 @@ never deserialized, and SUM is a pure metadata scan of ``c_<col>.vsum``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,9 +26,10 @@ from ..chunkstore import (
     manifest_totals,
     read_chunks,
     read_manifest,
+    read_payloads,
     store_colspecs,
 )
-from ..jobs.decode import _SPARK_OF_LOGICAL, _pa_of_logical, decode_column_arrow
+from ..jobs.decode import _decode_schema, _pa_of_logical, decode_column_arrow
 from ..select import (
     column_filter_gt,
     column_filter_mod_band,
@@ -76,43 +76,27 @@ def sum_column_kernel(spark: SparkSession, store: str, column: str) -> DataFrame
     ``headers/piecewise_fix_op.h:167-284``) — kept alongside the
     metadata-only :func:`sum_column` as the parity path and as the
     cross-check that ``vsum`` metadata is consistent with the payloads."""
-    doc = load_store_schema(store)
-    logical_of = dict(store_colspecs(doc))
-    logical = logical_of[column]
-    # linked columns need the companion payload leaf for the decode fallback
-    comp_name = (doc.get("linked_cols") or {}).get(column)
-    comp_logical = logical_of.get(comp_name)
-    leaves = [F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("payload")]
-    if comp_name:
-        leaves.append(F.col(f"{col_field(comp_name)}.payload").alias("comp"))
-    sel = read_chunks(spark, store, leaves=leaves, doc=doc)
+    import pyarrow as pa
+
+    sel, reader = read_payloads(spark, store, [column])
+    logical = reader.logical_of[column]
 
     from decimal import Decimal
 
     def kernel(batches):
-        for pdf in batches:
-            comps = pdf["comp"] if comp_name else [None] * len(pdf)
-            sums = [
-                Decimal(
-                    column_sum(
-                        bytes(p), int(n), logical,
-                        companion=(bytes(c), comp_logical) if c is not None else None,
-                    )
-                )
-                for p, n, c in zip(pdf["payload"], pdf["n_rows"], comps)
-            ]
-            yield pd.DataFrame({"partial": sums})
+        for rb in batches:
+            sums = []
+            for n, cols in reader.rows(rb):
+                payload, companion = cols[column]
+                sums.append(Decimal(column_sum(payload, n, logical, companion=companion)))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(sums, pa.decimal128(38, 0))], names=["partial"]
+            )
 
-    partials = sel.mapInPandas(
+    partials = sel.mapInArrow(
         kernel, T.StructType([T.StructField("partial", T.DecimalType(38, 0))])
     )
     return partials.agg(F.sum("partial").cast(T.DecimalType(38, 0)).alias(f"sum_{column}"))
-
-
-def _decode_schema(logical_of, names) -> T.StructType:
-    return T.StructType(
-        [T.StructField(n, _SPARK_OF_LOGICAL[logical_of[n]], True) for n in names]
-    )
 
 
 def _gather_table(
@@ -142,17 +126,6 @@ def _gather_table(
 
     multi = isinstance(key_col, (list, tuple))
     key_cols = list(key_col) if multi else [key_col]
-    if doc is None:
-        doc = load_store_schema(store)
-    logical_of = dict(store_colspecs(doc))
-    need = list(dict.fromkeys([*key_cols, *out_cols]))
-    # linked (correlated-column) frames reference a companion column of the
-    # same chunk row — its payload leaf rides along for any linked column
-    linked = {t: c for t, c in (doc.get("linked_cols") or {}).items() if t in need}
-    read_cols = list(dict.fromkeys(need + list(linked.values())))
-    leaves = [F.col("n_rows")] + [
-        F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_cols
-    ]
     zone_leaves = []
     zone_names = []
     if prune is not None:
@@ -165,45 +138,32 @@ def _gather_table(
                 F.col(f"{col_field(kc)}.{zone_fields[1]}").alias(f"_zmax{sfx}"),
             ]
             zone_names += [f"_zmin{sfx}", f"_zmax{sfx}"]
-    chunks = read_chunks(spark, store, leaves=leaves + zone_leaves, doc=doc)
+    sel, reader = read_payloads(
+        spark, store, [*key_cols, *out_cols], extra=zone_leaves, doc=doc
+    )
     if prune is not None:
-        chunks = chunks.filter(prune).drop(*zone_names)
-    sel = chunks
+        sel = sel.filter(prune).drop(*zone_names)
+    logical_of = reader.logical_of
     out_schema = _decode_schema(logical_of, out_cols)
     pa_types = _pa_of_logical()
-    key_logical = logical_of[key_cols[0]]
 
     def kernel(batches):
         for rb in batches:
-            n_rows = rb.column(rb.schema.get_field_index("n_rows"))
-            pcols = {
-                n: rb.column(rb.schema.get_field_index(f"p_{n}")) for n in read_cols
-            }
-
-            def comp_of(name, i):
-                cname = linked.get(name)
-                if cname is None:
-                    return None
-                return (pcols[cname][i].as_py(), logical_of[cname])
-
-            for i in range(rb.num_rows):
-                n = int(n_rows[i].as_py())
+            for n, cols in reader.rows(rb):
                 if multi:
                     pos = pos_fn(
-                        [pcols[k][i].as_py() for k in key_cols],
+                        [cols[k][0] for k in key_cols],
                         n,
                         [logical_of[k] for k in key_cols],
-                        [comp_of(k, i) for k in key_cols],
+                        [cols[k][1] for k in key_cols],
                     )
                 else:
-                    pos = pos_fn(
-                        pcols[key_cols[0]][i].as_py(), n, key_logical,
-                        comp_of(key_cols[0], i),
-                    )
+                    payload, companion = cols[key_col]
+                    pos = pos_fn(payload, n, logical_of[key_col], companion)
                 arrays = []
                 for name in out_cols:
                     lg = logical_of[name]
-                    payload = pcols[name][i].as_py()
+                    payload, companion = cols[name]
                     if lg == "string":
                         from ..select import column_gather_string_arrow
 
@@ -213,9 +173,7 @@ def _gather_table(
                             pa.array(pos, type=pa.int64())
                         )
                     else:
-                        ser = column_gather(
-                            payload, n, lg, pos, companion=comp_of(name, i)
-                        )
+                        ser = column_gather(payload, n, lg, pos, companion=companion)
                         arr = pa.Array.from_pandas(ser)
                     arrays.append(arr.cast(pa_types[lg]))
                 yield pa.RecordBatch.from_arrays(arrays, names=out_cols)
@@ -795,23 +753,14 @@ def group_count_string_table(spark: SparkSession, store: str, column: str) -> Da
     doc = load_store_schema(store)
     if dict(store_colspecs(doc))[column] != "string":
         raise ValueError("group_count_string_table supports string columns")
-    sel = read_chunks(
-        spark,
-        store,
-        doc=doc,
-        leaves=[F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("p")],
-    )
+    sel, reader = read_payloads(spark, store, [column], doc=doc)
 
     def kernel(batches):
         for rb in batches:
-            n_rows = rb.column(rb.schema.get_field_index("n_rows"))
-            payloads = rb.column(rb.schema.get_field_index("p"))
             vals: list = []
             cnts: list = []
-            for i in range(rb.num_rows):
-                uniq, counts, nulls = column_value_counts_string(
-                    bytes(payloads[i].as_py()), int(n_rows[i].as_py())
-                )
+            for n, cols in reader.rows(rb):
+                uniq, counts, nulls = column_value_counts_string(cols[column][0], n)
                 vals.extend(uniq.to_pylist())
                 cnts.extend(int(c) for c in counts)
                 if nulls:
@@ -902,45 +851,34 @@ def sum_filtered_column(
     )
 
     c_logical, f_logical = logical_of[column], logical_of[filter_col]
-    linked = doc.get("linked_cols") or {}
-    need = list(dict.fromkeys([filter_col, column]))
-    comp_of_name = {t: c for t, c in linked.items() if t in need}
-    read_cols = list(dict.fromkeys(need + list(comp_of_name.values())))
-    leaves = [F.col("n_rows")] + [
-        F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_cols
-    ] + [boundary_pred.alias("_keep")]
-    boundary_sel = read_chunks(spark, store, leaves=leaves, doc=doc).filter(F.col("_keep"))
+    boundary_sel, reader = read_payloads(
+        spark, store, [filter_col, column], extra=[boundary_pred.alias("_keep")], doc=doc
+    )
+    boundary_sel = boundary_sel.filter(F.col("_keep"))
 
     from decimal import Decimal
+
+    import pyarrow as pa
 
     from ..select import column_filter_gt as _filter_gt
     from ..select import column_sum_at as _sum_at
 
     def kernel(batches):
-        for pdf in batches:
+        for rb in batches:
             parts, nns = [], []
-            for i in range(len(pdf)):
-                n = int(pdf["n_rows"].iloc[i])
-
-                def comp(name):
-                    cname = comp_of_name.get(name)
-                    if cname is None:
-                        return None
-                    return (bytes(pdf[f"p_{cname}"].iloc[i]), logical_of[cname])
-
-                pos = _filter_gt(
-                    bytes(pdf[f"p_{filter_col}"].iloc[i]), n, f_logical, v,
-                    companion=comp(filter_col),
-                )
-                s, nn = _sum_at(
-                    bytes(pdf[f"p_{column}"].iloc[i]), n, c_logical, pos,
-                    companion=comp(column),
-                )
+            for n, cols in reader.rows(rb):
+                f_payload, f_comp = cols[filter_col]
+                c_payload, c_comp = cols[column]
+                pos = _filter_gt(f_payload, n, f_logical, v, companion=f_comp)
+                s, nn = _sum_at(c_payload, n, c_logical, pos, companion=c_comp)
                 parts.append(Decimal(s))
                 nns.append(nn)
-            yield pd.DataFrame({"partial": parts, "nn": pd.array(nns, dtype="int64")})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(parts, pa.decimal128(38, 0)), pa.array(nns, pa.int64())],
+                names=["partial", "nn"],
+            )
 
-    boundary = boundary_sel.mapInPandas(
+    boundary = boundary_sel.mapInArrow(
         kernel,
         T.StructType(
             [T.StructField("partial", dec), T.StructField("nn", T.LongType())]
@@ -970,6 +908,8 @@ def group_sum_string_table(
     are all null sums to NULL, and null keys form their own group. Output
     columns: ``<key_col>``, ``sum_<val_col>`` (decimal(38,0)).
     """
+    import pyarrow as pa
+
     from ..select import column_codes_string, column_decode_i64
 
     doc = load_store_schema(store)
@@ -979,30 +919,18 @@ def group_sum_string_table(
     if logical_of[val_col] not in _INT_LOGICALS:
         raise ValueError(f"group_sum_string_table sums int/timestamp columns, got {logical_of[val_col]}")
     v_logical = logical_of[val_col]
-    comp_name = (doc.get("linked_cols") or {}).get(val_col)
-    read_cols = list(dict.fromkeys([key_col, val_col] + ([comp_name] if comp_name else [])))
-    leaves = [F.col("n_rows")] + [
-        F.col(f"{col_field(n)}.payload").alias(f"p_{n}") for n in read_cols
-    ]
-    sel = read_chunks(spark, store, leaves=leaves, doc=doc)
+    sel, reader = read_payloads(spark, store, [key_col, val_col], doc=doc)
 
     def kernel(batches):
-        for pdf in batches:
+        for rb in batches:
             keys: list = []
             his: list = []
             los: list = []
             nns: list = []
-            for i in range(len(pdf)):
-                n = int(pdf["n_rows"].iloc[i])
-                uniq, codes, valid_k = column_codes_string(
-                    bytes(pdf[f"p_{key_col}"].iloc[i]), n
-                )
-                companion = None
-                if comp_name is not None:
-                    companion = (bytes(pdf[f"p_{comp_name}"].iloc[i]), logical_of[comp_name])
-                v64, valid_v = column_decode_i64(
-                    bytes(pdf[f"p_{val_col}"].iloc[i]), n, v_logical, companion=companion
-                )
+            for n, cols in reader.rows(rb):
+                uniq, codes, valid_k = column_codes_string(cols[key_col][0], n)
+                v_payload, v_comp = cols[val_col]
+                v64, valid_v = column_decode_i64(v_payload, n, v_logical, companion=v_comp)
                 K = len(uniq)
                 # group id per row: 0..K-1 = dictionary code, K = NULL key
                 if valid_k is None:
@@ -1026,16 +954,17 @@ def group_sum_string_table(
                     his.append(int(acc_hi[j]))
                     los.append(int(acc_lo[j]))
                     nns.append(int(nn[j]))
-            yield pd.DataFrame(
-                {
-                    key_col: pd.array(keys, dtype=object),
-                    "hi": pd.array(his, dtype="int64"),
-                    "lo": pd.array(los, dtype="int64"),
-                    "nn": pd.array(nns, dtype="int64"),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(keys, pa.string()),
+                    pa.array(his, pa.int64()),
+                    pa.array(los, pa.int64()),
+                    pa.array(nns, pa.int64()),
+                ],
+                names=[key_col, "hi", "lo", "nn"],
             )
 
-    partials = sel.mapInPandas(
+    partials = sel.mapInArrow(
         kernel,
         T.StructType(
             [
@@ -1072,22 +1001,13 @@ def count_distinct_string(spark: SparkSession, store: str, column: str) -> DataF
     doc = load_store_schema(store)
     if dict(store_colspecs(doc))[column] != "string":
         raise ValueError("count_distinct_string supports string columns")
-    sel = read_chunks(
-        spark,
-        store,
-        doc=doc,
-        leaves=[F.col("n_rows"), F.col(f"{col_field(column)}.payload").alias("p")],
-    )
+    sel, reader = read_payloads(spark, store, [column], doc=doc)
 
     def kernel(batches):
         for rb in batches:
-            n_rows = rb.column(rb.schema.get_field_index("n_rows"))
-            payloads = rb.column(rb.schema.get_field_index("p"))
             vals: list = []
-            for i in range(rb.num_rows):
-                uniq, _counts, _nulls = column_value_counts_string(
-                    bytes(payloads[i].as_py()), int(n_rows[i].as_py())
-                )
+            for n, cols in reader.rows(rb):
+                uniq, _counts, _nulls = column_value_counts_string(cols[column][0], n)
                 vals.extend(uniq.to_pylist())
             yield pa.RecordBatch.from_arrays(
                 [pa.array(vals, pa.string())], names=[column]

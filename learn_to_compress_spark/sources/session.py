@@ -83,9 +83,9 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", _MALLOC_BIG)
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", _MALLOC_BIG)
     )
-    # shuffle/spill dir override (bench_scaling points this at tmpfs so the
-    # single box's disk doesn't masquerade as a scaling ceiling; on a real
-    # cluster each executor has its own local disks)
+    # shuffle/spill dir override (a scaling run can point it at tmpfs so
+    # the single box's disk doesn't masquerade as a scaling ceiling; on a
+    # real cluster each executor has its own local disks)
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -350,10 +350,14 @@ def test_linked_correlated_column_encode(spark, tmp_path):
     from learn_to_compress_spark.chunkstore import read_chunks
     from learn_to_compress_spark.operators import (
         filter_gt_table,
+        filter_range_table,
+        group_sum_string_table,
         lookup_eq_table,
         select_bitmap_table,
         sum_column,
         sum_column_kernel,
+        sum_filtered_column,
+        topk_table,
     )
 
     rng = np.random.default_rng(11)
@@ -363,7 +367,10 @@ def test_linked_correlated_column_encode(spark, tmp_path):
     # the salted (user_id, ts) shuffle it is jumpy in slot order
     seq = (1000 + (ts - ts[0]) // 50_000_000).astype(np.int64) + rng.integers(-3, 4, n)
     user = rng.integers(0, 50, n)
-    pdf = pd.DataFrame({"user_id": user, "ts": pd.to_datetime(ts, unit="us"), "seq": seq})
+    kind = rng.choice(np.array(["chat", "tool", "system"]), n)
+    pdf = pd.DataFrame(
+        {"user_id": user, "ts": pd.to_datetime(ts, unit="us"), "seq": seq, "kind": kind}
+    )
     df = spark.createDataFrame(pdf)
 
     path = str(tmp_path / "linked_store")
@@ -415,6 +422,26 @@ def test_linked_correlated_column_encode(spark, tmp_path):
     only = decode_table(spark, path, columns=["seq"]).toPandas()
     assert sorted(only["seq"].tolist()) == sorted(seq.tolist())
 
+    # every other payload reader meets the linked column too: as a SUM
+    # measure and as its filter, a two-sided range, a top-k key and a
+    # grouped SUM measure
+    tthr = int(np.median(ts))
+    got = sum_filtered_column(spark, path, "seq", "ts", tthr).collect()[0][0]
+    assert int(got) == int(seq[ts > tthr].sum(dtype=object))
+    got = sum_filtered_column(spark, path, "ts", "seq", thr).collect()[0][0]
+    assert int(got) == int(ts[seq > thr].sum(dtype=object))
+    lo, hi = int(np.quantile(seq, 0.3)), int(np.quantile(seq, 0.6))
+    rng_rows = filter_range_table(spark, path, "seq", lo, hi, ["seq", "user_id"]).toPandas()
+    assert sorted(rng_rows["seq"].tolist()) == sorted(seq[(seq > lo) & (seq <= hi)].tolist())
+    top = topk_table(spark, path, "seq", 7, ["seq", "ts"], tiebreak="ts").toPandas()
+    want = raw.sort_values(["seq", "ts"], ascending=False).head(7)
+    assert top["seq"].tolist() == want["seq"].tolist()
+    assert (top["ts"].to_numpy() == want["ts"].to_numpy()).all()
+    grouped = group_sum_string_table(spark, path, "kind", "seq").toPandas()
+    assert {k: int(v) for k, v in zip(grouped["kind"], grouped["sum_seq"])} == {
+        k: int(v) for k, v in pdf.groupby("kind")["seq"].sum().items()
+    }
+
 
 def test_resume_noop_fast_path_and_race_seed(spark, tmp_path):
     """A fully-committed store resumes WITHOUT launching the encode job
@@ -447,7 +474,10 @@ def test_linked_auto_detect_proposes_and_wins(spark, tmp_path):
     ts = np.sort(rng.integers(1_700_000_000_000_000, 1_701_000_000_000_000, n))
     seq = (1000 + (ts - ts[0]) // 50_000_000).astype(np.int64) + rng.integers(-3, 4, n)
     user = rng.integers(0, 50, n)
-    pdf = pd.DataFrame({"user_id": user, "ts": pd.to_datetime(ts, unit="us"), "seq": seq})
+    kind = rng.choice(np.array(["chat", "tool", "system"]), n)
+    pdf = pd.DataFrame(
+        {"user_id": user, "ts": pd.to_datetime(ts, unit="us"), "seq": seq, "kind": kind}
+    )
     df = spark.createDataFrame(pdf)
 
     path = str(tmp_path / "linked_auto_store")

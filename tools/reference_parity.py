@@ -137,8 +137,8 @@ def our_cr_array(vals: np.ndarray, block: int, codec_name: str, dtype) -> float:
 # on the same regenerated datasets at the same block sizes. Two tiers:
 # single-THREAD (honest kernel-vs-kernel: numpy pays fixed per-call
 # overhead the reference's C++ loops don't) and single-NODE (the north
-# rule's unit — every core of one machine, plain multiprocessing, same
-# aggregate-throughput convention as bench_scaling.hardware_probe).
+# rule's unit — every core of one machine, plain multiprocessing: P
+# concurrent workers, aggregate throughput = total work / slowest).
 # --------------------------------------------------------------------------
 
 #: (dataset, codec, block, gen kind, ref dec ns/int, ref enc GB/s, log row)
@@ -205,8 +205,8 @@ def _tp_work(args):
 
 def throughput_rows():
     """[(dataset, codec, block, ref_da, ref_enc, ours_da_1t, ours_enc_1t,
-    ours_da_node, ours_enc_node)] — node tier follows the hardware_probe
-    convention: P concurrent workers, aggregate = total work / slowest."""
+    ours_da_node, ours_enc_node)] — node tier: P concurrent workers,
+    aggregate = total work / slowest."""
     import multiprocessing as mp
 
     P = min(32, os.cpu_count() or 1)
@@ -394,8 +394,8 @@ def main() -> int:
         "per-call overhead the reference's C++ inner loops don't, so the",
         "fixed codecs lose here, hardest at tiny blocks like poisson's",
         "100-value blocks) and single-NODE (every core of one machine under",
-        "plain multiprocessing, the `bench_scaling.hardware_probe` aggregate",
-        "convention). The north rule's unit of comparison is the node: the",
+        "plain multiprocessing: P concurrent workers, aggregate = total work",
+        "/ slowest). The north rule's unit of comparison is the node: the",
         "reference repo is single-threaded C++, so its published number IS",
         "its single-node number, while our engine's per-core kernels",
         "parallelize embarrassingly (chunks are independent; the Spark plan",
