@@ -39,7 +39,15 @@ _EVENTS_FORCED_CODECS = [
     "leco_var_lookahead",
 ]
 _DOCS_FORCED_CODECS = ["word_dict", "fsst"]
-_CUSTOMER_FORCED_CODECS = ["leco_str", "leco_str_wide"]
+_CUSTOMER_FORCED_CODECS = ["leco_str", "leco_str_wide", "leco_str_outlier"]
+# c_name has one length, so leco_str_outlier's 99th-percentile length rule
+# never fires on it: the customer sweep encodes this derived name instead,
+# where every 128th customer (< 1% of rows) gets a long suffix. Spark SQL
+# and DuckDB read the expression alike.
+_C_NAME_TAIL = (
+    "CASE WHEN c_custkey % 128 = 0 "
+    "THEN c_name || '-account-note-0123456789abcdefghij' ELSE c_name END"
+)
 
 
 def _prep(spark: SparkSession) -> None:
@@ -63,9 +71,11 @@ def _store_for(
     selection: str = "exact",
     chunk_rows=None,
     linked_cols: dict[str, str] | None = None,
+    derived: dict[str, str] | None = None,
 ) -> str:
     """Encode ``table`` into a cached chunk store (resume makes this a no-op
-    when the store is already committed)."""
+    when the store is already committed). ``derived`` adds columns
+    ``{name: Spark SQL expression}`` to the table before the encode."""
     _prep(spark)
     from learn_to_compress_spark.jobs import encode_table
 
@@ -73,10 +83,12 @@ def _store_for(
 
     key = hashlib.sha1(
         f"{os.path.abspath(sf_dir)}::{table}::{selection}::{chunk_rows or ''}"
-        f"::{linked_cols or ''}::{package_digest()}".encode()
+        f"::{linked_cols or ''}::{derived or ''}::{package_digest()}".encode()
     ).hexdigest()[:16]
     store = os.path.join(_STORE_ROOT, key, table)
     df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    for name, expr in (derived or {}).items():
+        df = df.withColumn(name, F.expr(expr))
     # testdata is small; 16 parts keeps tiny-table stages sane even under a
     # driver session with 200 default shuffle partitions
     kw = {} if chunk_rows is None else {"chunk_rows": chunk_rows}
@@ -340,7 +352,10 @@ def _bitmap_query():
     return fn
 
 
-def _forced_decode_query(table: str, cols: list[str], codec: str, check_col: str):
+def _forced_decode_query(
+    table: str, cols: list[str], codec: str, check_col: str,
+    derived: dict[str, str] | None = None,
+):
     """Decode a store whose codec selection is PINNED to one registry codec
     (``selection="force:<codec>"`` — the per-codec verification seam,
     mirroring the reference's fixed-method decode dispatch
@@ -353,7 +368,9 @@ def _forced_decode_query(table: str, cols: list[str], codec: str, check_col: str
         from learn_to_compress_spark.chunkstore import col_field, read_chunks
         from learn_to_compress_spark.jobs import decode_table
 
-        store = _store_for(spark, sf_dir, table, selection=f"force:{codec}")
+        store = _store_for(
+            spark, sf_dir, table, selection=f"force:{codec}", derived=derived
+        )
         used = {
             r[0]
             for r in read_chunks(
@@ -373,7 +390,10 @@ def _forced_decode_query(table: str, cols: list[str], codec: str, check_col: str
     return fn
 
 
-def _forced_sweep_query(table: str, cols: list[str], codecs: list[str], check_col: str):
+def _forced_sweep_query(
+    table: str, cols: list[str], codecs: list[str], check_col: str,
+    derived: dict[str, str] | None = None,
+):
     """ONE driver row certifying EVERY forced codec of a family end-to-end:
     per codec, build the pinned store, assert the pin landed, decode, tag
     rows with the codec name, and union — the reference analogue is one
@@ -387,7 +407,9 @@ def _forced_sweep_query(table: str, cols: list[str], codecs: list[str], check_co
 
         dfs = []
         for codec in codecs:
-            one = _forced_decode_query(table, cols, codec, check_col)(spark, sf_dir)
+            one = _forced_decode_query(table, cols, codec, check_col, derived)(
+                spark, sf_dir
+            )
             dfs.append(one.select(F.lit(codec).alias("codec"), *cols))
         return reduce(lambda a, b: a.unionAll(b), dfs)
 
@@ -758,8 +780,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 _DOCS_FORCED_CODECS, "text",
             ),
             "decode_customer_forced_sweep": _forced_sweep_query(
-                "customer", ["c_custkey", "c_name"],
-                _CUSTOMER_FORCED_CODECS, "c_name",
+                "customer", ["c_custkey", "c_name_tail"],
+                _CUSTOMER_FORCED_CODECS, "c_name_tail",
+                derived={"c_name_tail": _C_NAME_TAIL},
             ),
         }
     )
@@ -872,7 +895,8 @@ def oracle_sql() -> dict[str, str]:
             "doc_id, text, lang, source", "documents", _DOCS_FORCED_CODECS
         ),
         "decode_customer_forced_sweep": _forced_sweep_sql(
-            "c_custkey, c_name", "customer", _CUSTOMER_FORCED_CODECS
+            f"c_custkey, {_C_NAME_TAIL} AS c_name_tail", "customer",
+            _CUSTOMER_FORCED_CODECS,
         ),
         "decode_lineitem_tuned": (
             "SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, "

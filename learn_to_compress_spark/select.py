@@ -243,10 +243,11 @@ class RaceLeg(NamedTuple):
 # nonlinear and exception-list models (ops #16, #17); variable segmentation
 # (ops #10, #13), the one leg without an analytic size, then the lookahead
 # segmenter (``piecewise_cost_lookahead.h``); vbyte and Elias-Fano (op #19).
+# ``poly_max`` is force-only, as ``leco_var_dp`` is: it won no chunk of the
+# sf0.01 or transcript tables, and its hull pricing was most of the race.
 RACE_LEGS = (
     RaceLeg("lp", ("leco_lp",), vs=frozenset({"leco"}), floor=(17, 0.0)),
     RaceLeg("poly2", ("poly2",)),
-    RaceLeg("poly_max", ("poly_max",)),
     RaceLeg("spline", ("spline",)),
     RaceLeg("outlier", ("leco_outlier",)),
     RaceLeg("var", ("leco_var", "delta_var"), min_n=4096, floor=(0, 0.05),

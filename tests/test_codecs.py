@@ -671,7 +671,8 @@ _OVERFLOW_BLOCKS = {
 # sha256[:16] of the exact serialized payloads — byte-level golden vectors so
 # any drift in the escape/guard behavior (not just roundtrip self-consistency)
 # fails loudly. leco/poly2/leco_outlier raw-escape every block (identical
-# payload: max_bit=64 | raw values); the segmented codecs keep guarded models.
+# payload: max_bit=64 | raw values); the segmented codecs keep guarded models,
+# and poly_max (force-only, so no race exercises it) keeps one on topband.
 _OVERFLOW_GOLDEN = {
     ("leco", "spike"): "2a9fe9ead92584f6",
     ("leco", "alt"): "8a98c3511e61f9f1",
@@ -697,11 +698,16 @@ _OVERFLOW_GOLDEN = {
     ("spline", "alt"): "8a98c3511e61f9f1",
     ("spline", "steep"): "4fdddb9b28fdf0d9",
     ("spline", "topband"): "1d040f794c3283d8",
+    ("poly_max", "spike"): "2a9fe9ead92584f6",
+    ("poly_max", "alt"): "8a98c3511e61f9f1",
+    ("poly_max", "steep"): "4fdddb9b28fdf0d9",
+    ("poly_max", "topband"): "65779f1ca8805625",
 }
 
 
 @pytest.mark.parametrize(
-    "codec_name", ["leco", "poly2", "leco_outlier", "leco_var", "leco_var_dp", "spline"]
+    "codec_name",
+    ["leco", "poly2", "leco_outlier", "leco_var", "leco_var_dp", "spline", "poly_max"],
 )
 def test_prediction_cast_overflow_golden_bytes(codec_name):
     """Stored BYTES (not just roundtrip) are pinned for overflow inputs —
@@ -737,8 +743,9 @@ def test_forced_selection_seam():
 
     vals = (RNG.normal(1e6, 1000, 3000)).astype(np.int64)
     vals.sort()
-    for codec in ["leco_var", "leco_var_dp", "delta_var", "poly2", "leco_outlier",
-                  "for", "delta", "leco", "rle", "dict", "raw"]:
+    for codec in ["leco_var", "leco_var_dp", "delta_var", "poly2", "poly_max",
+                  "leco_outlier", "spline", "leco_lp", "vbyte", "elias_fano",
+                  "leco_var_lookahead", "for", "delta", "leco", "rle", "dict", "raw"]:
         name, payload = encode_int_values(vals.copy(), None, "int64", f"force:{codec}")
         assert name == codec
         out = decode_int_column(payload, vals.size, "int64")

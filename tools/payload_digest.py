@@ -1,6 +1,9 @@
-"""Per-column payload digests of one parquet table, encoded without Spark.
+"""Per-column payload digests of one table, encoded without Spark.
 
-The table is key-sorted, sliced into ``--chunk-rows`` chunks, and every
+The table is a parquet file, or ``transcripts:SEED:ROWS`` for the synthetic
+transcript table: ``ROWS`` turns of the seeded contiguous conversation range
+that perfbench's workloads encode (``perfbench.inputs.transcript_rows``).
+It is key-sorted, sliced into ``--chunk-rows`` chunks, and every
 column chunk goes through the encode job's own kernel
 (``jobs.encode._encode_one_arrow``) with one race memo per column, as one
 encode task sees a column's chunks in order. For each column it prints a
@@ -13,6 +16,7 @@ Chunk size matters: the var and var_la race legs only enter at 4096 values
 per chunk, so a check of those legs needs ``--chunk-rows`` of at least that.
 
 Usage: python tools/payload_digest.py <table.parquet> --keys a,b --chunk-rows N
+       python tools/payload_digest.py transcripts:1:24000 --keys conv_id,turn_idx --chunk-rows 1500
 """
 
 from __future__ import annotations
@@ -43,13 +47,24 @@ def _logical(t) -> str | None:
     return None
 
 
-def column_digests(path: str, keys: list[str], chunk_rows: int) -> list[str]:
-    """One report line per column of the table at ``path``."""
+def read_table(spec: str):
+    """The parquet file at ``spec``, or the ``transcripts:SEED:ROWS`` table."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    if spec.startswith("transcripts:"):
+        from perfbench.inputs import transcript_rows
+
+        _, seed, rows = spec.split(":")
+        return pa.Table.from_pandas(transcript_rows(int(seed), int(rows)), preserve_index=False)
+    return pq.read_table(spec)
+
+
+def column_digests(spec: str, keys: list[str], chunk_rows: int) -> list[str]:
+    """One report line per column of the table ``spec`` names."""
     from learn_to_compress_spark.jobs.encode import _encode_one_arrow
 
-    tbl = pq.read_table(path)
+    tbl = read_table(spec)
     if keys:
         tbl = tbl.sort_by([(k, "ascending") for k in keys])
     lines = []
@@ -77,12 +92,12 @@ def column_digests(path: str, keys: list[str], chunk_rows: int) -> list[str]:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("parquet")
+    ap.add_argument("table", help="a parquet path, or transcripts:SEED:ROWS")
     ap.add_argument("--keys", default="", help="comma-separated sort keys")
     ap.add_argument("--chunk-rows", type=int, required=True)
     args = ap.parse_args(argv)
     keys = [k for k in args.keys.split(",") if k]
-    for line in column_digests(args.parquet, keys, args.chunk_rows):
+    for line in column_digests(args.table, keys, args.chunk_rows):
         print(line)
     return 0
 
