@@ -216,8 +216,6 @@ def tune_chunk_rows(
     """
     import pyarrow as pa
 
-    from .. import learned
-
     colspecs = colspecs_of(df)
     if sample is None:
         sample = df.limit(int(sample_rows)).toPandas()
@@ -227,16 +225,16 @@ def tune_chunk_rows(
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     n = tbl.num_rows
     sizes: dict[int, int] = {}
-    # the executors' exact race prunes with the regressor, so pricing does too
-    with learned.var_regressor_installed(learned.var_regressor_params()):
-        for cand in candidates:
-            total = 0
-            for s in range(0, n, cand):
-                sl = tbl.slice(s, min(cand, n - s))
-                for name, logical in colspecs:
-                    _, payload, _ = _encode_one_arrow(sl.column(name), logical)
-                    total += len(payload) + _CHUNK_META_OVERHEAD
-            sizes[cand] = total
+    for cand in candidates:
+        # one race memo per column, as one encode task races its chunks
+        memos: dict[str, dict] = {name: {} for name, _ in colspecs}
+        total = 0
+        for s in range(0, n, cand):
+            sl = tbl.slice(s, min(cand, n - s))
+            for name, logical in colspecs:
+                _, payload, _ = _encode_one_arrow(sl.column(name), logical, memo=memos[name])
+                total += len(payload) + _CHUNK_META_OVERHEAD
+        sizes[cand] = total
     # ties break toward the LARGER chunk (fewer store rows, cheaper scans)
     best = min(sizes, key=lambda c: (sizes[c], -c))
     return best, sizes
@@ -285,6 +283,13 @@ def _sample_race_seed(
     ``chunk_rows`` chunks, per int/timestamp column and pre-bench every race
     leg (``select.RACE_LEGS``) that lost on every one of those chunks (one
     or two of them; a sample shorter than a chunk is one chunk).
+
+    ``chunk_rows`` is the chunk size the executors race: ``encode_table``
+    passes the job's ``chunk_rows``, or, when the sample came back shorter
+    than requested and so holds the whole input,
+    ``min(chunk_rows, ceil(len(sample) / num_parts))`` — each part's rows
+    are then one short chunk, and a seed chunk any longer would race legs
+    (var, var_la at 4096 values) that no executor chunk reaches.
 
     Shipped into the encode kernel, the seed makes adaptive race pruning
     effective even when a task sees only one or two chunks of a column
@@ -405,8 +410,7 @@ def _i64_of_arrow(col, logical: str) -> np.ndarray:
     return a.astype(np.int64, copy=False)
 
 
-def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed=None,
-                 var_model=None):
+def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed=None):
     """Arrow-native encode kernel (mapInArrow): RecordBatch slices are
     zero-copy, string columns never materialize as Python objects. Emits ONE
     row per chunk — all column payloads of a chunk live in that row's
@@ -431,12 +435,6 @@ def _make_kernel(colspecs, chunk_rows, selection="exact", linked=None, race_seed
     def kernel(batches):
         from ..select import encode_linked_framed
 
-        if var_model:
-            # adopt the driver-fitted race-pruning regressor (plain arrays;
-            # idempotent) — executors never pay the training encodes
-            from ..learned import install_var_regressor
-
-            install_var_regressor(var_model)
         seqs: dict[int, int] = {}
         # per-column race memos live for the whole partition: adaptive
         # candidate pruning amortizes the int race legs (select.RACE_LEGS)
@@ -798,28 +796,21 @@ def encode_table(
             work = work.filter(~F.col("_part_id").isin(done))
 
     # pre-bench costly race candidates from a bounded driver sample (only
-    # meaningful for the exact race; forced/learned selections skip races)
-    var_model = race_seed = None
-    if selection == "exact":
-        # driver-side one-time fit of the segmentation-gain regressor
-        # (CART race pruning, regress_tree.h); ships as plain arrays in the
-        # kernel closure. The driver's seeding race (like the chunk-size
-        # tuner) prunes with it only while it runs: library calls after the
-        # encode stay exhaustive.
-        from .. import learned
-
-        var_model = learned.var_regressor_params()
-        if seed:
-            with learned.var_regressor_installed(var_model):
-                race_seed = _sample_race_seed(sample(), key_cols, colspecs, chunk_rows)
+    # meaningful for the exact race; forced/learned selections skip races),
+    # at the executors' chunk size when the sample is the whole input
+    race_seed = None
+    if seed:
+        seed_chunk = chunk_rows
+        if len(sample()) < n_rows:
+            seed_chunk = min(chunk_rows, -(-len(sample()) // num_parts))
+        race_seed = _sample_race_seed(sample(), key_cols, colspecs, seed_chunk)
 
     t0 = time.monotonic()
     if presorted:
         # narrow plan: the filter preserves the scan partitioning, and each
         # task sees exactly one _part_id, so chunk seq counters stay unique
         encoded = work.mapInArrow(
-            _make_kernel(colspecs, chunk_rows, selection, linked_cols, race_seed,
-                         var_model),
+            _make_kernel(colspecs, chunk_rows, selection, linked_cols, race_seed),
             schema=chunk_schema(colspecs),
         )
     else:
@@ -829,8 +820,7 @@ def encode_table(
             work.repartition(shuffle_width, "_part_id")
             .sortWithinPartitions("_part_id", *key_cols)
             .mapInArrow(
-                _make_kernel(colspecs, chunk_rows, selection, linked_cols, race_seed,
-                             var_model),
+                _make_kernel(colspecs, chunk_rows, selection, linked_cols, race_seed),
                 schema=chunk_schema(colspecs),
             )
         )

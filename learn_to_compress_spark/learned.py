@@ -19,8 +19,6 @@ job exposes ``selection="learned"`` to switch.
 
 from __future__ import annotations
 
-import contextlib
-
 import numpy as np
 
 _LABELS = ["raw", "for", "delta", "leco", "rle", "dict"]
@@ -185,19 +183,17 @@ def pick_int_codec_learned(vals: np.ndarray) -> str:
 
 
 # ---------------------------------------------------------------------------
-# CART regressor — variable-segmentation gain prediction for race pruning
+# CART regressor — variable-segmentation gain prediction (SURVEY #37)
 #
 # Reference: ``headers/regress_tree.h`` (variance-split CART over block
 # features) trained by ``experiments/regressor_CART.cpp`` to predict a
-# codec's compression ratio so the selector can SKIP candidates predicted to
-# lose instead of paying their encode. Our race's one candidate without a
-# closed-form analytic size is variable segmentation (leco_var): every other
-# codec already prices itself in O(n) before encoding, so the regressor
-# targets exactly the ratio  leco_var_bytes / best_fixed_bytes  and the race
-# gate skips the segmentation encode when the predicted win is below margin.
-# The tree trains ONCE on the driver (deterministic corpus, seed-fixed) and
-# ships to executors as plain arrays via the encode kernel's closure —
-# workers never pay the training encodes.
+# codec's compression ratio. Our race's one candidate without a closed-form
+# analytic size is variable segmentation (leco_var), so the regressor
+# targets exactly the ratio  leco_var_bytes / best_fixed_bytes. It is fitted
+# and kept as the operator's implementation, but it no longer gates the
+# race: as a skip gate on the var leg it stored the transcript table's
+# ``turn_idx`` 3.4x and ``ts`` 1.9x larger at 64Ki-row chunks than the
+# exact race with its per-column memo, which now decides alone.
 # ---------------------------------------------------------------------------
 
 
@@ -250,7 +246,7 @@ class CartRegressor:
     """Variance-reduction CART (``regress_tree.h:13-200`` analogue): same
     array-of-nodes layout as :class:`CartTree`, SSE split criterion, leaf =
     mean target. ``to_params``/``from_params`` round-trip plain lists so a
-    fitted tree ships to executors without pickling the class instance."""
+    fitted tree travels without pickling the class instance."""
 
     def __init__(self):
         self.feature: list[int] = []
@@ -375,47 +371,15 @@ def _regressor_training(block: int = 4096):
     return np.stack(X), np.asarray(y)
 
 
-#: the installed tree ``predict_var_ratio`` prunes with (None: no pruning)
-_VAR_REG: CartRegressor | None = None
 _VAR_PARAMS: dict | None = None
 
 
 def var_regressor_params() -> dict:
-    """Driver-side lazy train → plain-array params for the kernel closure.
-    Fitting installs nothing: library calls in this process keep the
-    exhaustive race until a caller installs the params."""
+    """Lazy train → the fitted tree as plain-array params (cached per
+    process). Nothing in the encode path reads them: the race no longer
+    gates on the prediction."""
     global _VAR_PARAMS
     if _VAR_PARAMS is None:
         X, y = _regressor_training()
         _VAR_PARAMS = CartRegressor().fit(X, y).to_params()
     return _VAR_PARAMS
-
-
-def install_var_regressor(params: dict | None) -> None:
-    """Executor-side: adopt a driver-fitted tree (idempotent, cheap)."""
-    global _VAR_REG
-    if _VAR_REG is None and params:
-        _VAR_REG = CartRegressor.from_params(params)
-
-
-@contextlib.contextmanager
-def var_regressor_installed(params: dict | None):
-    """Prune with the tree of ``params`` (None: no pruning) inside the
-    block, then restore whatever was installed before. Driver-side races
-    that price what the executors will do run inside one."""
-    global _VAR_REG
-    saved = _VAR_REG
-    _VAR_REG = CartRegressor.from_params(params) if params else None
-    try:
-        yield
-    finally:
-        _VAR_REG = saved
-
-
-def predict_var_ratio(vals: np.ndarray) -> float | None:
-    """Predicted ``leco_var_bytes / best_fixed_bytes`` for one block, or
-    None when no regressor is installed (standalone/library calls keep the
-    exhaustive race)."""
-    if _VAR_REG is None:
-        return None
-    return float(_VAR_REG.predict_one(var_gain_features(vals)))

@@ -17,7 +17,7 @@ reference is unsigned-only, ``headers/piecewise_fix_integer_template.h:14-16``).
 from __future__ import annotations
 
 import struct
-from typing import Callable, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -33,7 +33,7 @@ from .codecs.strings import (
     StrRawCodec,
     WordDictCodec,
 )
-from .learned import pick_int_codec_learned, predict_var_ratio
+from .learned import pick_int_codec_learned
 
 _FLAG_NULLS = 1
 _FLAG_SIGNFLIP = 2
@@ -174,17 +174,6 @@ def _pick_int_codec(vals: np.ndarray, dtype) -> str:
 RACE_PATIENCE = 4
 RACE_RECHECK = 16
 
-#: regressor race pruning: skip the leco_var encode when the CART predicts
-#: var_bytes / best_fixed_bytes at or above this (i.e. race only on a
-#: predicted ≥7% win). Held-out regret vs the exhaustive race is asserted
-#: ≤ 1.02 by ``tests/test_learned_regressor.py``; the memo's periodic
-#: recheck still catches a mid-column distribution shift the model missed.
-VAR_PRUNE_RATIO = 0.93
-
-#: per-process observability for the regressor gate (tests assert pruning
-#: actually skips loser blocks; reset + read in-process)
-VAR_RACE_STATS = {"raced": 0, "skipped": 0}
-
 
 def _race_allowed(memo, cand: str) -> bool:
     if memo is None:
@@ -207,18 +196,6 @@ def _race_record(memo, cand: str, won: bool) -> None:
     memo[cand] = (0 if won else losses + 1, 0)
 
 
-def _var_pruned(vals: np.ndarray) -> bool:
-    """CART-regressor race pruning (``headers/regress_tree.h``,
-    ``experiments/regressor_CART.cpp``): a driver-fitted variance CART
-    predicts leco_var_bytes / best_fixed_bytes from nine O(n) features, and
-    the segmentation encodes are skipped unless the predicted win clears
-    ``VAR_PRUNE_RATIO``. No model installed ⇒ never pruned."""
-    pred = predict_var_ratio(vals)
-    pruned = pred is not None and pred >= VAR_PRUNE_RATIO
-    VAR_RACE_STATS["skipped" if pruned else "raced"] += 1
-    return pruned
-
-
 class RaceLeg(NamedTuple):
     key: str  # race memo key
     codecs: tuple[str, ...]  # raced in this order
@@ -226,7 +203,6 @@ class RaceLeg(NamedTuple):
     min_n: int = 256
     floor: tuple[int, float] | None = (0, 0.02)  # (bytes, share of raw bytes)
     only_after: dict = {}  # codec -> the leg-entry winner it needs
-    prune: Callable[[np.ndarray], bool] | None = None
 
 
 # The exact int race: LeCo encodes every candidate and keeps the smallest
@@ -235,14 +211,16 @@ class RaceLeg(NamedTuple):
 # its codecs against the current winner when the chunk has ``min_n`` values,
 # the winner is in ``vs``, the winner's payload is over ``floor`` (bytes +
 # share · raw bytes) and the column memo allows the leg — asked last, since
-# it advances the memo. A ``prune`` hook may then skip the leg unrecorded.
-# Each codec that ``only_after`` admits passes its ``eligible()`` and O(n)
-# ``size_bytes()`` pre-checks where it has them, and takes the lead only
-# when strictly smaller (ties keep the earlier codec); the leg records one
-# win or loss. The legs: the minimax line in leco's layout (lp, op #18); the
-# nonlinear and exception-list models (ops #16, #17); variable segmentation
-# (ops #10, #13), the one leg without an analytic size, then the lookahead
-# segmenter (``piecewise_cost_lookahead.h``); vbyte and Elias-Fano (op #19).
+# it advances the memo. Each codec that ``only_after`` admits passes its
+# ``eligible()`` and O(n) ``size_bytes()`` pre-checks where it has them, and
+# takes the lead only when strictly smaller (ties keep the earlier codec);
+# the leg records one win or loss. The legs: the minimax line in leco's
+# layout (lp, op #18); the nonlinear and exception-list models (ops #16,
+# #17); variable segmentation (ops #10, #13), the one leg without an
+# analytic size, then the lookahead segmenter
+# (``piecewise_cost_lookahead.h``); vbyte and Elias-Fano (op #19). Every
+# caller — executors, driver seed, chunk tuner, tools — runs this same race;
+# only the memo benches a leg (a learned var-leg gate lost to it, SURVEY #37).
 # ``poly_max`` is force-only, as ``leco_var_dp`` is: it won no chunk of the
 # sf0.01 or transcript tables, and its hull pricing was most of the race.
 RACE_LEGS = (
@@ -251,7 +229,7 @@ RACE_LEGS = (
     RaceLeg("spline", ("spline",)),
     RaceLeg("outlier", ("leco_outlier",)),
     RaceLeg("var", ("leco_var", "delta_var"), min_n=4096, floor=(0, 0.05),
-            only_after={"delta_var": "delta"}, prune=_var_pruned),
+            only_after={"delta_var": "delta"}),
     RaceLeg("var_la", ("leco_var_lookahead",), vs=frozenset({"leco_var", "delta_var"}),
             min_n=4096, floor=None),
     RaceLeg("baseline", ("vbyte", "elias_fano"), vs=frozenset(CODEC_IDS)),
@@ -267,8 +245,6 @@ def _race_ladder(vals, udtype, name: str, payload: bytes, memo) -> tuple[str, by
             and (leg.floor is None or len(payload) > leg.floor[0] + leg.floor[1] * vals.nbytes)
             and _race_allowed(memo, leg.key)
         ):
-            continue
-        if leg.prune is not None and leg.prune(vals):
             continue
         entry, won = name, False
         for cname in leg.codecs:

@@ -16,7 +16,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from learn_to_compress_spark import learned
 from learn_to_compress_spark.jobs import encode as E
 from learn_to_compress_spark.jobs import encode_table
 
@@ -66,19 +65,25 @@ def collects(single_file, monkeypatch):
     return calls
 
 
+@pytest.fixture
+def seed_calls(monkeypatch):
+    """``(chunk_rows, seed)`` of each ``_sample_race_seed`` call."""
+    calls: list[tuple[int, dict]] = []
+    orig = E._sample_race_seed
+    monkeypatch.setattr(
+        E, "_sample_race_seed", lambda *a: calls.append((a[3], orig(*a))) or calls[-1][1]
+    )
+    return calls
+
+
 def _own_collect(df, n_rows: int) -> pd.DataFrame:
     cols = list(dict.fromkeys([*KEYS, *(n for n, _ in E._int_cols(E.colspecs_of(df)))]))
     return df.select(*cols).limit(n_rows).toPandas()
 
 
 @pytest.mark.parametrize("chunk_rows", [2048, "auto"])
-def test_fresh_encode_collects_once(single_file, collects, tmp_path, monkeypatch, chunk_rows):
+def test_fresh_encode_collects_once(single_file, collects, seed_calls, tmp_path, chunk_rows):
     df = single_file
-    seeds = []
-    orig_seed = E._sample_race_seed
-    monkeypatch.setattr(
-        E, "_sample_race_seed", lambda *a: seeds.append(orig_seed(*a)) or seeds[-1]
-    )
     store = str(tmp_path / "store")
     t0 = time.monotonic()
     m = encode_table(df, store, key_cols=KEYS, chunk_rows=chunk_rows, num_parts=2)
@@ -97,15 +102,16 @@ def test_fresh_encode_collects_once(single_file, collects, tmp_path, monkeypatch
     assert persisted == E._propose_linked_cols(
         _own_collect(df, E.PROBE_ROWS), KEYS, colspecs
     )
-    tuned = m["chunk_rows"]
-    with learned.var_regressor_installed(learned.var_regressor_params()):
-        want = orig_seed(
-            _own_collect(df, E._seed_rows(tuned)), KEYS, colspecs, tuned
-        )
-    assert seeds == [want] and want
+    # the sample (6000 rows) is the whole input: the seed races the
+    # executors' chunks, min(chunk_rows, ceil(6000 / num_parts))
+    ((chunk, seed),) = seed_calls
+    assert chunk == min(m["chunk_rows"], ROWS // 2)
+    assert seed and seed == E._sample_race_seed(
+        _own_collect(df, E._seed_rows(chunk)), KEYS, colspecs, chunk
+    )
     if chunk_rows == "auto":
         own = E.tune_chunk_rows(df, KEYS)
-        assert (tuned, m["tune_sizes"]) == own
+        assert (m["chunk_rows"], m["tune_sizes"]) == own
 
 
 def test_resumed_encode_collects_only_for_the_seed(single_file, collects, tmp_path):
@@ -119,3 +125,13 @@ def test_resumed_encode_collects_only_for_the_seed(single_file, collects, tmp_pa
     )
     assert collects == ["toPandas"]
     assert "tune_sizes" not in m
+
+
+def test_whole_input_sample_seeds_at_the_executors_chunk(single_file, seed_calls, tmp_path):
+    """An input shorter than the driver sample spreads over ``num_parts``
+    parts of ~1500 rows, so every executor chunk holds ~1500 values: the
+    seed races 1500-row chunks and never the 4096-value var legs."""
+    encode_table(single_file, str(tmp_path / "store"), key_cols=KEYS, num_parts=4)
+    ((chunk, seed),) = seed_calls
+    assert chunk == ROWS // 4 == 1500
+    assert seed and not any({"var", "var_la"} & set(legs) for legs in seed.values()), seed

@@ -2,8 +2,7 @@
 and the order of a leg's gates.
 
 The golden digests pin the bytes ``encode_int_values`` produces on a fixed
-corpus of seeded shapes, with and without a race memo and the race-pruning
-regressor, in int64 and int32, so any change to a leg's gates, codecs or
+corpus of seeded shapes, with and without a race memo, in int64 and int32, so any change to a leg's gates, codecs or
 order shows up here as a different digest."""
 
 import hashlib
@@ -14,7 +13,6 @@ import pytest
 from learn_to_compress_spark.select import (
     RACE_PATIENCE,
     RACE_LEGS,
-    VAR_RACE_STATS,
     encode_int_values,
 )
 
@@ -66,12 +64,11 @@ def _as(v: np.ndarray, logical: str) -> np.ndarray:
 
 def _corpus_digest(logical: str, memo: bool) -> str:
     """sha256 over codec names and framed payloads of the corpus, plus the
-    final memos and ``VAR_RACE_STATS``. Without a memo: every shape at
+    final memos. Without a memo: every shape at
     300, 4096 and 10000 values, and at 4096 under learned and forced
     selection and with nulls. With one: 24 4096-value chunks per shape
     through one memo each, so legs get benched and re-raced after
     RACE_PATIENCE + RACE_RECHECK chunks."""
-    VAR_RACE_STATS.update(raced=0, skipped=0)
     h = hashlib.sha256()
 
     def put(name, payload):
@@ -95,33 +92,22 @@ def _corpus_digest(logical: str, memo: bool) -> str:
                 m = memos.setdefault(shape, {})
                 put(*encode_int_values(_as(v, logical), None, logical, memo=m))
         h.update(repr(sorted((k, sorted(m.items())) for k, m in memos.items())).encode())
-    h.update(repr(sorted(VAR_RACE_STATS.items())).encode())
     return h.hexdigest()[:16]
 
 
-# (logical, memo, regressor) → digest
+# (logical, memo) → digest
 GOLDEN = {
-    ("int64", False, False): "e50f3c61a55c7e10",
-    ("int64", True, False): "5f36aba77885b15f",
-    ("int32", False, False): "9d4207160c34e1d3",
-    ("int32", True, False): "1f97e07af79347e1",
-    ("int64", False, True): "04bdc95967643100",
-    ("int64", True, True): "a5b1457a1586d7b5",
-    ("int32", False, True): "b1da5898a5dbeb64",
-    ("int32", True, True): "6873c336bd9fc067",
+    ("int64", False): "ea82ccda9d615bd5",
+    ("int64", True): "7b47903c9bb295da",
+    ("int32", False): "72ec8cc47576ffc3",
+    ("int32", True): "94eebafb236ae4dd",
 }
 
 
 @pytest.mark.parametrize("memo", [False, True], ids=["no_memo", "memo"])
 @pytest.mark.parametrize("logical", ["int64", "int32"])
 def test_golden_payload_digest(logical, memo):
-    assert _corpus_digest(logical, memo) == GOLDEN[(logical, memo, False)]
-
-
-@pytest.mark.parametrize("memo", [False, True], ids=["no_memo", "memo"])
-@pytest.mark.parametrize("logical", ["int64", "int32"])
-def test_golden_payload_digest_pruned(installed_model, logical, memo):
-    assert _corpus_digest(logical, memo) == GOLDEN[(logical, memo, True)]
+    assert _corpus_digest(logical, memo) == GOLDEN[(logical, memo)]
 
 
 def test_failed_cheap_gate_leaves_memo_untouched():

@@ -51,49 +51,69 @@ def test_roundtrip_bit_identical(spark, store):
     assert raw["text"].equals(dec["text"])
 
 
-def test_encode_table_leaves_driver_regressor_alone(spark, tmp_path, monkeypatch):
-    """The driver installs the race-pruning regressor only for its seeding
-    race: library calls after an encode keep the exhaustive race."""
-    from learn_to_compress_spark import learned
-
-    monkeypatch.setattr(learned, "_VAR_REG", None)
-    encode_table(
-        transcripts_df(spark, 20, parallelism=2), str(tmp_path / "s"),
-        chunk_rows=CHUNK_ROWS, num_parts=2,
-    )
-    assert learned._VAR_REG is None
+def _sawtooth_turns(n: int = 16384) -> np.ndarray:
+    """Turn numbers of back-to-back conversations of 5–199 turns: where the
+    var leg (leco_var) beats for by ~4x at chunks of 8192 values."""
+    rng = np.random.default_rng(0)
+    return np.concatenate([np.arange(k) for k in rng.integers(5, 200, 400)])[:n]
 
 
 def test_tuner_prices_with_the_executors_pruning(spark, monkeypatch):
-    """chunk_rows="auto" prices every candidate with the race the executors
-    run, CART pruning included, whatever tree the driver had installed
-    before, and leaves that tree installed as it found it. Sawtooth turn
-    numbers are where pruning moves bytes (leco_var vs for)."""
+    """chunk_rows="auto" prices every candidate the way one encode task
+    races it: one race memo per column, carried across the candidate's
+    chunks in order."""
     import pyarrow as pa
 
-    from learn_to_compress_spark import learned
-    from learn_to_compress_spark.jobs.encode import (
-        _CHUNK_META_OVERHEAD,
-        _encode_one_arrow,
-        tune_chunk_rows,
-    )
+    from learn_to_compress_spark.jobs import encode as E
 
-    rng = np.random.default_rng(0)
-    turn = np.concatenate([np.arange(k) for k in rng.integers(5, 200, 400)])[:16384]
+    turn = _sawtooth_turns()
     tbl = pa.table({"seq": np.arange(turn.size), "turn_idx": turn})
     df = spark.createDataFrame(tbl.to_pandas())
-    params = learned.var_regressor_params()
-    with learned.var_regressor_installed(params):
-        want = sum(
-            len(_encode_one_arrow(tbl.column(c).slice(s, 8192), "int64")[1])
-            + _CHUNK_META_OVERHEAD
-            for s in (0, 8192) for c in tbl.column_names
+    want = {}
+    for cand in (2048, 8192):
+        memos = {c: {} for c in tbl.column_names}
+        want[cand] = sum(
+            len(E._encode_one_arrow(tbl.column(c).slice(s, cand), "int64", memo=memos[c])[1])
+            + E._CHUNK_META_OVERHEAD
+            for s in range(0, turn.size, cand) for c in tbl.column_names
         )
-    for tree in (None, learned.CartRegressor.from_params(params)):
-        monkeypatch.setattr(learned, "_VAR_REG", tree)
-        _, sizes = tune_chunk_rows(df, ("seq",), candidates=(8192,))
-        assert sizes == {8192: want}
-        assert learned._VAR_REG is tree
+    memo_ids: list[int] = []
+    orig = E._encode_one_arrow
+    monkeypatch.setattr(
+        E, "_encode_one_arrow",
+        lambda col, logical, memo=None: memo_ids.append(id(memo)) or orig(col, logical, memo=memo),
+    )
+    _, sizes = E.tune_chunk_rows(df, ("seq",), candidates=(2048, 8192))
+    assert sizes == want
+    # 8 chunks × 2 columns at 2048, then 2 × 2 at 8192: one memo per
+    # column per candidate
+    calls = [memo_ids[:16:2], memo_ids[1:16:2], memo_ids[16::2], memo_ids[17::2]]
+    assert [len(set(c)) for c in calls] == [1, 1, 1, 1]
+    assert calls[0][0] != calls[1][0] and calls[2][0] != calls[3][0]
+
+
+def test_job_stores_what_the_exact_race_gives(spark, tmp_path):
+    """A Spark encode at 8192-row chunks stores, chunk for chunk, the codecs
+    and payloads the library's exact race gives on the same slices: the job
+    races every leg the library does (here leco_var wins each chunk, where
+    a skip gate on the var leg stored for at ~4x the bytes)."""
+    from learn_to_compress_spark.chunkstore import read_chunks
+    from learn_to_compress_spark.select import encode_int_values
+
+    turn = _sawtooth_turns()
+    pdf = pd.DataFrame({"seq": np.arange(turn.size), "turn_idx": turn})
+    store = str(tmp_path / "saw")
+    encode_table(spark.createDataFrame(pdf), store, key_cols=("seq",),
+                 chunk_rows=8192, num_parts=1)
+    rows = read_chunks(spark, store).orderBy("chunk_id").collect()
+    assert len(rows) == 2
+    for i, r in enumerate(rows):
+        for col in ("seq", "turn_idx"):
+            vals = pdf[col].to_numpy()[i * 8192:(i + 1) * 8192]
+            name, payload = encode_int_values(vals, None, "int64")
+            got = r[f"c_{col}"]
+            assert (got.codec, bytes(got.payload)) == (name, payload), (i, col)
+        assert r.c_turn_idx.codec == "leco_var"
 
 
 def test_column_pruned_decode(spark, store):

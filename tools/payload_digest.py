@@ -12,8 +12,11 @@ bytes and a codec histogram. Two checkouts that print the same lines store
 the same bytes for this table at this chunk size, so a "same bytes" claim
 is one command run on both sides.
 
-Chunk size matters: the var and var_la race legs only enter at 4096 values
-per chunk, so a check of those legs needs ``--chunk-rows`` of at least that.
+The encode job runs the same exact race at every chunk size (no learned
+gate skips a leg), so these lines are what the job stores for the same
+chunks. Chunk size matters: the var and var_la race legs only enter at 4096
+values per chunk, so a check of those legs needs ``--chunk-rows`` of at
+least that.
 
 Usage: python tools/payload_digest.py <table.parquet> --keys a,b --chunk-rows N
        python tools/payload_digest.py transcripts:1:24000 --keys conv_id,turn_idx --chunk-rows 1500
